@@ -80,7 +80,7 @@ object Audit {
 
   /** Key-skew diagnosis — the report a pipeline operator reads BEFORE
     * choosing a partitioning for a join/agg on this key (the decision the
-    * salting operators — SaltedPipeline, the surprisal joins — then act
+    * salting operators — the surprisal joins, the salted BPE apply — then act
     * on). Per-key row counts are bucketed into power-of-two size classes:
     * class c holds keys with 2^(c-1) < rows ≤ 2^c (class 0 = singletons),
     * and each class reports its key count, row mass, share of the table,

@@ -78,26 +78,20 @@ import scala.util.{Failure, Success}
   * Without eviction every batch that ever completes keeps its
   * BatchProgress in the state store forever — unbounded growth on a
   * months-long job. On reaching a terminal status the key's timeout is
-  * re-purposed as a TTL tombstone (`terminalTtlMs`, default 2× the
-  * completion delay): while the tombstone lives, late records still route
-  * to invalid with the exact per-status message (clause 5); when it fires,
-  * `state.remove()`. A record arriving AFTER eviction takes the clause-2
-  * state-miss path: in production the BatchLookup returns the completed
-  * batch from the Management API, the state re-seeds terminal (re-arming
-  * the TTL), and the record still routes to invalid — reference semantics
+  * re-purposed as a TTL tombstone of 2× the completion delay: while the
+  * tombstone lives, late records still route to invalid with the exact
+  * per-status message (clause 5); when it fires, `state.remove()`. A
+  * record arriving AFTER eviction takes the clause-2 state-miss path: in
+  * production the BatchLookup returns the completed batch from the
+  * Management API, the state re-seeds terminal (re-arming the TTL), and
+  * the record still routes to invalid — reference semantics
   * (spec.rb:358-402) preserved with bounded state. In standalone mode (no
   * external lookup) a post-TTL late record degrades to the unknown-batch
   * message — still invalid, documented delta. The zero-record NoOp batch
-  * (clause 8) is evicted immediately at its timeout. Batches abandoned in
-  * `started` (never sendCompleted, no traffic) are bounded by the
-  * `startedTtlMs` knob: −1 (default) preserves reference semantics — a
-  * started batch waits forever for its sendCompleted; ≥0 arms an
-  * inactivity timer in `started` (re-armed on every arrival, so only a
-  * batch with NO traffic for the full TTL expires) that evicts the state
-  * row WITHOUT emitting any notification — the client vanished, and
-  * fabricating a `failed` would invent a lifecycle transition the
-  * reference never produces. A post-eviction record takes the clause-2
-  * state-miss path like any other unknown/evicted batch.
+  * (clause 8) is evicted immediately at its timeout. A batch abandoned in
+  * `started` (never sendCompleted) arms no timer and is held until its
+  * `sendCompleted` arrives — reference semantics: the reference job waits
+  * for that notification forever.
   *
   * Scale notes: state is O(1) per batch (a notification + counters) and
   * now O(active batches) overall, not O(all batches ever); the record path
@@ -111,22 +105,14 @@ class BatchTracker(
     validator: Validator,
     lookup: BatchLookup,
     tenantId: String,
-    completionDelayMs: Long,
-    terminalTtlMs: Long = -1L,
-    startedTtlMs: Long = -1L,
-    /** false = lifecycle-only mode for the salted two-level pipeline
-      * (SaltedPipeline): the state machine runs unchanged on record STUBS
-      * and emits notifications, but record outputs are suppressed — the
-      * salt stage already routed the payloads. */
-    emitRecordOutputs: Boolean = true)
+    completionDelayMs: Long)
     extends Serializable {
 
   import BatchStatus._
 
-  /** TTL for terminal-state tombstones; default 2× the completion delay so
-    * the clause-5 late-arrival window comfortably outlives the delay. */
-  private val ttlMs: Long =
-    if (terminalTtlMs >= 0) terminalTtlMs else 2 * completionDelayMs
+  /** TTL for terminal-state tombstones: 2× the completion delay, so the
+    * clause-5 late-arrival window comfortably outlives the delay. */
+  private val ttlMs: Long = 2 * completionDelayMs
 
   import BatchTracker._
 
@@ -175,10 +161,9 @@ class BatchTracker(
   private def armTimer(state: GroupState[BatchProgress]): Unit =
     if (state.exists) {
       state.get.status match {
-        case SendCompleted                     => state.setTimeoutDuration(completionDelayMs)
-        case Completed | Failed | Terminated   => state.setTimeoutDuration(ttlMs)
-        case Started if startedTtlMs >= 0      => state.setTimeoutDuration(startedTtlMs)
-        case _                                 => () // started, knob off: no timer
+        case SendCompleted                   => state.setTimeoutDuration(completionDelayMs)
+        case Completed | Failed | Terminated => state.setTimeoutDuration(ttlMs)
+        case _                               => () // started: no timer
       }
     }
 
@@ -206,9 +191,7 @@ class BatchTracker(
         }
       case Completed | Failed | Terminated =>
         state.remove() // TTL tombstone expired — eviction
-      case Started if startedTtlMs >= 0 =>
-        state.remove() // abandoned in `started`: evict, emit nothing
-      case _ => () // defensive: no timer is armed in `started` with the knob off
+      case _ => () // defensive: no timer is armed in `started`
     }
   }
 
@@ -253,15 +236,10 @@ class BatchTracker(
       batchId: String,
       state: GroupState[BatchProgress],
       out: ArrayBuffer[Output]): Unit = {
-    // In lifecycle-only mode (salted pipeline) the record outputs are
-    // suppressed — the salt stage already routed the payloads — but every
-    // state transition below runs identically.
-    def emitRecord(o: => Output): Unit = if (emitRecordOutputs) out += o
-
     if (!state.exists) {
       lookup.getBatchId(tenantId, batchId) match { // clause 2
         case Failure(_) =>
-          emitRecord(Output.invalid(r.asInvalid(UnknownBatchMessage)))
+          out += Output.invalid(r.asInvalid(UnknownBatchMessage))
           return
         case Success(n) =>
           state.update(BatchProgress(n, n.status, 0L, 0L, n.expectedRecordCount,
@@ -272,17 +250,17 @@ class BatchTracker(
     val p = state.get
     p.status match {
       case Completed =>
-        emitRecord(Output.invalid(r.asInvalid(CompletedBatchMessage))) // clause 5
+        out += Output.invalid(r.asInvalid(CompletedBatchMessage)) // clause 5
       case Terminated =>
-        emitRecord(Output.invalid(r.asInvalid(TerminatedBatchMessage))) // clause 4
+        out += Output.invalid(r.asInvalid(TerminatedBatchMessage)) // clause 4
       case Failed =>
-        emitRecord(Output.invalid(r.asInvalid(FailedBatchMessage)))
+        out += Output.invalid(r.asInvalid(FailedBatchMessage))
       case _ => // started or sendCompleted: clauses 3 and 7
         validator.isValid(r) match {
           case (true, _) =>
             val p1 = p.copy(validCount = p.validCount + 1)
             state.update(p1)
-            emitRecord(Output.valid(r))
+            out += Output.valid(r)
             if (p1.status == SendCompleted &&
                 p1.expectedRecordCount.exists(e => p1.validCount > e)) {
               emitFailed(p1, state, out) // clause 7 (record still forwarded)
@@ -290,7 +268,7 @@ class BatchTracker(
           case (false, msg) =>
             val p1 = p.copy(invalidCount = p.invalidCount + 1)
             state.update(p1)
-            emitRecord(Output.invalid(r.asInvalid(msg.getOrElse("Invalid record"))))
+            out += Output.invalid(r.asInvalid(msg.getOrElse("Invalid record")))
             if (p1.notification.invalidThreshold >= 0 &&
                 p1.invalidCount > p1.notification.invalidThreshold) {
               emitFailed(p1, state, out) // O9
@@ -314,8 +292,7 @@ class BatchTracker(
 }
 
 /** The reference's exact invalid-record wire messages
-  * (kafka_record_validator.rb) — shared by the single-level tracker and
-  * the salted router so the two pipelines can never drift apart. */
+  * (kafka_record_validator.rb). */
 object BatchTracker {
   val UnknownBatchMessage = "Bad Message - Unknown batchId"
   val CompletedBatchMessage = "Record received after batch completed"

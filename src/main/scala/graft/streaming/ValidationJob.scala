@@ -120,10 +120,6 @@ object ValidationJob {
       mgmt: Option[MgmtClient],
       checkpointLocation: String,
       maxOffsetsPerTrigger: Option[Long] = None,
-      /** >1 enables the salted two-level pipeline (hot-batch parallelism;
-        * see [[SaltedPipeline]] for the trade and the A/B probe protocol —
-        * measure with the deployment's real validator before enabling). */
-      salts: Int = 1,
       /** Invoked (on the listener thread) if THIS query dies with an
         * error — the reference's checkpoint-failure-is-fatal posture
         * (flink_job.rb:54-55). The monitor attached here is scoped to the
@@ -166,14 +162,8 @@ object ValidationJob {
 
     val events = recordEvents(source(topics.in))
       .union(notificationEvents(source(topics.notification)))
-    val outputs =
-      if (salts > 1)
-        SaltedPipeline.pipeline(events, validator, lookup, topics.tenant,
-          completionDelayMs, salts)
-      else {
-        val tracker = new BatchTracker(validator, lookup, topics.tenant, completionDelayMs)
-        pipeline(events, tracker)
-      }
+    val tracker = new BatchTracker(validator, lookup, topics.tenant, completionDelayMs)
+    val outputs = pipeline(events, tracker)
 
     // Epoch-id dedup (X1): Spark re-runs the last foreachBatch epoch after
     // a failure that struck between sink write and checkpoint commit. The

@@ -32,11 +32,17 @@ case class HriRecord(
   /** Invalid-record wrapping (reference kafka_record_validator.rb:106-111):
     * headers (incl. batchId) preserved, body replaced with a failure JSON. */
   def asInvalid(message: String): HriRecord = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = HriRecord.mapper.createObjectNode()
     root.put("failure", message)
-    copy(value = mapper.writeValueAsString(root).getBytes(UTF_8))
+    copy(value = HriRecord.mapper.writeValueAsString(root).getBytes(UTF_8))
   }
+}
+
+object HriRecord {
+  /** Shared, like [[NotificationJson]]'s: an ObjectMapper is thread-safe
+    * once configured, and building one per invalid record is the costly
+    * part of the wrap. */
+  private val mapper = new ObjectMapper()
 }
 
 /** Batch lifecycle states, JSON wire names (reference

@@ -42,19 +42,17 @@ class EvictionSpec extends AnyFunSuite {
       key.toString.getBytes(UTF_8), s"body-$key".getBytes(UTF_8), Topic, 0, key.toLong)
 
   /** Like StreamFixture.runPipeline but exposes the query (for progress
-    * metrics) and the tracker knobs (terminal TTL). */
+    * metrics). The terminal TTL is the tracker's 2× completionDelayMs. */
   def runQuery(
       completionDelayMs: Long,
-      terminalTtlMs: Long,
-      lookup: BatchLookup = new MapBatchLookup(Seq.empty),
-      startedTtlMs: Long = -1L)(
+      lookup: BatchLookup = new MapBatchLookup(Seq.empty))(
       script: (MemoryStream[PipelineEvent], () => Seq[Output], StreamingQuery) => Unit): Unit = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[PipelineEvent]
     val tracker = new BatchTracker(PassthroughValidator, lookup, "porcupine",
-      completionDelayMs, terminalTtlMs, startedTtlMs)
+      completionDelayMs)
     val outputs = ValidationJob.pipeline(input.toDS(), tracker)
     val collected = new ConcurrentLinkedQueue[Output]()
     val query = outputs.writeStream
@@ -77,7 +75,7 @@ class EvictionSpec extends AnyFunSuite {
     // 25 ms-interval trigger can take 500+ ms, so 300 ms raced and flaked
     // (the undercount timer fired before the straggler was processed). 3 s
     // keeps the scenario identical and removes the scheduling race.
-    runQuery(completionDelayMs = 3000L, terminalTtlMs = 60000L) { (input, results, _) =>
+    runQuery(completionDelayMs = 3000L) { (input, results, _) =>
       val b = "rearm-batch"
       input.addData(
         PipelineEvent.of(notif(b, Started), 0),
@@ -95,7 +93,7 @@ class EvictionSpec extends AnyFunSuite {
   }
 
   test("state store returns to zero after batches complete and TTLs fire") {
-    runQuery(completionDelayMs = 100L, terminalTtlMs = 100L) { (input, results, q) =>
+    runQuery(completionDelayMs = 100L) { (input, results, q) =>
       val batches = (1 to 5).map(i => s"ttl-batch-$i")
       val evs = batches.zipWithIndex.flatMap { case (b, i) =>
         Seq(PipelineEvent.of(notif(b, Started), 10L * i),
@@ -119,7 +117,7 @@ class EvictionSpec extends AnyFunSuite {
   test("late record after streaming eviction re-seeds from lookup and stays invalid") {
     val b = "evict-late-batch"
     val lookupKnowsCompleted = new MapBatchLookup(Seq(notif(b, Completed, Some(1))))
-    runQuery(completionDelayMs = 100L, terminalTtlMs = 100L,
+    runQuery(completionDelayMs = 100L,
         lookup = lookupKnowsCompleted) { (input, results, q) =>
       input.addData(
         PipelineEvent.of(notif(b, Started), 0),
@@ -141,34 +139,14 @@ class EvictionSpec extends AnyFunSuite {
     }
   }
 
-  test("startedTtl: a batch abandoned in `started` is evicted without emitting anything") {
-    // VERDICT r3 missing #3: a client that sends `started` and disappears
-    // used to leak one state row forever. With the knob on, the inactivity
-    // TTL evicts it silently (no fabricated lifecycle notification).
-    runQuery(completionDelayMs = 60000L, terminalTtlMs = 60000L,
-        startedTtlMs = 150L) { (input, results, q) =>
-      input.addData(
-        PipelineEvent.of(notif("abandoned-1", Started), 0),
-        PipelineEvent.of(notif("abandoned-2", Started), 1))
-      // wait until the state rows appear, then until the TTL evicts them
-      val deadline = System.currentTimeMillis() + 30000
-      while (stateRows(q) != 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(stateRows(q) == 2, "precondition: both started batches in state")
-      while (stateRows(q) != 0 && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(stateRows(q) == 0, s"abandoned-started batches not evicted: ${stateRows(q)} rows")
-      assert(results().isEmpty,
-        s"eviction of an abandoned batch must emit nothing: ${results()}")
-    }
-  }
-
-  test("startedTtl default-off preserves reference semantics: started batches wait forever") {
-    runQuery(completionDelayMs = 100L, terminalTtlMs = 100L) { (input, results, q) =>
+  test("reference semantics: a batch abandoned in `started` waits forever for its sendCompleted") {
+    runQuery(completionDelayMs = 100L) { (input, results, q) =>
       input.addData(PipelineEvent.of(notif("patient-batch", Started), 0))
       val deadline = System.currentTimeMillis() + 30000
       while (stateRows(q) != 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(stateRows(q) == 1, "precondition: started batch in state")
-      Thread.sleep(1000) // 10× both TTLs — the knob off means no timer at all
-      assert(stateRows(q) == 1, "default-off must keep the started batch")
+      Thread.sleep(1000) // 5× the terminal TTL — `started` arms no timer at all
+      assert(stateRows(q) == 1, "a started batch must stay in state")
       // and the batch is still live: records + sendCompleted finish it normally
       input.addData(
         PipelineEvent.of(rec(1, "patient-batch"), 1),

@@ -43,7 +43,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     try {
       val input = MemoryStream[PipelineEvent]
       val tracker = new BatchTracker(PassthroughValidator, new MapBatchLookup(Seq.empty),
-        "porcupine", 100L, terminalTtlMs = 100L)
+        "porcupine", 100L)
       val outputs = ValidationJob.pipeline(input.toDS(), tracker)
       val collected = new ConcurrentLinkedQueue[Output]()
       val query = outputs.writeStream
