@@ -173,6 +173,33 @@ object Bench {
   private def cfg(name: String, default: String): String =
     sys.props.get(name).orElse(sys.env.get(name)).getOrElse(default)
 
+  // toRdd.count() materializes every output column; a plain count()
+  // would let Catalyst prune projection-only queries to no-ops.
+  private def time(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { body; true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] FAILED: ${e.getMessage}"); false
+      }
+    if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+  }
+
+  /** Fixed-work calibration probe, timed at the head of every pass: a
+    * constant CPU+shuffle kernel (20M-row modular groupBy, no data
+    * dependence on sfDir) whose runtime moves only with box load. The
+    * last three rounds each spent judge time adjudicating co-tenant
+    * noise (VERDICT r6 task 3); with calibration_s in the artifact a
+    * noisy window is detectable from the JSON alone — divide a
+    * suspicious per-query delta by the calibration ratio first.
+    * graft.tools.Profile prints the same kernel as its load context. */
+  def calibrate(spark: SparkSession): Double = time {
+    spark.range(20000000L)
+      .selectExpr("id % 997 AS k", "id AS v")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
+      .queryExecution.toRdd.count()
+  }
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
@@ -196,18 +223,6 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).queryExecution.toRdd.count()
 
-    // toRdd.count() materializes every output column; a plain count()
-    // would let Catalyst prune projection-only queries to no-ops.
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { body; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] FAILED: ${e.getMessage}"); false
-        }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-
     // Dependent entries consume vars assigned inside EARLIER timed blocks
     // (the pipeline-sharing design); if the upstream entry failed its var
     // stays null and the dependent would die with an NPE whose message
@@ -226,20 +241,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] shared build FAILED: ${e.getMessage}"); null
       }
-
-    // Fixed-work calibration probe, timed at the head of every pass: a
-    // constant CPU+shuffle kernel (20M-row modular groupBy, no data
-    // dependence on sfDir) whose runtime moves only with box load. The
-    // last three rounds each spent judge time adjudicating co-tenant
-    // noise (VERDICT r6 task 3); with calibration_s in the artifact a
-    // noisy window is detectable from the JSON alone — divide a
-    // suspicious per-query delta by the calibration ratio first.
-    def calibrate(): Double = time {
-      spark.range(20000000L)
-        .selectExpr("id % 997 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .queryExecution.toRdd.count()
-    }
 
     def runPass(sfDir: String): Seq[(String, Double)] = {
       // The shingle pipeline runs first so the shared table stays cached
@@ -597,8 +598,8 @@ object Bench {
 
     // sf1 tier config (r11 VERDICT task 6): whole-catalogue passes at the
     // 10x tier, auto-detected at target/testdata/sf1 (generated via
-    // `runMain graft.tools.ScaleProbe <sf0.1> target/testdata/sf1 10
-    // --generate-only`; not in git — skipped cleanly when absent).
+    // `runMain graft.tools.Profile generate <sf0.1> target/testdata/sf1
+    // 10`; not in git — skipped cleanly when absent).
     // DEFAULT 1 FULL PASS since r16 (VERDICT r15 task 1d): the second
     // all-inclusive sf1 pass — ~402 s of declared quadratics included —
     // is what blew the r15 harness budget, and for entries with a stable
@@ -747,7 +748,7 @@ object Bench {
     var p = 1
     def runSf01Pass(label: String): Unit = {
       System.err.println(s"[bench] $label pass $p/$runs")
-      val c = calibrate()
+      val c = calibrate(spark)
       calibrations += c
       System.err.println(f"[bench] calibration $c%.3f s")
       val t0 = System.nanoTime()
@@ -785,7 +786,7 @@ object Bench {
           q = sf1Runs + 1
         } else {
           System.err.println(s"[bench] sf1 addendum pass $q/$sf1Runs at $sf1Dir")
-          val c = calibrate()
+          val c = calibrate(spark)
           sf1Cals += c
           System.err.println(f"[bench] sf1 calibration $c%.3f s")
           val t0 = System.nanoTime()
@@ -910,7 +911,7 @@ object Bench {
       val flagged = sf1Flagged(
         minOver(sf1Full.toSeq, sf1SecondPass), priorSf1Q, curCal, priorCal)
       if (flagged.nonEmpty) {
-        sf1ProbeCal = calibrate()
+        sf1ProbeCal = calibrate(spark)
         System.err.println(
           f"[bench] sf1 probes: ${flagged.size} flags, probe window $sf1ProbeCal%.3f s")
         flagged.foreach { case (name, cur) =>

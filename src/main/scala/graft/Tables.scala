@@ -20,7 +20,7 @@ object Tables {
     *
     *  - nanos: Spark 4 rejects TIMESTAMP(NANOS) at analysis time, so the
     *    session must set `spark.sql.legacy.parquet.nanosAsLong=true`
-    *    (Bench/Verify/PlanDump and the test fixture all do), the column
+    *    (Bench/Verify/Profile and the test fixture all do), the column
     *    arrives as a raw long, and we truncate to microseconds with
     *    INTEGER division (`div` — a double division would lose precision
     *    above 2^53 ns and drift vs the oracle).

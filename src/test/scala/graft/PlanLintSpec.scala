@@ -168,6 +168,11 @@ class PlanLintSpec extends AnyFunSuite {
     try buildAll() finally graft.operators.Ckpt.lintBypass = false
   }
 
+  /** The first 25 lines of an offending subtree, indented under its
+    * failure line, so a red lint names the shape without a rerun. */
+  def excerpt(p: SparkPlan): String =
+    p.treeString.linesIterator.take(25).map(l => "    " + l.take(200)).mkString("\n", "\n", "")
+
   def shapeLint(view: String,
       plans: Seq[(String, Either[String, SparkPlan])]): Seq[String] = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -176,8 +181,8 @@ class PlanLintSpec extends AnyFunSuite {
         failures += s"$name [$view]: query construction failed: $err"
       case (name, Right(plan)) =>
         nodes(plan).foreach {
-          case _: CartesianProductExec =>
-            failures += s"$name [$view]: CartesianProductExec in plan"
+          case c: CartesianProductExec =>
+            failures += s"$name [$view]: CartesianProductExec in plan" + excerpt(c)
           case j: BroadcastNestedLoopJoinExec =>
             val build = j.buildSide match {
               case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
@@ -185,10 +190,11 @@ class PlanLintSpec extends AnyFunSuite {
             }
             if (!bounded(build) && !nljAllowlist.contains(name))
               failures += s"$name [$view]: BroadcastNestedLoopJoin with unbounded " +
-                s"build side (build top: ${build.nodeName})"
+                s"build side (build top: ${build.nodeName})" + excerpt(build)
           case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
             if (!bounded(e.child) && !singlePartitionAllowlist.contains(name))
-              failures += s"$name [$view]: Exchange SinglePartition over unbounded child"
+              failures += s"$name [$view]: Exchange SinglePartition over unbounded child" +
+                excerpt(e)
           case _ => ()
         }
     }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -10,11 +12,10 @@ import scala.jdk.CollectionConverters._
   * cheap, and it catches the mistake at the call site instead of three
   * rounds later as an unexplained blind spot.
   *
-  * Scope: every `.scala` file under `graft/operators`, recursively, except
-  * `Ckpt.scala` itself. `graft/Bench.scala` and `graft/tools` are out of
-  * scope: they are measurement drivers, not operator library code, and
-  * Bench's inline pipeline rebuilds are slated to fold into the registered
-  * entries (ROADMAP direction 3). */
+  * Scope: every `.scala` file under `graft/operators` and `graft/tools`,
+  * recursively, except `Ckpt.scala` itself. `graft/Bench.scala` is out of
+  * scope: its inline pipeline rebuilds are slated to fold into the
+  * registered entries (ROADMAP direction 3). */
 class CheckpointRegistrySpec extends AnyFunSuite {
 
   /** A call with or without parens: `.localCheckpoint()`, `.localCheckpoint`,
@@ -28,26 +29,81 @@ class CheckpointRegistrySpec extends AnyFunSuite {
     t.startsWith("//") || t.startsWith("*")
   }
 
-  test("no raw localCheckpoint outside the Ckpt registry in graft/operators") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
-    val walk = java.nio.file.Files.walk(dir)
-    val files =
-      try walk.iterator.asScala.toList
-      finally walk.close()
+  private val src = Paths.get("src/main/scala/graft")
+
+  private def scalaFiles(dir: Path): List[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator.asScala.filter(_.getFileName.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("no raw localCheckpoint outside the Ckpt registry in graft/operators and graft/tools") {
+    val files = Seq("operators", "tools").flatMap(d => scalaFiles(src.resolve(d)))
     val offenders = files
-      .filter(_.getFileName.toString.endsWith(".scala"))
       .filterNot(_.getFileName.toString == "Ckpt.scala")
       .flatMap { p =>
-        java.nio.file.Files.readString(p).linesIterator.zipWithIndex.collect {
+        Files.readString(p).linesIterator.zipWithIndex.collect {
           case (line, i) if !isComment(line) && rawCall.findFirstIn(line).isDefined =>
-            s"${dir.relativize(p)}:${i + 1}: $line"
+            s"${src.relativize(p)}:${i + 1}: $line"
         }
       }
     assert(files.exists(_.getFileName.toString == "Dedup.scala"),
-      s"walk found no operator sources under $dir")
+      s"walk found no operator sources under $src/operators")
+    assert(files.exists(_.getFileName.toString == "Profile.scala"),
+      s"walk found no tool sources under $src/tools")
     assert(offenders.isEmpty,
       "raw .localCheckpoint outside Ckpt — declare the site via " +
         "Ckpt.local/Ckpt.state with a SizeClass (and record the 100 TB " +
         "story in docs/CHECKPOINTS.md):\n" + offenders.mkString("\n"))
+  }
+
+  /** The last top-level argument of the call whose `(` sits at `open`,
+    * skipping nested brackets and string literals. */
+  private def lastArg(text: String, open: Int): String = {
+    var depth = 0
+    var i = open
+    var argStart = open + 1
+    var inString = false
+    while (i < text.length && !(depth == 1 && text(i) == ')' && !inString)) {
+      val c = text(i)
+      if (inString) { if (c == '"' && text(i - 1) != '\\') inString = false }
+      else c match {
+        case '"' => inString = true
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case ',' if depth == 1 => argStart = i + 1
+        case _ => ()
+      }
+      i += 1
+    }
+    text.substring(argStart, i).trim
+  }
+
+  test("every SizeClass has a docs/CHECKPOINTS.md section and every site names one") {
+    val classes = """case object (\w+) extends SizeClass""".r
+      .findAllMatchIn(Files.readString(src.resolve("operators/Ckpt.scala"))).map(_.group(1)).toSet
+    assert(classes.size >= 4, s"parsed too few SizeClass objects from Ckpt.scala: $classes")
+
+    val headings = Files.readString(Paths.get("docs/CHECKPOINTS.md")).linesIterator
+      .collect { case h if h.startsWith("## ") => h.drop(3).takeWhile(c => c != ' ' && c != '(') }
+      .toSet
+    val undocumented = classes -- headings
+    assert(undocumented.isEmpty, s"SizeClass without a `## <Name>` section in docs/CHECKPOINTS.md: $undocumented")
+    val stale = headings.filter(_.endsWith("Sized")) -- classes
+    assert(stale.isEmpty, s"docs/CHECKPOINTS.md sections naming no Ckpt.SizeClass: $stale")
+
+    val site = """Ckpt\.(local|state)\(""".r
+    val sites = scalaFiles(src.resolve("operators"))
+      .filterNot(_.getFileName.toString == "Ckpt.scala")
+      .flatMap { p =>
+        val text = Files.readString(p)
+        site.findAllMatchIn(text).map { m =>
+          (s"${src.relativize(p)}:${text.take(m.start).count(_ == '\n') + 1}", lastArg(text, m.end - 1))
+        }
+      }
+    assert(sites.size >= 10, s"found too few Ckpt.local/Ckpt.state sites: ${sites.size}")
+    val unnamed = sites.filterNot { case (_, arg) => classes(arg.stripPrefix("Ckpt.")) }
+    assert(unnamed.isEmpty, "Ckpt sites whose size argument is not a SizeClass by name:\n" +
+      unnamed.map { case (at, arg) => s"$at: $arg" }.mkString("\n"))
   }
 }
