@@ -37,9 +37,13 @@ class CheckpointRegistrySpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  test("no raw localCheckpoint outside the Ckpt registry in graft/operators and graft/tools") {
-    val files = Seq("operators", "tools").flatMap(d => scalaFiles(src.resolve(d)))
-    val offenders = files
+  /** Every code line under `graft/<dir>` that calls `.localCheckpoint`,
+    * skipping `Ckpt.scala`; asserts the walk found `witness`. */
+  private def rawSites(dir: String, witness: String): Seq[String] = {
+    val files = scalaFiles(src.resolve(dir))
+    assert(files.exists(_.getFileName.toString == witness),
+      s"walk found no $witness under $src/$dir")
+    files
       .filterNot(_.getFileName.toString == "Ckpt.scala")
       .flatMap { p =>
         Files.readString(p).linesIterator.zipWithIndex.collect {
@@ -47,14 +51,20 @@ class CheckpointRegistrySpec extends AnyFunSuite {
             s"${src.relativize(p)}:${i + 1}: $line"
         }
       }
-    assert(files.exists(_.getFileName.toString == "Dedup.scala"),
-      s"walk found no operator sources under $src/operators")
-    assert(files.exists(_.getFileName.toString == "Profile.scala"),
-      s"walk found no tool sources under $src/tools")
+  }
+
+  private def assertNoRawSites(offenders: Seq[String]): Unit =
     assert(offenders.isEmpty,
       "raw .localCheckpoint outside Ckpt — declare the site via " +
         "Ckpt.local/Ckpt.state with a SizeClass (and record the 100 TB " +
         "story in docs/CHECKPOINTS.md):\n" + offenders.mkString("\n"))
+
+  test("no raw localCheckpoint outside the Ckpt registry in graft/operators") {
+    assertNoRawSites(rawSites("operators", "Dedup.scala"))
+  }
+
+  test("no raw localCheckpoint outside the Ckpt registry in graft/tools") {
+    assertNoRawSites(rawSites("tools", "Profile.scala"))
   }
 
   /** The last top-level argument of the call whose `(` sits at `open`,
