@@ -54,9 +54,9 @@ object SparkEntry {
     "q27_asof_join"       -> (R.qAsofJoin _),
     "pit_join"            -> (R.qPitJoin _), // SCD2 point-in-time dimension lookup (DuckDB ASOF oracle)
     "ingest_anomaly"      -> (R.qIngestAnomaly _), // trailing-week z-score monitor over daily counts
-    "funnel_latency"      -> (R.qFunnelLatency _), // exact median step-to-step time via grouped two-pass
+    "funnel_latency"      -> (R.qFunnelLatency _), // exact median step-to-step time via the grouped quantile refinement
     "q28_percentiles"     -> (R.q28Percentiles _),
-    "q28_percentiles_scale" -> (R.q28PercentilesScale _), // bounded two-pass == single-agg (shared oracle)
+    "q28_percentiles_scale" -> (R.q28PercentilesScale _), // bounded refinement == single-agg (shared oracle)
     "q55_sessionize"      -> (R.q55Sessionize _), // labeled sessions + cross-session features
     "q29_grouping_sets"   -> (R.q29GroupingSets _),
     "q30_pivot"           -> (R.q30Pivot _),
@@ -337,7 +337,7 @@ object SparkEntry {
   private val VerifySf = "/root/testdata/sf0.01"
 
   /** Shared oracle for q28_percentiles (single exact-percentile agg) and
-    * q28_percentiles_scale (bounded two-pass refinement). */
+    * q28_percentiles_scale (bounded quantile refinement). */
   private val Q28PercentilesSql =
     """SELECT event_type,
       |  round(quantile_cont("value", 0.5), 6) AS p50,
@@ -1366,7 +1366,7 @@ object SparkEntry {
          |FROM sess""".stripMargin,
 
     // q28_percentiles_scale: same oracle as q28 — the Spark side runs the
-    // bounded two-pass refinement, so the hash match IS the equivalence
+    // bounded quantile refinement, so the hash match IS the equivalence
     // proof (the bm25_incremental / rollup_incremental precedent).
     "q28_percentiles_scale" -> Q28PercentilesSql,
 

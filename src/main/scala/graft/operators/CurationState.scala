@@ -92,6 +92,13 @@ object CurationState {
       .agg(round(avg(col("s")), 6).as("avg_surprisal"))
   }
 
+  /** The doc-grain LM scores as the quantile refinement's `x`,
+    * materialized once: each of its three round trips reads them, and
+    * recomputing the tokenize + three salted joins per round trip would
+    * triple the bundle's most expensive frame. */
+  private def scoresOnce(scores: DataFrame): DataFrame =
+    Ckpt.local(scores.select(col("avg_surprisal").as("x")), Ckpt.CorpusSized)
+
   /** Compute the full state bundle in memory from the state corpus — the
     * direct form (tests pin merged partials == this, and [[write]] persists
     * exactly these frames). One tokenize explode feeds every statistic. */
@@ -101,7 +108,7 @@ object CurationState {
     val c2 = bigramsOf(toks).groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val stats = toks.agg(count(lit(1)).as("t"), countDistinct(col("w")).as("v"))
     val bounds = Relational.equidepthBoundsArray(
-      lmScores(bigramsOf(toks), c1, c2, stats).select(col("avg_surprisal").as("x")), 3)
+      scoresOnce(lmScores(bigramsOf(toks), c1, c2, stats)), 3)
     CurationState(
       fp = contentFp(state).select("fp").distinct(),
       c1 = c1, c2 = c2, stats = stats, bounds = bounds,
@@ -179,7 +186,7 @@ object CurationState {
     // t/v from the merged table: a doc split never changes the merged sums
     val stats = c1.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
     val bounds = Relational.equidepthBoundsArray(
-      lmScores(part("bg"), c1, c2, stats).select(col("avg_surprisal").as("x")), 3)
+      scoresOnce(lmScores(part("bg"), c1, c2, stats)), 3)
     write(CurationState(
       fp = part("fp").distinct(),
       c1 = c1, c2 = c2, stats = stats, bounds = bounds,

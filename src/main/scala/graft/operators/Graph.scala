@@ -1,8 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.serializer.KryoSerializer
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over relationship tables — the iterative-algorithm
   * family (Pregel-style message passing expressed as join + aggregate
@@ -10,23 +17,29 @@ import org.apache.spark.sql.functions._
   * in [[Dedup.qDedupClusters]].
   *
   * Scale design (the part that has to survive 1000 executors / 100 TB of
-  * edges): each PageRank iteration is exactly ONE shuffle of the
-  * node-grain rank frame into the edge partitioning plus ONE map-side-
-  * combinable aggregation of contributions. The edge list — the only
-  * data-sized frame — is hash-partitioned by `src` ONCE and persisted, so
-  * every iteration's `edges ⋈ ranks` reuses that layout and only the small
-  * node-grain side moves. Nothing doc/edge-sized ever crosses the network
-  * more than once per iteration, and the per-iteration lineage is cut by
-  * the persisted edge table (3 rounds here; a deep-iteration caller would
-  * checkpoint every ~10 rounds).
+  * edges): the rounds run on RDDs that share ONE `HashPartitioner`. The
+  * symmetric edge list — the only data-sized input — is grouped by `src`
+  * into adjacency arrays once (one shuffle) and persisted; each node's
+  * degree rides along with its adjacency. Each round is then a narrow
+  * `links ⋈ ranks` (co-partitioned, one record per node on each side) and
+  * exactly ONE shuffle: the map-side-combined sum of node-grain
+  * contributions, whose output already sits in the partitioning the next
+  * round joins on. Nothing edge-sized crosses the network after setup,
+  * and the whole fixpoint runs as one Spark job (GraphSpec pins the
+  * lineage's shuffle count: setup + one per round). The DataFrame form of
+  * the same rounds ran 17–19 jobs under AQE: a job per query stage,
+  * broadcasts, and two cache builds. Memory: the join holds one node's
+  * adjacency at a time and spills across nodes, so the bound is the
+  * largest degree, not the graph. The persisted adjacency RDD is released
+  * by Spark's ContextCleaner once the returned frame is unreachable.
   *
   * Determinism (the part that makes an iterative float algorithm
   * oracle-checkable): ranks are integer micro-units ([[PrScale]] = 1e12),
-  * every division is integral (`div` in Spark, `//` in DuckDB — identical
+  * every division is integral (long `/` here, `//` in DuckDB — identical
   * on non-negative operands), and sums run over longs, so the fixpoint
   * arithmetic is bit-exact and order-invariant across engines — no float
   * accumulation whose reduction order could differ. The damping update is
-  * `(15·r0) div 100 + (85·inflow) div 100` applied in the SAME operation
+  * `(15·r0) / 100 + (85·inflow) / 100` applied in the SAME operation
   * order on both sides.
   */
 object Graph {
@@ -57,36 +70,60 @@ object Graph {
     * `(src, dst)`; emits `(node, pr)` with pr in [[PrScale]] micro-units.
     * The only driver-side value is the scalar node count N (one number,
     * the [[Layout]]-min/max precedent) — needed because the per-node base
-    * mass (1−d)/N is a constant of the recurrence, not data. */
+    * mass (1−d)/N is a constant of the recurrence, not data.
+    *
+    * Null endpoints keep SQL join semantics: a null node counts toward N
+    * (it is a group of the degree count) and its edges count toward the
+    * other endpoint's degree, but it never sends or receives rank. */
   def pageRank(undirected: DataFrame, iters: Int): DataFrame = {
     val s = undirected.sparkSession
-    val sym = undirected.select(col("src"), col("dst"))
-    // symmetrize, then fix the edge partitioning every iteration reuses
-    val edges = sym
-      .union(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .select(col("src").as("node"), col("outdeg"))
-      .persist()
-    val n = deg.count() // bounded driver scalar: node count
+    val part = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    // boxed keys (a null endpoint stays a key, as in the SQL form) would
+    // make both shuffles fall back to Java serialization: name Kryo
+    val kryo = new KryoSerializer(s.sparkContext.getConf)
+    val sym: RDD[(Node, Node)] =
+      undirected.select(col("src").cast("long"), col("dst").cast("long"))
+        .queryExecution.toRdd
+        .flatMap { r =>
+          val a: Node = if (r.isNullAt(0)) null else r.getLong(0)
+          val b: Node = if (r.isNullAt(1)) null else r.getLong(1)
+          Iterator(a -> b, b -> a)
+        }
+    // (node, (non-null neighbours, degree)): the symmetric edge list
+    // grouped by src ONCE, in the partitioning every round reuses
+    val links = sym.combineByKeyWithClassTag[(mutable.ArrayBuilder.ofLong, Long)](
+        (d: Node) => (adj(new mutable.ArrayBuilder.ofLong, d), 1L),
+        (c: (mutable.ArrayBuilder.ofLong, Long), d: Node) => (adj(c._1, d), c._2 + 1),
+        (x: (mutable.ArrayBuilder.ofLong, Long), y: (mutable.ArrayBuilder.ofLong, Long)) =>
+          (x._1 ++= y._1.result(), x._2 + y._2),
+        part, mapSideCombine = false, serializer = kryo)
+      .mapValues { case (ns, deg) => (ns.result(), deg) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = links.count() // bounded driver scalar: node count (a null node included)
     require(n > 0, "pageRank: empty edge list")
     val r0 = PrScale / n
     val base = (15L * r0) / 100L
-    var ranks = deg.select(col("node"), col("outdeg"), lit(r0).as("pr"))
+    // (node, pr); every step keeps `part`, so each round's join is narrow
+    var ranks: RDD[(Node, Long)] = links.filter(_._1 != null).mapValues(_ => r0)
     for (_ <- 1 to iters) {
-      val inflow = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .select(col("dst"), expr("pr div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      // re-alias deg's columns: ranks descends from deg, so joining deg
-      // again without fresh attribute ids is an ambiguous self-join
-      ranks = inflow
-        .join(deg.select(col("node").as("dnode"), col("outdeg").as("doutdeg")),
-          col("dst") === col("dnode"))
-        .select(col("dnode").as("node"), col("doutdeg").as("outdeg"),
-          (lit(base) + expr("(85 * inflow) div 100")).as("pr"))
+      ranks = links.join(ranks, part)
+        .flatMap { case (_, ((ns, deg), pr)) =>
+          val c = pr / deg
+          ns.iterator.map(d => (Long.box(d), c))
+        }
+        .combineByKeyWithClassTag[Long]((c: Long) => c, (a: Long, c: Long) => a + c,
+          (a: Long, b: Long) => a + b, part, mapSideCombine = true, serializer = kryo)
+        .mapValues(in => base + (85L * in) / 100L)
     }
-    ranks.select(col("node"), col("pr"))
+    val out = s.createDataFrame(ranks.map { case (k, pr) => Row(k.longValue, pr) },
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("pr", LongType, nullable = false))))
+    out.select(col("node").cast(undirected.schema("src").dataType).as("node"), col("pr"))
   }
+
+  /** A node key: boxed, so a null endpoint is a key as in SQL grouping. */
+  private type Node = java.lang.Long
+
+  private def adj(ns: mutable.ArrayBuilder.ofLong, d: Node): mutable.ArrayBuilder.ofLong =
+    if (d == null) ns else ns += d
 }

@@ -132,7 +132,7 @@ object Layout {
 
   /** Equi-depth-bucketed rewrite: hive-partition `df` into `nBuckets`
     * directories cut at the EXACT interpolated quantile boundaries of
-    * `valueCol` ([[Relational.equidepthBounds]], the bounded two-pass
+    * `valueCol` ([[Relational.equidepthBounds]], the bounded quantile
     * refinement) — the layout that turns the optimizer-statistics
     * operator into what optimizer statistics are FOR. Unlike fixed-width
     * cuts, every bucket holds the same row count, so no directory is a
@@ -141,26 +141,22 @@ object Layout {
     * written alongside as `_bounds` (underscore-prefixed, so data reads
     * ignore it) for [[readValueRange]] to rewrite predicates with.
     *
-    * Scale shape: boundary discovery is the bounded two-pass; the rewrite
-    * is one broadcast of the 9-double array + one partitioned write —
-    * the same job shape as [[writeZOrdered]], no driver data path. */
+    * Scale shape: boundary discovery is the bounded refinement (run once;
+    * its nBuckets−1 doubles serve both the rewrite and `_bounds`); the
+    * rewrite compares against those literals and does one partitioned
+    * write — the same job shape as [[writeZOrdered]], no driver data path. */
   def writeEquidepthBucketed(df: DataFrame, valueCol: String, path: String,
       nBuckets: Int = 10): Unit = {
     val bucketCol = s"${valueCol}_bucket"
-    val bounds = Relational.equidepthBoundsArray(
+    val bounds = Relational.equidepthBounds(
       df.select(col(valueCol).cast("double").as("x")), nBuckets)
-    val bucket = (1 until nBuckets)
-      .map(i => when(col(valueCol).cast("double") >= element_at(col("bs"), i), 1)
-        .otherwise(0))
-      .reduce(_ + _)
-    df.crossJoin(broadcast(bounds))
-      .withColumn(bucketCol, bucket.cast("int"))
-      .drop("bs")
+    val bs = bounds.collect().sortBy(_.getInt(0)).map(_.getDouble(1)) // local frame: no job
+    val bucket = bs.map(b => when(col(valueCol).cast("double") >= lit(b), 1).otherwise(0))
+      .foldLeft(lit(0))(_ + _)
+    df.withColumn(bucketCol, bucket.cast("int"))
       .repartition(col(bucketCol)) // one shuffle → one writer task per bucket
       .write.partitionBy(bucketCol).mode("overwrite").parquet(path)
-    Relational.equidepthBounds(
-      df.select(col(valueCol).cast("double").as("x")), nBuckets)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_bounds")
+    bounds.coalesce(1).write.mode("overwrite").parquet(s"$path/_bounds")
   }
 
   /** Read a [[writeEquidepthBucketed]] layout under a value-range

@@ -288,11 +288,11 @@ object ValidationJob {
     *    the unfinished ones (zero duplicates per topic as long as each
     *    step's own write completed — proven by RecoverySpec).
     *
-    * Every write is temp-file + rename so a crash mid-commit leaves the
-    * previous value; `commit` removes the epoch's step dir afterwards (the
-    * markers are subsumed by `latest`, and epoch ids never repeat within
-    * one checkpoint lineage, so stale markers can never mask a future
-    * epoch's steps). */
+    * `latest` is written temp-file + rename and each step marker is one
+    * `mkdirs`, so a crash mid-write leaves the previous value; `commit`
+    * removes the epoch's step dir afterwards (the markers are subsumed by
+    * `latest`, and epoch ids never repeat within one checkpoint lineage,
+    * so stale markers can never mask a future epoch's steps). */
   private[streaming] object EpochCommitLog {
     import org.apache.hadoop.fs.Path
 
@@ -324,12 +324,12 @@ object ValidationJob {
       marker.getFileSystem(spark.sessionState.newHadoopConf()).exists(marker)
     }
 
+    /** The marker is a directory: `mkdirs` is atomic on its own, so it
+      * needs no temp file and rename (on the local FS each created file
+      * also costs `chmod` forks for the file and its `.crc`). */
     def markStep(spark: SparkSession, dir: String, epochId: Long, step: String): Unit = {
-      val stepsDir = new Path(dir, s"steps-$epochId")
-      val fs = stepsDir.getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new Path(stepsDir, s"$step.tmp")
-      fs.create(tmp, true).close() // existence is the signal
-      fs.rename(tmp, new Path(stepsDir, step))
+      val marker = new Path(dir, s"steps-$epochId/$step")
+      marker.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(marker)
     }
   }
 

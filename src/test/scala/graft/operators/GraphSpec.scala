@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,6 +62,70 @@ class GraphSpec extends AnyFunSuite {
     (2L to 9L).foreach(k => assert(hub > got(k), s"hub must outrank leaf $k"))
     // leaves are symmetric, so their ranks must be identical
     assert((2L to 9L).map(got).distinct.length == 1)
+  }
+
+  /** The DataFrame form of the same rounds (the pre-RDD implementation),
+    * kept as the differential reference for [[Graph.pageRank]]. */
+  private def pageRankFrames(undirected: DataFrame, iters: Int): DataFrame = {
+    val sym = undirected.select(col("src"), col("dst"))
+    val edges = sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      .select(col("src").as("node"), col("outdeg"))
+    val n = deg.count()
+    val r0 = Graph.PrScale / n
+    val base = (15L * r0) / 100L
+    var ranks = deg.select(col("node"), col("outdeg"), lit(r0).as("pr"))
+    for (_ <- 1 to iters) {
+      val inflow = edges.join(ranks, edges("src") === ranks("node"))
+        .select(col("dst"), expr("pr div outdeg").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
+      ranks = inflow
+        .join(deg.select(col("node").as("dnode"), col("outdeg").as("doutdeg")),
+          col("dst") === col("dnode"))
+        .select(col("dnode").as("node"), col("doutdeg").as("outdeg"),
+          (lit(base) + expr("(85 * inflow) div 100")).as("pr"))
+    }
+    ranks.select(col("node"), col("pr"))
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("pagerank rounds equal the DataFrame form row for row, null endpoints included") {
+    import spark.implicits._
+    val ol = graft.Tables.orders(spark, d)
+      .join(graft.Tables.lineitem(spark, d), col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+    val got = Graph.qPageRank(spark, d)
+    val want = pageRankFrames(ol, Graph.PrIters)
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    assert(rows(got) == rows(want))
+    // a null endpoint counts toward N and toward its neighbour's degree,
+    // but never sends or receives rank (SQL join semantics)
+    val withNulls = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (3L, null), (null, 4L), (4L, 1L), (5L, 1L)).toDF("src", "dst")
+    Seq(1, 2, 3).foreach { k =>
+      assert(rows(Graph.pageRank(withNulls, k)) == rows(pageRankFrames(withNulls, k)), s"iters $k")
+    }
+    // an int-typed key keeps its type
+    val ints = Seq((1, 2), (2, 3)).toDF("src", "dst")
+    assert(Graph.pageRank(ints, 1).schema("node").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("pagerank lineage: one setup shuffle, then exactly one shuffle per round") {
+    import spark.implicits._
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
+    def shuffles(rdd: RDD[_]): Set[Int] = rdd.dependencies.flatMap {
+      case sd: ShuffleDependency[_, _, _] => shuffles(sd.rdd) + sd.shuffleId
+      case dep => shuffles(dep.rdd)
+    }.toSet
+    Seq(1, 3, 5).foreach { iters =>
+      val n = shuffles(Graph.pageRank(g, iters).queryExecution.toRdd).size
+      // setup: the edge list's partitionBy (the degree count reduces
+      // inside that partitioning); each round: the contribution reduceByKey
+      assert(n == 1 + iters, s"iters $iters: $n shuffle dependencies")
+    }
   }
 
   test("corpus_divergence: identical sources diverge by 0, disjoint ones approach ln 2") {

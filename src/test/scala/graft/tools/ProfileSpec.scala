@@ -29,6 +29,17 @@ class ProfileSpec extends AnyFunSuite {
     assert(p.ratio.exists(x => x > 0 && !x.isInfinite), p)
   }
 
+  test("pagerank and funnel_latency stay within their Spark-job budgets") {
+    // per-job scheduling dominates these entries at small per-job work:
+    // co-partitioned PageRank rounds and the three-round-trip quantile
+    // refinement hold them at 6 and 10 jobs (construction + action)
+    val budget = Map("pagerank" -> 6, "funnel_latency" -> 10)
+    Profile.profile(spark, Seq(d), entries(budget.keys.toSeq: _*)).foreach { p =>
+      val Seq(r) = p.runs
+      assert(r.jobs <= budget(p.name), s"${p.name} ran ${r.jobs} Spark jobs, budget ${budget(p.name)}")
+    }
+  }
+
   test("unknown names are rejected, each named, before any Spark job runs") {
     val jobs = new AtomicInteger
     val listener = new SparkListener {
