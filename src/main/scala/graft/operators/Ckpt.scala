@@ -14,7 +14,9 @@ import org.apache.spark.sql.DataFrame
   *     FileScans). [[local]] sites are therefore bypassable: the lint
   *     builds every entry a second time with [[lintBypass]] set, so the
   *     full pre-checkpoint plan is linted and pinned
-  *     (src/test/resources/exchange_counts_full.tsv).
+  *     (src/test/resources/exchange_counts_full.tsv). The materialization
+  *     itself runs while the entry is built; the lint catches every query
+  *     that runs then and lints and pins its plan next to the returned one.
   *  2. **Fault tolerance changes.** A checkpointed block lives
   *     non-replicated on executor-local storage with no recompute lineage:
   *     at cluster scale an executor loss kills the job instead of

@@ -8,7 +8,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over relationship tables — the iterative-algorithm
@@ -30,8 +31,12 @@ import org.apache.spark.storage.StorageLevel
   * the same rounds ran 17–19 jobs under AQE: a job per query stage,
   * broadcasts, and two cache builds. Memory: the join holds one node's
   * adjacency at a time and spills across nodes, so the bound is the
-  * largest degree, not the graph. The persisted adjacency RDD is released
-  * by Spark's ContextCleaner once the returned frame is unreachable.
+  * largest degree, not the graph. The persisted adjacency RDD is not in
+  * the Dataset cache, so `spark.catalog.clearCache()` does not free it:
+  * Spark's ContextCleaner does, at the first driver GC after the returned
+  * frame becomes unreachable. At sf0.1 that is 9.3 MiB held in memory;
+  * eight passes with a `clearCache` between them (local[3]) never held
+  * more than one copy, and none was left after a GC.
   *
   * Determinism (the part that makes an iterative float algorithm
   * oracle-checkable): ranks are integer micro-units ([[PrScale]] = 1e12),
@@ -74,32 +79,44 @@ object Graph {
     *
     * Null endpoints keep SQL join semantics: a null node counts toward N
     * (it is a group of the degree count) and its edges count toward the
-    * other endpoint's degree, but it never sends or receives rank. */
+    * other endpoint's degree, but it never sends or receives rank.
+    *
+    * Node keys must be integral (byte, short, int or long): the rounds key
+    * on longs, and a wider or non-numeric key would be truncated or nulled
+    * into another node. */
   def pageRank(undirected: DataFrame, iters: Int): DataFrame = {
     val s = undirected.sparkSession
+    Seq("src", "dst").foreach { c =>
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(undirected.schema(c).dataType),
+        s"pageRank: $c must be an integral node key, not ${undirected.schema(c).dataType.simpleString}")
+    }
     val part = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
     // boxed keys (a null endpoint stays a key, as in the SQL form) would
     // make both shuffles fall back to Java serialization: name Kryo
     val kryo = new KryoSerializer(s.sparkContext.getConf)
-    val sym: RDD[(Node, Node)] =
-      undirected.select(col("src").cast("long"), col("dst").cast("long"))
-        .queryExecution.toRdd
-        .flatMap { r =>
-          val a: Node = if (r.isNullAt(0)) null else r.getLong(0)
-          val b: Node = if (r.isNullAt(1)) null else r.getLong(1)
-          Iterator(a -> b, b -> a)
-        }
-    // (node, (non-null neighbours, degree)): the symmetric edge list
-    // grouped by src ONCE, in the partitioning every round reuses
-    val links = sym.combineByKeyWithClassTag[(mutable.ArrayBuilder.ofLong, Long)](
-        (d: Node) => (adj(new mutable.ArrayBuilder.ofLong, d), 1L),
-        (c: (mutable.ArrayBuilder.ofLong, Long), d: Node) => (adj(c._1, d), c._2 + 1),
-        (x: (mutable.ArrayBuilder.ofLong, Long), y: (mutable.ArrayBuilder.ofLong, Long)) =>
-          (x._1 ++= y._1.result(), x._2 + y._2),
-        part, mapSideCombine = false, serializer = kryo)
-      .mapValues { case (ns, deg) => (ns.result(), deg) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = links.count() // bounded driver scalar: node count (a null node included)
+    val input = undirected.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution
+    // setup runs as one SQL execution of the input plan, so it reports as a
+    // query (UI, query-execution listeners) like a Dataset action would
+    val (links, n) = SQLExecution.withNewExecutionId(input, Some("pageRank")) {
+      val sym: RDD[(Node, Node)] = input.toRdd.flatMap { r =>
+        val a: Node = if (r.isNullAt(0)) null else r.getLong(0)
+        val b: Node = if (r.isNullAt(1)) null else r.getLong(1)
+        Iterator(a -> b, b -> a)
+      }
+      // (node, (non-null neighbours, degree)): the symmetric edge list
+      // grouped by src ONCE, in the partitioning every round reuses
+      val links = sym.combineByKeyWithClassTag[(mutable.ArrayBuilder.ofLong, Long)](
+          (d: Node) => (adj(new mutable.ArrayBuilder.ofLong, d), 1L),
+          (c: (mutable.ArrayBuilder.ofLong, Long), d: Node) => (adj(c._1, d), c._2 + 1),
+          (x: (mutable.ArrayBuilder.ofLong, Long), y: (mutable.ArrayBuilder.ofLong, Long)) =>
+            (x._1 ++= y._1.result(), x._2 + y._2),
+          part, mapSideCombine = false, serializer = kryo)
+        .mapValues { case (ns, deg) => (ns.result(), deg) }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // bounded driver scalar: node count (a null node included)
+      (links, links.count())
+    }
     require(n > 0, "pageRank: empty edge list")
     val r0 = PrScale / n
     val base = (15L * r0) / 100L

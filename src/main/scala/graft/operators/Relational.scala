@@ -1371,7 +1371,10 @@ object Relational {
     * round-trip-3 sort, which covers ~n·2|pcts|/coarse rows per group and
     * spills. At 100 TB pick coarse ≈ n / 10⁶ to keep each needed cell
     * around a million rows. Nothing buffers a distinct-value map, the
-    * shape per-group `percentile` has (q28's honesty note).
+    * shape per-group `percentile` has (q28's honesty note). Round trips
+    * 2 and 3 find a row's group through a literal CASE over the keys, so
+    * per-row work grows with the group count: the helper is for groups in
+    * the hundreds (event types, funnel steps), not for key-grain groups.
     *
     * Every round trip rescans `vals`: an expensive input (a scored frame
     * rather than a table scan) is materialized once by the caller through
@@ -1393,16 +1396,9 @@ object Relational {
     * count, and each requested (id, value). */
   private case class GroupQuantiles(grp: Any, n: Long, bounds: Seq[(Int, Double)])
 
-  /** Up to this many groups, the refinement's later round trips find a
-    * row's group range through inline literals (a CASE over the keys, an
-    * array index for lo/hi); above it, through a broadcast join, which
-    * costs one extra Spark job per round trip but stays O(1) per row. */
-  private val InlineGroups = 64
-
   /** The three round trips behind [[groupedEquidepthBounds]]. */
   private def groupedQuantiles(vals: DataFrame, pcts: Seq[(Int, Double)],
                                coarse: Int = 8192): Seq[GroupQuantiles] = {
-    val s  = vals.sparkSession
     val xs = vals.select(col("grp"), col("x")).filter(col("x").isNotNull)
     // 1: range and size per group; `gid` numbers the groups so the later
     //    round trips key on an int, whatever the group key's type
@@ -1410,24 +1406,14 @@ object Relational {
       .agg(min(col("x")).as("lo"), max(col("x")).as("hi"), count(lit(1)).as("n"))
       .collect().toSeq
     if (groups.isEmpty) return Seq.empty
-    val ranged =
-      if (groups.size <= InlineGroups) {
-        val gid = groups.indices.tail.foldLeft(when(col("grp") <=> lit(groups.head.get(0)), 0)) {
-          (acc, i) => acc.when(col("grp") <=> lit(groups(i).get(0)), i)
-        }
-        def at(field: Int) = element_at(array(groups.map(g => lit(g.get(field))): _*), col("gid") + 1)
-        xs.withColumn("gid", gid).filter(col("gid").isNotNull)
-          .select(col("gid"), col("x"), at(1).as("lo"), at(2).as("hi"))
-      } else {
-        val xType = xs.schema("x").dataType
-        val ranges = s.createDataFrame(
-          groups.zipWithIndex.map { case (g, i) => Row(g.get(0), i, g.get(1), g.get(2)) }.asJava,
-          StructType(Seq(StructField("g", xs.schema("grp").dataType),
-            StructField("gid", IntegerType, nullable = false),
-            StructField("lo", xType), StructField("hi", xType))))
-        xs.join(broadcast(ranges), col("grp") <=> col("g"))
-          .select(col("gid"), col("x"), col("lo"), col("hi"))
-      }
+    // a row's group id and range come from literals (a CASE over the
+    // keys, then an array index), so the later round trips ship nothing
+    val gid = groups.indices.tail.foldLeft(when(col("grp") <=> lit(groups.head.get(0)), 0)) {
+      (acc, i) => acc.when(col("grp") <=> lit(groups(i).get(0)), i)
+    }
+    def at(field: Int) = element_at(array(groups.map(g => lit(g.get(field))): _*), col("gid") + 1)
+    val ranged = xs.withColumn("gid", gid).filter(col("gid").isNotNull)
+      .select(col("gid"), col("x"), at(1).as("lo"), at(2).as("hi"))
     // order-preserving coarse cell id (monotone in x within each group;
     // exactness of the linear map is irrelevant — only monotonicity +
     // bounded key range)

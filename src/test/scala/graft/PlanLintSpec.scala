@@ -1,11 +1,18 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftListenerBusShim
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, RangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamFixture.spark
@@ -118,6 +125,19 @@ class PlanLintSpec extends AnyFunSuite {
     case _ => false
   }
 
+  /** What building one entry produced: the plan of the frame it returns,
+    * and the plan of every query that ran while it was being built — the
+    * eager work an entry does before it hands back a frame (driver round
+    * trips such as the quantile refinement's collects, `Ckpt`
+    * materializations, freeze writes, pageRank's setup). Both are linted
+    * and pinned; an entry whose returned plan reads a local frame still
+    * owes the shuffles that produced it. */
+  case class Built(plan: SparkPlan, during: Seq[SparkPlan]) {
+    def all: Seq[SparkPlan] = plan +: during
+  }
+
+  type Entry = (String, (SparkSession, String) => DataFrame)
+
   /** One plan build per entry, shared by the shape lint and the
     * exchange-count budget (building 170+ plans — including the frozen-
     * artifact entries' eager freeze writes — is the expensive part; pay
@@ -126,24 +146,47 @@ class PlanLintSpec extends AnyFunSuite {
     * repartitions — the exchanges that define the shuffle budget (and the
     * single-partition shapes the lint hunts) are INSERTED during
     * preparation, and AQE must be off so the tree is the concrete plan,
-    * not an AdaptiveSparkPlanExec placeholder. */
-  def buildAll(): Seq[(String, Either[String, SparkPlan])] = {
+    * not an AdaptiveSparkPlanExec placeholder. The queries that run during
+    * construction are caught by a query-execution listener, read after
+    * the listener bus drains, so each lands with the entry that ran it. */
+  def buildAll(entries: Seq[Entry] = catalogue): Seq[(String, Either[String, Built])] = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // benchOnly entries (raw codec boundaries, r16) keep their plan gates
-    // even though they left the oracle surface — they still run on the
-    // bench and at scale, so their shuffle budget stays pinned.
-    try (SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq).map { case (name, fn) =>
+    val ran = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ran.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def drain(): Seq[SparkPlan] = {
+      GraftListenerBusShim.waitUntilEmpty(spark.sparkContext, 60000L)
+      val out = ran.asScala.toSeq
+      ran.clear()
+      out
+    }
+    drain()
+    spark.listenerManager.register(listener)
+    try entries.map { case (name, fn) =>
       val r =
-        try Right(fn(spark, d).queryExecution.executedPlan)
-        catch { case e: Throwable => Left(s"${e.getMessage}") }
+        try {
+          val plan = fn(spark, d).queryExecution.executedPlan
+          Right(Built(plan, drain()))
+        } catch { case e: Throwable => drain(); Left(s"${e.getMessage}") }
       spark.catalog.clearCache()
       (name, r)
     }
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
-  lazy val built: Seq[(String, Either[String, SparkPlan])] = buildAll()
+  // benchOnly entries (raw codec boundaries, r16) keep their plan gates
+  // even though they left the oracle surface — they still run on the
+  // bench and at scale, so their shuffle budget stays pinned.
+  def catalogue: Seq[Entry] = SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq
+
+  lazy val built: Seq[(String, Either[String, Built])] = buildAll()
 
   /** Second view (VERDICT r17 item 5): the same catalogue built with
     * [[graft.operators.Ckpt.lintBypass]] set, so multi-consumer
@@ -154,14 +197,12 @@ class PlanLintSpec extends AnyFunSuite {
     * truncations — stay opaque by design; their story is in docs/CHECKPOINTS.md
     * §"Checkpoint sites at 100 TB".
     *
-    * Blind spot: a `Ckpt.local` nested UPSTREAM of a `Ckpt.state` is
-    * invisible in BOTH views — the checkpointed view stops at the local,
-    * the full view at the state boundary. Example: `pairs` (the
-    * ngram_jaccard pair list) in `qDedupClustersIncremental` and
-    * `qDedupClustersMaintain`. Such subtrees are covered only because
-    * they are also linted standalone as registered entries (here
-    * `ngram_jaccard`). */
-  lazy val builtFull: Seq[(String, Either[String, SparkPlan])] = {
+    * A `Ckpt.local` nested UPSTREAM of a `Ckpt.state` (`pairs` in
+    * `qDedupClustersIncremental` and `qDedupClustersMaintain`) is seen
+    * through the construction-time queries: the state boundary's own
+    * materialization runs while the entry is built, and in this view its
+    * plan carries the bypassed local's subtree. */
+  lazy val builtFull: Seq[(String, Either[String, Built])] = {
     graft.operators.Ckpt.lintBypass = true
     try buildAll() finally graft.operators.Ckpt.lintBypass = false
   }
@@ -172,28 +213,31 @@ class PlanLintSpec extends AnyFunSuite {
     p.treeString.linesIterator.take(25).map(l => "    " + l.take(200)).mkString("\n", "\n", "")
 
   def shapeLint(view: String,
-      plans: Seq[(String, Either[String, SparkPlan])]): Seq[String] = {
+      plans: Seq[(String, Either[String, Built])]): Seq[String] = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     plans.foreach {
       case (name, Left(err)) =>
         failures += s"$name [$view]: query construction failed: $err"
-      case (name, Right(plan)) =>
-        nodes(plan).foreach {
-          case c: CartesianProductExec =>
-            failures += s"$name [$view]: CartesianProductExec in plan" + excerpt(c)
-          case j: BroadcastNestedLoopJoinExec =>
-            val build = j.buildSide match {
-              case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-              case _ => j.right
-            }
-            if (!bounded(build) && !nljAllowlist.contains(name))
-              failures += s"$name [$view]: BroadcastNestedLoopJoin with unbounded " +
-                s"build side (build top: ${build.nodeName})" + excerpt(build)
-          case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
-            if (!bounded(e.child) && !singlePartitionAllowlist.contains(name))
-              failures += s"$name [$view]: Exchange SinglePartition over unbounded child" +
-                excerpt(e)
-          case _ => ()
+      case (name, Right(built)) =>
+        built.all.zipWithIndex.foreach { case (plan, i) =>
+          val at = if (i == 0) s"$name [$view]" else s"$name [$view, construction query $i]"
+          nodes(plan).foreach {
+            case c: CartesianProductExec =>
+              failures += s"$at: CartesianProductExec in plan" + excerpt(c)
+            case j: BroadcastNestedLoopJoinExec =>
+              val build = j.buildSide match {
+                case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+                case _ => j.right
+              }
+              if (!bounded(build) && !nljAllowlist.contains(name))
+                failures += s"$at: BroadcastNestedLoopJoin with unbounded " +
+                  s"build side (build top: ${build.nodeName})" + excerpt(build)
+            case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+              if (!bounded(e.child) && !singlePartitionAllowlist.contains(name))
+                failures += s"$at: Exchange SinglePartition over unbounded child" +
+                  excerpt(e)
+            case _ => ()
+          }
         }
     }
     failures.toSeq
@@ -243,24 +287,52 @@ class PlanLintSpec extends AnyFunSuite {
     }
   }
 
+  test("queries run during construction are linted (seeded eager Cartesian)") {
+    // Mechanism check: an entry that collects a Cartesian product before
+    // returning a harmless frame must fail the shape lint and count that
+    // query's exchanges — the property the construction-query lint relies on.
+    import org.apache.spark.sql.functions.col
+    val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val seeded: Entry = ("seeded", (s: SparkSession, _: String) => {
+        val a = s.range(100).select(col("id").as("a"))
+        val b = s.range(100).select(col("id").as("b"))
+        a.crossJoin(b).groupBy(col("a")).count().collect()
+        s.range(1).toDF()
+      })
+      val Seq((_, Right(b))) = buildAll(Seq(seeded))
+      assert(b.during.size == 1, s"expected one construction query, saw ${b.during.size}")
+      assert(exchanges(b.plan) == 0 && exchanges(b.during.head) == 1)
+      val failures = shapeLint("seeded", Seq("seeded" -> Right(b)))
+      assert(failures.exists(f => f.startsWith("seeded [seeded, construction query 1]: " +
+        "CartesianProductExec")), failures.mkString("\n"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
+  }
+
   /** r10 VERDICT task 6: the shuffle BUDGET. The shape lint above forbids
     * catastrophic plans; this gate pins each entry's ShuffleExchangeExec
     * COUNT against a committed manifest so an edit that introduces an
     * avoidable exchange fails CI as a diff, not as a bench mover three
     * rounds later. Counts are pre-AQE (structural, deterministic at the
-    * fixed sf0.001 fixture). An INTENTIONAL plan change regenerates the
-    * manifest: GRAFT_REGEN_EXCHANGE_MANIFEST=1 sbt "testOnly *PlanLintSpec"
+    * fixed sf0.001 fixture). A row is `name, returned, during`: the
+    * exchanges of the returned plan, then the sum over the queries that
+    * ran while the entry was built ([[Built]]). An INTENTIONAL plan change
+    * regenerates the manifest:
+    * GRAFT_REGEN_EXCHANGE_MANIFEST=1 sbt "testOnly *PlanLintSpec"
     * rewrites src/test/resources/exchange_counts.tsv — the diff then
     * carries the new counts for review, which is the point. */
   val manifestPath = "src/test/resources/exchange_counts.tsv"
   val manifestFullPath = "src/test/resources/exchange_counts_full.tsv"
 
+  def exchanges(p: SparkPlan): Int = nodes(p).count(_.isInstanceOf[ShuffleExchangeExec])
+
   def manifestCheck(path: String,
-      plans: Seq[(String, Either[String, SparkPlan])]): Unit = {
-    val counts: Seq[(String, Int)] = plans.collect { case (name, Right(plan)) =>
-      (name, nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]))
+      plans: Seq[(String, Either[String, Built])]): Unit = {
+    val counts: Seq[(String, (Int, Int))] = plans.collect { case (name, Right(b)) =>
+      (name, (exchanges(b.plan), b.during.map(exchanges).sum))
     }
-    val rendered = counts.map { case (n, c) => s"$n\t$c" }.mkString("", "\n", "\n")
+    val rendered = counts.map { case (n, (r, c)) => s"$n\t$r\t$c" }.mkString("", "\n", "\n")
     if (sys.env.contains("GRAFT_REGEN_EXCHANGE_MANIFEST")) {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), rendered)
       info(s"regenerated $path with ${counts.size} entries")
@@ -270,12 +342,13 @@ class PlanLintSpec extends AnyFunSuite {
         s"missing $path — run with GRAFT_REGEN_EXCHANGE_MANIFEST=1 to create it")
       val expected = java.nio.file.Files.readString(f).linesIterator
         .filter(_.nonEmpty).map { l =>
-          val Array(n, c) = l.split("\t"); (n, c.toInt)
+          val Array(n, r, c) = l.split("\t"); (n, (r.toInt, c.toInt))
         }.toMap
-      val diffs = counts.flatMap { case (n, c) =>
+      val diffs = counts.flatMap { case (n, (r, c)) =>
         expected.get(n) match {
-          case Some(e) if e == c => None
-          case Some(e) => Some(s"$n: plan has $c exchanges, manifest pins $e")
+          case Some(e) if e == (r, c) => None
+          case Some((er, ec)) => Some(s"$n: plan has $r exchanges (+$c in construction " +
+            s"queries), manifest pins $er (+$ec)")
           case None => Some(s"$n: not in manifest (new entry? regenerate)")
         }
       } ++ (expected.keySet -- counts.map(_._1).toSet)

@@ -113,6 +113,19 @@ class GraphSpec extends AnyFunSuite {
       org.apache.spark.sql.types.IntegerType)
   }
 
+  test("pagerank rejects non-integral node keys instead of merging them") {
+    import spark.implicits._
+    // the rounds key on longs: a string key would cast to null (every node
+    // one node) and a double key would truncate (1.2 and 1.7 one node)
+    Seq(
+      Seq(("a", "b"), ("b", "c")).toDF("src", "dst"),
+      Seq((1.2, 1.7), (1.7, 3.0)).toDF("src", "dst"),
+      Seq((1L, "b")).toDF("src", "dst")).foreach { g =>
+      val e = intercept[IllegalArgumentException](Graph.pageRank(g, 1))
+      assert(e.getMessage.contains("integral node key"), e.getMessage)
+    }
+  }
+
   test("pagerank lineage: one setup shuffle, then exactly one shuffle per round") {
     import spark.implicits._
     val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
