@@ -393,7 +393,7 @@ object Curation {
     * cutoff [[Pipeline.qCorpusCurate]] enforces) as the reference label.
     * This is how a curation team picks the operating point before
     * swapping a trained model into [[classifierScore]]'s `model` slot —
-    * and the quality-eval sibling of the dedup-side [[Dedup.qLshEval]].
+    * and the quality-eval sibling of the dedup-side [[Dedup.lshEvalFrom]].
     *
     * Precision/recall guard empty-prediction cells with greatest(·, 1)
     * (metric 0, never a division error); F1 falls back to 0 when both
@@ -566,15 +566,10 @@ object Curation {
     * the serve leg of the lifecycle, structurally [[classifierScore]]
     * with micro-unit weights: one broadcast join + one per-doc integer
     * aggregation; score = margin/(n_feats*1e6) is a single int/int
-    * double division (exact bits), keep is an integer sign test. */
-  def qClassifierTrainScore(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    classifierTrainScoreFrom(docs, classifierTrain(docs))
-  }
-
-  /** See [[qClassifierTrainScore]]; takes an already-trained
-    * (bucket, w_micro) weight table so the bench bills the 12-round GD
-    * once (as classifier_train) and this serve leg at its true cost —
+    * double division (exact bits), keep is an integer sign test. Takes
+    * the already-trained (bucket, w_micro) weight table — the
+    * classifier_train artifact — so the 12-round GD is billed once (as
+    * classifier_train) and this serve leg at its true cost —
     * one broadcast join + one integer aggregation (VERDICT r12 task 2:
     * the combined entry was double-billing ~8 s of training; in
     * production the trained table is materialized once and every scoring

@@ -140,6 +140,15 @@ object CurationState {
     CurationState(fp, c1, c2, stats, bounds, src, bench)
   }
 
+  /** The bundle as the artifact a server reads (curation_state_build):
+    * [[compute]] written to a fresh scratch directory and [[load]]ed
+    * back, so every consumer runs THROUGH the parquet round trip. */
+  def frozen(state: DataFrame): CurationState = {
+    val path = java.nio.file.Files.createTempDirectory("graft-curation-state").toString
+    write(compute(state), path)
+    load(state.sparkSession, path)
+  }
+
   /** Append one ingest chunk's MERGEABLE partials under
     * `partialPath/<frame>/batch=<id>`. A retried batch id overwrites its own
     * directory (idempotent replay — the epoch-commit pattern RecoverySpec

@@ -88,17 +88,12 @@ object Dedup {
     * shingles are DF-capped (see [[ShingleDfCap]]) so no join bucket can go
     * quadratic at 100 TB. Per-doc shingle counts join by shuffle — never
     * broadcast an unbounded per-document relation; AQE still broadcasts it
-    * at small scale on its own. */
-  def qNgramJaccard(s: SparkSession, d: String): DataFrame =
-    // materialized once; reused by the DF cap, the per-doc counts, and
-    // both sides of the self-join (at cluster scale: a shingle table)
-    ngramJaccardFrom(shingleTable(documents(s, d)).persist())
-
-  /** The Jaccard self-join over an ALREADY-MATERIALIZED shingle table —
-    * the cluster-scale shape, where the tokenize shuffle is paid once and
-    * shared with the MinHash path ([[minHashLshFrom]]). Bench drives both
-    * from one persisted table; the SparkEntry surface keeps the
-    * self-contained (s, d) variants for independent correctness runs. */
+    * at small scale on its own.
+    *
+    * Reads an ALREADY-MATERIALIZED shingle table — the cluster-scale
+    * shape, where the tokenize shuffle is paid once and shared with the
+    * MinHash path ([[minHashLshFrom]]): the catalogue DAG declares the
+    * table as its own `shingle_table` node. */
   def ngramJaccardFrom(ex: DataFrame): DataFrame = {
     val counts = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val rare = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -119,7 +114,7 @@ object Dedup {
   }
 
   /** Prefix-filtered exact Jaccard join (prefix_jaccard): the SAME output
-    * as [[qNgramJaccard]] — provably, so it shares that oracle — with the
+    * as [[ngramJaccardFrom]] — provably, so it shares that oracle — with the
     * candidate-generation join pruned by the positional prefix filter of
     * the set-similarity-join literature (AllPairs/PPJoin family).
     *
@@ -147,7 +142,7 @@ object Dedup {
     * the ones prefixes exclude. Verification then computes the true
     * intersection ONLY for candidate pairs (a doc_id-keyed join, fact
     * rows never re-join by shingle). Candidate-superset + output equality
-    * vs [[qNgramJaccard]] are pinned in OperatorSpec.
+    * vs ngram_jaccard are pinned in OperatorSpec.
     *
     * WHEN TO USE (measured regime boundary, docs/SCALEPROBE.md round 10):
     * on corpora whose df distribution is scale-stable, the df-capped
@@ -155,13 +150,10 @@ object Dedup {
     * — prefix_jaccard's extra cost is the price of its recall GUARANTEE
     * (candidate-complete by the prefix lemma; the cap silently loses any
     * pair whose every shared shingle is hot). Default to the capped
-    * index; switch here when [[qDedupAgreement]] shows the capped method
+    * index; switch here when dedup_agreement shows the capped method
     * diverging from exact truth on a sampled band — i.e. on heavily
-    * templated corpora, where the win is recall, not wall-clock. */
-  def qPrefixJaccard(s: SparkSession, d: String): DataFrame =
-    prefixJaccardFrom(shingleTable(documents(s, d)).persist())
-
-  /** See [[qPrefixJaccard]]; same contract as [[ngramJaccardFrom]]. */
+    * templated corpora, where the win is recall, not wall-clock. Same
+    * input contract as [[ngramJaccardFrom]]. */
   def prefixJaccardFrom(ex: DataFrame): DataFrame = {
     val counts = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val dfs = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -204,15 +196,13 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(j, 3).as("jaccard"))
   }
 
-  /** Near-duplicate CLUSTERS: connected components over the exact Jaccard
-    * pair graph, with the canonical representative (min doc_id) as the
-    * cluster id — the step a real dedup pass runs after pair generation,
-    * because duplicates arrive as chains (A~B, B~C) that pairwise keep/drop
-    * rules handle inconsistently. */
-  def qDedupClusters(s: SparkSession, d: String): DataFrame =
-    clusterPairs(qNgramJaccard(s, d).select(col("doc_a"), col("doc_b")))
-
-  /** Connected components by iterative min-label propagation — the
+  /** Near-duplicate CLUSTERS (dedup_clusters over the exact Jaccard pair
+    * graph): connected components, with the canonical representative (min
+    * doc_id) as the cluster id — the step a real dedup pass runs after
+    * pair generation, because duplicates arrive as chains (A~B, B~C) that
+    * pairwise keep/drop rules handle inconsistently.
+    *
+    * Connected components by iterative min-label propagation — the
     * standard Spark CC dataflow (no GraphX dependency): each round, every
     * vertex takes the min label among itself and its neighbors; the loop
     * exits on a fixpoint (the 32-round cap is a safety rail, and the
@@ -294,12 +284,8 @@ object Dedup {
     * Scale shape: the quality column is a per-row map over the documents
     * already joined to their (id, cluster) labels; the argmax is a window
     * partitioned BY CLUSTER — cluster-sized frames (dup clusters are
-    * small by construction), never a global sort. */
-  def qCanonicalSelect(s: SparkSession, d: String): DataFrame =
-    canonicalSelect(documents(s, d), qDedupClusters(s, d))
-
-  /** See [[qCanonicalSelect]]; `clusters` is any (doc_id, cluster_id,
-    * cluster_size) labeling of `docs`. */
+    * small by construction), never a global sort. `clusters` is any
+    * (doc_id, cluster_id, cluster_size) labeling of `docs`. */
   def canonicalSelect(docs: DataFrame, clusters: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val quality = docs.select(col("doc_id"),
@@ -347,20 +333,18 @@ object Dedup {
     * sized by the BATCH — delta edges, affected members (dup clusters are
     * small and the batch touches few), and the propagation loop runs over
     * the reduced graph only. Cost ∝ batch + affected-component mass, never
-    * corpus (SCALEPROBE r13 note pins the ratio). */
-  def qDedupClustersIncremental(s: SparkSession, d: String): DataFrame = {
-    // checkpoint the pair list ONCE — the two filter branches would
-    // otherwise each re-run the whole shingle self-join (measured ~2.5 s
-    // apiece at sf0.1; the bench additionally shares the cascade's cached
-    // pair table, the VERDICT r03 §wrong-2 convention)
+    * corpus (SCALEPROBE r13 note pins the ratio). `pairTable` is the
+    * corpus's exact Jaccard pair table (the ngram_jaccard artifact). */
+  def dedupClustersIncremental(pairTable: DataFrame): DataFrame = {
+    // checkpoint the pair list ONCE: both filter branches read it
     val pairs = Ckpt.local(
-      qNgramJaccard(s, d).select(col("doc_a"), col("doc_b")), Ckpt.PairGraphSized)
+      pairTable.select(col("doc_a"), col("doc_b")), Ckpt.PairGraphSized)
     dedupClustersIncrementalFrom(
       pairs.filter(col("doc_a") % 5 =!= 2 && col("doc_b") % 5 =!= 2),
       pairs.filter(col("doc_a") % 5 === 2 || col("doc_b") % 5 === 2))
   }
 
-  /** See [[qDedupClustersIncremental]]; `priorPairs` is the corpus pair
+  /** See [[dedupClustersIncremental]]; `priorPairs` is the corpus pair
     * graph the frozen labeling was built from, `deltaPairs` the new
     * batch's edges (both directions of the split are exact-Jaccard pairs —
     * the generation stage is [[minHashIncrementalFrom]]'s probe shape). */
@@ -382,20 +366,20 @@ object Dedup {
 
   /** dedup_clusters_maintain (r14, VERDICT r13 task 2): the RECURRING leg
     * of incremental CC, split from the once-per-ingest-cycle prior-state
-    * build that [[qDedupClustersIncremental]] bundles into one bill (the
+    * build that [[dedupClustersIncremental]] bundles into one bill (the
     * curation_state_build / curate_incremental precedent, r10). Here the
     * prior labeling is WRITTEN to a frozen parquet state table and read
     * back, so the registered entry's maintenance lineage genuinely starts
     * at a frozen-table read — the production shape, where the label state
-    * lives in the artifact store and only the fold runs per batch; the
-    * bench additionally threads the cascade's cached prior labels straight
-    * into [[maintainClusters]] so the billed number is the fold alone.
+    * lives in the artifact store and only the fold runs per batch.
     * Oracle: the IDENTICAL full-recompute recursive-CTE as dedup_clusters
     * / dedup_clusters_incremental — the driver hash match IS the
-    * fold == full-recompute proof. */
-  def qDedupClustersMaintain(s: SparkSession, d: String): DataFrame = {
+    * fold == full-recompute proof. `pairTable` is the ngram_jaccard
+    * artifact; the state table lands under `d`'s artifact path. */
+  def dedupClustersMaintain(pairTable: DataFrame, d: String): DataFrame = {
+    val s = pairTable.sparkSession
     val pairs = Ckpt.local(
-      qNgramJaccard(s, d).select(col("doc_a"), col("doc_b")), Ckpt.PairGraphSized)
+      pairTable.select(col("doc_a"), col("doc_b")), Ckpt.PairGraphSized)
     val prior = clusterPairs(
         pairs.filter(col("doc_a") % 5 =!= 2 && col("doc_b") % 5 =!= 2))
       .select(col("doc_id"), col("cluster_id"))
@@ -605,15 +589,10 @@ object Dedup {
     * the final fuzzy filter of a dedup cascade. Levenshtein is O(len²) per
     * pair, so at any scale it runs only on the pair list the cheap stages
     * produced (here: the exact Jaccard pairs), never all-pairs; the two
-    * text payloads join back by id. */
-  def qEditDistance(s: SparkSession, d: String): DataFrame =
-    editDistanceFrom(documents(s, d), qNgramJaccard(s, d))
-
-  /** The verification join over ALREADY-COMPUTED candidate pairs — the
-    * cluster-scale shape (mirror of [[ngramJaccardFrom]]): a dedup cascade
-    * materializes the candidate pair list once and feeds every verifier
-    * from it, so the bench drives this from the shared shingle table
-    * instead of re-paying the tokenize + self-join per verifier. */
+    * text payloads join back by id. The pairs are ALREADY COMPUTED — a
+    * dedup cascade materializes the candidate pair list once and feeds
+    * every verifier from it, instead of re-paying the tokenize +
+    * self-join per verifier. */
   def editDistanceFrom(docTable: DataFrame, pairs: DataFrame): DataFrame = {
     val docs = docTable.select(col("doc_id"), normText(col("text")).as("norm"))
     pairs.select(col("doc_a"), col("doc_b"))
@@ -833,13 +812,19 @@ object Dedup {
     f.delete(); ()
   }
 
-  /** Build the bucketed serve state for [[qSubstringDedupServe]]: three
+  /** Build the bucketed serve state of the serve split
+    * (gram_index_compact; substring_dedup_serve probes it): three
     * ingest epochs of the prior corpus drain through [[gramIndexSink]],
     * epochs 0–1 (doc_id % 5 in {0,1,3}) are folded into the bucketed
     * table by [[compactGramIndex]], and epoch 2 (doc_id % 5 == 4) lands
     * AFTER the compaction watermark so it exercises the merge-on-read
     * fresh leg. Returns (table, freshPartialPath). The state dir is wiped
-    * first so re-runs compact exactly the pre-watermark epochs. */
+    * first so re-runs compact exactly the pre-watermark epochs.
+    *
+    * The compacted table's CONTENT is the distinct grams of the
+    * pre-watermark epochs; the DuckDB twin of gram_index_compact rebuilds
+    * the same set from base parquet, so the hash check covers sink
+    * partials + compaction. */
   def buildGramServeState(s: SparkSession, d: String): (String, String) = {
     val prior = substringInjectedDocs(s, d).filter(col("doc_id") % 5 =!= 2)
     val statePath = dedupArtifactPath(d, "gramidx")
@@ -850,16 +835,6 @@ object Dedup {
     compactGramIndex(s, statePath, table)
     gramIndexSink(statePath)(prior.filter(col("doc_id") % 5 === 4), 2L)
     (table, s"$statePath/grams/batch=2")
-  }
-
-  /** gram_index_compact (r15): the compacted bucketed index CONTENT —
-    * the once-per-cycle state-build half of the serve split, here the
-    * distinct grams of the pre-watermark epochs (doc_id % 5 in {0,1,3}).
-    * The DuckDB twin rebuilds the same distinct-gram set from base
-    * parquet, so the hash check covers sink partials + compaction. */
-  def qGramIndexCompact(s: SparkSession, d: String): DataFrame = {
-    val (table, _) = buildGramServeState(s, d)
-    s.table(table)
   }
 
   // ---------------------------------------------------------------------
@@ -980,19 +955,6 @@ object Dedup {
     substringDedupFromIndex(
       refGramIndexFromState(s, buildRefGramState(s, d)).select(col("g")),
       substringInjectedDocs(s, d).filter(col("doc_id") % 5 === 2))
-
-  /** substring_dedup_serve (r15, VERDICT r14 task 1): the incremental
-    * substring dedup SERVE path as a production ingest cycle actually
-    * lays it out — streamed per-epoch gram partials, a bucketed compacted
-    * index probed with zero index-side Exchange, fresh partials merged on
-    * read via broadcast. Result is identical to
-    * [[qSubstringDedupIncremental]] (presence union is associative), so
-    * the oracle recomputes the whole pipeline from base parquet. */
-  def qSubstringDedupServe(s: SparkSession, d: String): DataFrame = {
-    val (table, freshPath) = buildGramServeState(s, d)
-    substringDedupFromBucketed(s, table, s.read.parquet(freshPath),
-      substringInjectedDocs(s, d).filter(col("doc_id") % 5 === 2))
-  }
 
   /** (doc_id, i, g) k-gram window keys — shared by [[substringDedup]],
     * the incremental/batch probe side, and external index builds (a
@@ -1177,21 +1139,19 @@ object Dedup {
     *      a pair colliding in k bands is estimated once, not k times.
     *   3. join the two fixed-size signatures back by id and estimate
     *      Jaccard from positionwise agreement.
-    * Only ids, band keys, and 64×8-byte signatures ever shuffle. */
-  def qMinHashLsh(s: SparkSession, d: String): DataFrame = {
+    * Only ids, band keys, and 64×8-byte signatures ever shuffle.
+    *
+    * Reads an already-materialized shingle table (see
+    * [[ngramJaccardFrom]]); the signature and bucket tables freeze under
+    * `d`'s artifact path so the DuckDB twin verifies everything downstream
+    * of the xxhash values. */
+  def minHashLshFrom(ex: DataFrame, d: String): DataFrame = {
     // no persist on the signature job: its single consumer is the freeze()
     // write — every downstream read comes from the re-loaded frozen parquet,
     // so a cached copy would live (unused) for the session (r10 ADVICE)
-    val sigs = freeze(minhashSigs(shingleTable(documents(s, d))), dedupArtifactPath(d, "minhash-sigs"))
+    val sigs = freeze(minhashSigs(ex), dedupArtifactPath(d, "minhash-sigs"))
     val buckets = freeze(bandKeyTable(sigs), dedupArtifactPath(d, "minhash-buckets"))
     minHashLshFromParts(sigs, buckets)
-  }
-
-  /** MinHash+LSH over an already-materialized shingle table (see
-    * [[ngramJaccardFrom]]). */
-  def minHashLshFrom(ex: DataFrame): DataFrame = {
-    val sigs = minhashSigs(ex).persist()
-    minHashLshFromParts(sigs, bandKeyTable(sigs))
   }
 
   /** Pair generation + signature-agreement estimate over explicit
@@ -1215,7 +1175,7 @@ object Dedup {
   }
 
   /** MinHash+LSH with an engine-portable permutation hash — the ORACLE
-    * twin of [[qMinHashLsh]]. xxhash64 has no DuckDB equivalent, so that
+    * twin of [[minHashLshFrom]] (minhash_lsh_md5). xxhash64 has no DuckDB equivalent, so that
     * entry is rows-only; md5 is bit-identical in both engines, and a
     * MinHash permutation only needs a total order, not integers: the
     * "value" of permutation p on a shingle is the 32-char lowercase-hex
@@ -1230,11 +1190,8 @@ object Dedup {
     * exact in both engines (1/64 = 0.015625 needs exactly 6), so the
     * driver hash compare is deterministic. The string signatures shuffle
     * 64×32 bytes per doc instead of 64×8 — the production path stays
-    * [[qMinHashLsh]]; this twin exists to pin the whole LSH dataflow
-    * against an independent engine. */
-  def qMinHashLshMd5(s: SparkSession, d: String): DataFrame =
-    minHashLshMd5From(shingleTable(documents(s, d)))
-
+    * [[minHashLshFrom]]; this twin exists to pin the whole LSH dataflow
+    * against an independent engine. The body is [[minHashLshMd5From]]. */
   /** Wide md5-string signature table: (doc_id, m0..m63). */
   private def md5Sigs(ex: DataFrame): DataFrame = {
     val mins = (0 until MinHashPerms).map(p =>
@@ -1288,16 +1245,8 @@ object Dedup {
     * the five counts are 1-row aggs crossJoined (broadcast). The exact
     * side costs the capped inverted-index self-join — at 100 TB this eval
     * runs on a SAMPLE of the corpus (any doc_id hash band), which changes
-    * none of the plumbing. */
-  def qLshEval(s: SparkSession, d: String): DataFrame = {
-    // lshEvalFrom is eager (1 bounded summary row), so the shingle table
-    // can be released before returning — no cache leak across entries
-    val ex = shingleTable(documents(s, d)).persist()
-    try lshEvalFrom(ex) finally ex.unpersist()
-  }
-
-  /** See [[qLshEval]]; takes a prebuilt [[shingleTable]] (the bench
-    * threads its shared one). */
+    * none of the plumbing. Takes a prebuilt [[shingleTable]]; eager (one
+    * bounded summary row). */
   def lshEvalFrom(ex: DataFrame): DataFrame = {
     val truth = ngramJaccardFrom(ex).select(col("doc_a"), col("doc_b"))
     val sigs = md5Sigs(ex).persist()
@@ -1354,23 +1303,15 @@ object Dedup {
     * three detectors answer subtly different questions (set overlap vs
     * bit-vector distance vs shared runs), so their disagreement pattern —
     * not any one method's output — is the evidence for a method choice.
-    * Completes the eval family next to [[qLshEval]] (which grades ONE
+    * Completes the eval family next to [[lshEvalFrom]] (which grades ONE
     * method against the exact truth).
     *
     * Scale shape: three pair tables (each already bounded by its own
     * cap/banding), three semi-join intersections, nine 1-row aggs
-    * crossJoined (broadcast). */
-  def qDedupAgreement(s: SparkSession, d: String): DataFrame = {
-    val a = qNgramJaccard(s, d).select(col("doc_a"), col("doc_b")).persist()
-    val b = qSimHashPairsMd5(s, d).select(col("doc_a"), col("doc_b")).persist()
-    try dedupAgreementFrom(a, b, graft.operators.TextOps.qWinnowFingerprintMd5(s, d))
-    finally { a.unpersist(); b.unpersist() }
-  }
-
-  /** See [[qDedupAgreement]]; takes prebuilt Jaccard/SimHash pair tables
-    * and the winnow fingerprint table — the bench threads its shared
-    * cascade artifacts here, so the billed cost is the agreement MATRIX
-    * (winnow pair join + nine bounded aggs), not three rebuilt cascades. */
+    * crossJoined (broadcast). Takes prebuilt Jaccard/SimHash pair tables
+    * and the winnow fingerprint table — the cascade's shared artifacts —
+    * so the billed cost is the agreement MATRIX (winnow pair join + nine
+    * bounded aggs), not three rebuilt cascades. */
   def dedupAgreementFrom(a: DataFrame, b: DataFrame, fps: DataFrame): DataFrame = {
     val c = fps.as("x").join(fps.as("y"),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
@@ -1398,7 +1339,7 @@ object Dedup {
   }
 
   /** Incremental NEAR-dup detection — the MinHash face of
-    * [[qDedupIncremental]]: a new ingest batch is checked against the
+    * [[qDedupIncremental]] (minhash_incremental): a new ingest batch is checked against the
     * EXISTING corpus through its signature/band-key tables, never against
     * the corpus text. At production scale the corpus side of this query is
     * a materialized table the pipeline maintains (64×32 B signatures +
@@ -1408,14 +1349,9 @@ object Dedup {
     * with estimated Jaccard ≥ 0.5 — the anti-join of the batch against
     * `doc_new` is the kept set. Only ids, band keys and signatures
     * shuffle; candidates join new-batch keys (small) against corpus keys
-    * (large) with no corpus self-join — work is ∝ batch, not ∝ corpus². */
-  def qMinHashIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    minHashIncrementalFrom(
-      shingleTable(docs.filter(col("doc_id") % 2 === 1)),
-      shingleTable(docs.filter(col("doc_id") % 2 === 0)))
-  }
-
+    * (large) with no corpus self-join — work is ∝ batch, not ∝ corpus².
+    * Shingles are per-document, so both sides are parity filters of one
+    * shared [[shingleTable]]. */
   def minHashIncrementalFrom(exNew: DataFrame, exCorpus: DataFrame): DataFrame = {
     val sigsNew = md5Sigs(exNew).persist()
     val sigsOld = md5Sigs(exCorpus).persist()
@@ -1468,7 +1404,7 @@ object Dedup {
   }
 
   /** SimHash with an engine-portable bit source — the ORACLE twin of
-    * [[qSimHash]], same trick as [[qMinHashLshMd5]]: md5 is bit-identical
+    * [[qSimHash]], same trick as minhash_lsh_md5: md5 is bit-identical
     * in both engines, so bit j of the first 64 bits of md5("sh:<token>")
     * replaces bit j of xxhash64(token). Hex digit j/4 of the digest is
     * parsed once per row (16 codegen'd conv columns), the 64 vote sums
@@ -1506,13 +1442,10 @@ object Dedup {
     * hex digits (= the 16-bit chunks of the numeric form), candidates join
     * on (band, chunk), and the hamming verify re-parses the 16 digits and
     * sums per-digit bit_count(xor) — every step identical SQL in DuckDB,
-    * so the pair set and distances hash-match exactly. */
-  def qSimHashPairsMd5(s: SparkSession, d: String): DataFrame =
-    simHashPairsMd5From(qSimHashMd5(s, d).persist())
-
-  /** Banded pairs over an already-materialized md5 signature table (the
-    * production shape: the signature table is computed once and persisted;
-    * the bench mirrors this by billing it as its own entry). */
+    * so the pair set and distances hash-match exactly. Reads an
+    * already-materialized md5 signature table (the production shape: the
+    * signature table is computed once and persisted — the simhash_md5
+    * artifact). */
   def simHashPairsMd5From(sigs: DataFrame): DataFrame = {
     val chunks = sigs.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(c =>
@@ -1633,7 +1566,7 @@ object Dedup {
   }
 
   /** Streaming near-dup filter (the streaming face of
-    * [[qMinHashIncremental]]): documents arriving on an unbounded stream
+    * minhash_incremental): documents arriving on an unbounded stream
     * are checked against every PREVIOUSLY seen document via LSH bucket
     * ownership. Stateless typed map computes each doc's 16 band keys
     * ([[bandKeysLocal]]); flatMap explodes to (bkey, doc) rows; ONE

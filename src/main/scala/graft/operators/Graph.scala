@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
 /** Graph analytics over relationship tables — the iterative-algorithm
   * family (Pregel-style message passing expressed as join + aggregate
   * rounds) that complements the single-pass connected-components labeling
-  * in [[Dedup.qDedupClusters]].
+  * in [[Dedup.clusterPairs]].
   *
   * Scale design (the part that has to survive 1000 executors / 100 TB of
   * edges): the rounds run on RDDs that share ONE `HashPartitioner`. The

@@ -15,20 +15,20 @@ import org.apache.spark.sql.functions._
   * Two forms, the established exact/sketch twin pattern (ann_brute vs
   * ann_lsh, q08 vs q09):
   *
-  *  - [[qOverlapExact]] — oracle-checkable ground truth: per source pair,
+  *  - [[overlapExact]] (overlap_exact) — oracle-checkable ground truth: per source pair,
   *    the distinct-3-gram-shingle intersection and Jaccard via an
   *    inverted-index self-join. The join is keyed by shingle and each
   *    shingle contributes at most C(sources, 2) pairs, so buckets are
   *    bounded by the SOURCE count (a handful), never by corpus size —
   *    but the shuffle still moves the full distinct-shingle table, which
   *    is corpus-sized.
-  *  - [[qOverlapKmv]] — the 100 TB path: one [[KMinValues]] sketch per
+  *  - [[overlapKmvFrozen]] (overlap_kmv) — the 100 TB path: one [[KMinValues]] sketch per
   *    source (k×8 bytes of state regardless of corpus size, classic
   *    partial+final aggregation, no self-join anywhere), then pairwise
   *    estimates over the sketch table alone — sources² rows of k-length
   *    arrays. At a thousand sources that is still megabytes. Registered
   *    rows-only (a sketch estimate has no SQL oracle); OverlapSpec pins
-  *    merge-invariance EXACTLY and error vs [[qOverlapExact]] within the
+  *    merge-invariance EXACTLY and error vs overlap_exact within the
   *    1/√k band.
   */
 object Overlap {
@@ -50,24 +50,25 @@ object Overlap {
       .distinct()
   }
 
-  def qOverlapExact(s: SparkSession, d: String): DataFrame =
-    overlapExact(sourceShingleTable(documents(s, d)).persist())
-
   /** Source-grain distinct shingles DERIVED from an already-materialized
     * doc-grain [[Dedup.shingleTable]] plus a (doc_id, source) map — the
     * cluster-scale shape: the tokenize+lead shuffle is paid once by the
     * shared shingle table and overlap adds only a doc_id-keyed join (the
-    * map is dimension-thin) and the source-grain distinct. The bench
-    * threads its shared table here; the registered entries stay
-    * self-contained. Output is identical to [[sourceShingleTable]]
-    * because shingle construction is per-document either way. */
+    * map is dimension-thin) and the source-grain distinct. Both overlap
+    * entries read the catalogue's shared shingle_table through here.
+    * Output is identical to [[sourceShingleTable]] because shingle
+    * construction is per-document either way. */
   def sourceShinglesFrom(docShingles: DataFrame, docSource: DataFrame): DataFrame =
     docShingles.join(docSource, "doc_id")
       .select(col("source"), col("shingle")).distinct()
 
   /** All unordered source pairs with distinct-shingle set sizes,
     * intersection size, and Jaccard. Pairs with an empty intersection are
-    * kept (coalesce 0) so the output grain is exactly C(sources, 2). */
+    * kept (coalesce 0) so the output grain is exactly C(sources, 2). The
+    * per-source totals are source grain, so the pair cross join
+    * broadcasts one side explicitly: a size estimate over a joined input
+    * (the shared shingle table ⋈ the doc→source map) would otherwise plan
+    * it as a Cartesian product. */
   def overlapExact(ex: DataFrame): DataFrame = {
     val counts = ex.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val inter = ex.as("a").join(ex.as("b"),
@@ -75,7 +76,7 @@ object Overlap {
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
       .agg(count(lit(1)).as("i"))
     val pairs = counts.select(col("source").as("source_a"), col("n").as("n_a"))
-      .crossJoin(counts.select(col("source").as("source_b"), col("n").as("n_b")))
+      .crossJoin(broadcast(counts.select(col("source").as("source_b"), col("n").as("n_b"))))
       .filter(col("source_a") < col("source_b"))
     pairs.join(inter, Seq("source_a", "source_b"), "left")
       .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
@@ -99,12 +100,12 @@ object Overlap {
     df.sparkSession.read.parquet(path)
   }
 
-  /** Registered entry: hash table frozen to parquet, sketches + estimates
-    * served from the loaded copy so both engines see identical hash
-    * values (hash-green since r11; before that, rows-only). */
-  def qOverlapKmv(s: SparkSession, d: String): DataFrame = {
-    val hashed = sourceShingleTable(documents(s, d))
-      .select(col("source"), xxhash64(col("shingle")).as("h"))
+  /** overlap_kmv over (source, shingle) rows: the hash table frozen to
+    * `d`'s artifact path, sketches + estimates served from the loaded copy
+    * so both engines see identical hash values (hash-green since r11;
+    * before that, rows-only). */
+  def overlapKmvFrozen(srcShingles: DataFrame, d: String): DataFrame = {
+    val hashed = srcShingles.select(col("source"), xxhash64(col("shingle")).as("h"))
     overlapKmvFromHashes(freeze(hashed, overlapArtifactPath(d)))
   }
 

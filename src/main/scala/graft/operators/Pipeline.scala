@@ -255,9 +255,6 @@ object Pipeline {
     * stage's n_in is the previous stage's n_out — the funnel property.
     * Scale shape: corpus_curate's per-doc verdict frame + ONE 1-row agg
     * of conditional sums (map-side combined), then a 6-row stack. */
-  def qCurationFunnel(s: SparkSession, d: String): DataFrame =
-    curationFunnel(qCorpusCurate(s, d))
-
   def curationFunnel(cc: DataFrame): DataFrame = {
     val g1 = col("dedup_rep")
     val g2 = g1 && !col("repetitive")
@@ -292,15 +289,12 @@ object Pipeline {
   }
 
   /** Per-source curation report (curation_report) — the dashboard grain
-    * of [[qCurationFunnel]]: for each SOURCE, how many documents each
+    * of [[curationFunnel]]: for each SOURCE, how many documents each
     * gate flags and what fraction survives. A source whose keep rate
     * collapses (or whose contamination rate spikes) is the
     * acquisition-pipeline alarm; the funnel says WHICH gate, this says
     * WHOSE data. One source-grain conditional agg over the shared
     * corpus_curate verdict frame. */
-  def qCurationReport(s: SparkSession, d: String): DataFrame =
-    curationReport(qCorpusCurate(s, d))
-
   def curationReport(cc: DataFrame): DataFrame = {
     // n_docs is a per-group count(*) so it is always >= 1; the greatest
     // guard is belt-and-braces consistency with the funnel (ADVICE r9)
@@ -367,10 +361,6 @@ object Pipeline {
     * effect. All six counts are exact longs; the cutoffs round the same
     * doubles both engines derive from identical inputs. Scale shape: six
     * bounded aggregates crossJoined (every side ≤ 1 row). */
-  def qCurationStateReport(s: SparkSession, d: String): DataFrame =
-    curationStateReport(CurationState.compute(
-      documents(s, d).filter(col("doc_id") % 2 === 0)))
-
   def curationStateReport(cs: CurationState): DataFrame =
     cs.srcCounts
       .agg(sum(col("n_source")).as("n_docs"), count(lit(1)).as("n_sources"))
@@ -383,16 +373,6 @@ object Pipeline {
         col("n_fp"), col("n_bench_grams"),
         round(element_at(col("bs"), 1), 6).as("ppl_cut_1"),
         round(element_at(col("bs"), 2), 6).as("ppl_cut_2"))
-
-  def qCurateIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    val path = java.nio.file.Files.createTempDirectory("graft-curation-state")
-      .toString
-    CurationState.write(
-      CurationState.compute(docs.filter(col("doc_id") % 2 === 0)), path)
-    curateIncrementalFromState(CurationState.load(s, path),
-      docs.filter(col("doc_id") % 2 === 1))
-  }
 
   /** Direct (no-artifact) form — [[CurationState.compute]] piped straight
     * into the server; tests pin artifact == direct. */

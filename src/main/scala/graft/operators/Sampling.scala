@@ -371,21 +371,17 @@ object Sampling {
 
   /** Split-leakage audit — the eval-integrity check a doc-keyed split
     * CANNOT pass on a corpus with near-dups: counts exact near-dup pairs
-    * ([[Dedup.qNgramJaccard]], ≥ 0.5) by the (split, split) cell their
+    * (ngram_jaccard, ≥ 0.5) by the (split, split) cell their
     * endpoints land in under [[qHashSplit]]. Any off-diagonal row is
     * train/test contamination by duplication — a test doc whose twin was
     * trained on — the leak published dedup studies measure. The fix is
-    * [[qClusterSplit]]; this operator is the evidence that motivates it.
+    * cluster_split; this operator is the evidence that motivates it.
     *
     * Scale shape: pair table (already bounded by the capped Jaccard join)
     * + two id-keyed split joins + a ≤9-row agg. */
-  def qSplitLeakage(s: SparkSession, d: String): DataFrame =
-    splitLeakageFrom(Dedup.qNgramJaccard(s, d).select(col("doc_a"), col("doc_b")),
-      qHashSplit(s, d).select(col("doc_id"), col("split")))
-
-  /** See [[qSplitLeakage]]; takes a prebuilt near-dup pair table (the
-    * bench threads its cached one — a dedup cascade computes its pair
-    * list once) and a (doc_id, split) assignment. */
+  /** split_leakage (see above); takes a prebuilt near-dup pair table (the
+    * ngram_jaccard artifact — a dedup cascade computes its pair list once)
+    * and a (doc_id, split) assignment. */
   def splitLeakageFrom(pairs: DataFrame, sp: DataFrame): DataFrame =
     pairs
       .join(sp.select(col("doc_id").as("doc_a"), col("split").as("sa")), Seq("doc_a"))
@@ -397,8 +393,8 @@ object Sampling {
       .withColumn("is_leak", col("split_lo") =!= col("split_hi"))
 
   /** Near-dup-aware split (cluster_split): the repair for what
-    * [[qSplitLeakage]] measures. Each document's split key is its
-    * near-dup CLUSTER representative ([[Dedup.qDedupClusters]]'s min-id
+    * split_leakage measures. Each document's split key is its
+    * near-dup CLUSTER representative (dedup_clusters' min-id
     * label; singletons key on their own id), then the standard
     * content-keyed md5 split runs over that key — so an entire dup
     * cluster lands in one split and near-dup leakage across splits is
@@ -407,13 +403,9 @@ object Sampling {
     * so unclustered docs keep their doc-keyed assignment.
     *
     * Scale shape: the cluster label table is doc-grain (one id-keyed
-    * left join); the split expression is per-row scalar. */
-  def qClusterSplit(s: SparkSession, d: String): DataFrame =
-    clusterSplitFrom(documents(s, d),
-      Dedup.qDedupClusters(s, d).select(col("doc_id"), col("cluster_id")))
-
-  /** See [[qClusterSplit]]; takes a prebuilt (doc_id, cluster_id) label
-    * table (the bench threads the cached dedup_clusters artifact). */
+    * left join); the split expression is per-row scalar. Takes a
+    * prebuilt (doc_id, cluster_id) label table (the dedup_clusters
+    * artifact). */
   def clusterSplitFrom(docs: DataFrame, labels: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -488,14 +480,9 @@ object Sampling {
     *
     * Scale shape: one token-grain scan → map-side-combined groupBy over
     * ≤B keys (the reduce sees ≤B rows per task) → a 1-row totals
-    * broadcast. Nothing data-sized shuffles; the output is B rows. */
-  def qDsirWeights(s: SparkSession, d: String): DataFrame =
-    dsirWeights(documents(s, d), col("lang") === "en")
-      .select(col("bucket"), col("n_target"), col("n_raw"),
-        col("log_ratio").cast("double").as("log_ratio")) // decimal internally, double at the contract edge (render parity)
-
-  /** See [[qDsirWeights]]; `isTarget` is evaluated against the gram
-    * stream's carried doc columns (doc_id, lang). */
+    * broadcast. Nothing data-sized shuffles; the output is B rows.
+    * `isTarget` is evaluated against the gram stream's carried doc
+    * columns (doc_id, lang). */
   def dsirWeights(docs: DataFrame, isTarget: Column): DataFrame =
     dsirRatiosFrom(dsirCounts(docs, isTarget))
 
@@ -614,19 +601,22 @@ object Sampling {
       .withColumn("sel_rank",
         row_number().over(Window.orderBy(col(keyCol).desc, col("doc_id"))).cast("long"))
 
+  /** The dsir_weights entry's output: log_ratio is decimal internally
+    * (the selection legs read that) and double at the contract edge
+    * (render parity). */
+  def dsirWeightTable(wt: DataFrame): DataFrame =
+    wt.select(col("bucket"), col("n_target"), col("n_raw"),
+      col("log_ratio").cast("double").as("log_ratio"))
+
   /** dsir_select — deterministic hard selection: the [[DsirK]] documents
     * with the highest importance score (doc_id tie-break). The greedy
     * variant of DSIR (take the head of the importance ranking); the
-    * sampled form the paper actually uses is [[qDsirResample]].
+    * sampled form the paper actually uses is [[dsirResampleFrom]].
     *
     * Scale shape: [[dsirScores]]' one shuffle + a global top-k that
     * plans as TakeOrderedAndProject — per-partition partial top-k, only
-    * k rows per partition ever reach the driver-side ordering. */
-  def qDsirSelect(s: SparkSession, d: String): DataFrame =
-    dsirSelectFrom(documents(s, d),
-      dsirWeights(documents(s, d), col("lang") === "en"))
-
-  /** See [[qDsirSelect]]; takes a prebuilt weight table. */
+    * k rows per partition ever reach the driver-side ordering. Takes a
+    * prebuilt weight table. */
   def dsirSelectFrom(docs: DataFrame, wt: DataFrame): DataFrame =
     topKRanked(dsirScoresFrom(docs, wt), "score")
       .select(col("doc_id"), col("score").cast("double").as("score"), col("sel_rank"))
@@ -640,12 +630,8 @@ object Sampling {
     * (+0.5 keeps u strictly inside (0,1) so −ln(−ln u) is finite at both
     * hash extremes), gkey = round(−ln(−ln u), 6) as decimal(18,6) — the
     * [[esKey]] convention — and g_score = score + gkey is an exact
-    * decimal add. Same top-k plan shape as [[qDsirSelect]]. */
-  def qDsirResample(s: SparkSession, d: String): DataFrame =
-    dsirResampleFrom(documents(s, d),
-      dsirWeights(documents(s, d), col("lang") === "en"))
-
-  /** See [[qDsirResample]]; takes a prebuilt weight table. */
+    * decimal add. Same top-k plan shape as [[dsirSelectFrom]]. Takes a
+    * prebuilt weight table. */
   def dsirResampleFrom(docs: DataFrame, wt: DataFrame): DataFrame = {
     val h = conv(substring(md5(concat(lit("dsirg:"), col("doc_id").cast("string"))), 1, 15),
       16, 10).cast("long")

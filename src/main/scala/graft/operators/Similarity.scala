@@ -717,42 +717,9 @@ object Similarity {
       .select(col("query_id"), col("nn_id"), col("cos"), col("rn"))
   }
 
-  /** The five ANN methods whose registered entries [[qAnnEval]] audits,
-    * in report order. */
+  /** The five ANN methods whose registered entries ann_eval audits, in
+    * report order. */
   val AnnEvalMethods: Seq[String] = Seq("lsh", "ivf", "pq", "ivfpq", "2level")
-
-  /** Registered recall@3 audit of every approximate ANN path against the
-    * exact brute-force top-3 — the eval harness that turns the test-only
-    * recall assertions (OperatorSpec's 0.8 floors) into a driver-oracled
-    * entry: one row per (method, query) with the top-3 hit count and
-    * recall. Runs the five registered pipelines themselves
-    * ([[qAnnLsh]]/[[qAnnIvf]]/[[qAnnPq]]/[[qAnnIvfPq]]/[[qAnnTwoLevel]] —
-    * each freezes its quantizer artifact exactly as when registered
-    * standalone; deterministic, so re-freezing is an idempotent
-    * overwrite), computes the exact reference top-3 with the same
-    * codegen'd cosine + (cos desc, nn_id) tiebreak every ANN entry uses,
-    * and counts set intersections — integer algebra end to end, so the
-    * DuckDB twin (which re-derives BOTH sides from the frozen artifacts /
-    * base parquet) hash-matches without any float hazard beyond the
-    * shared 4-dp cosine rounding.
-    *
-    * Scale shape: the eval query block is fixed (100 queries), so the
-    * exact side is ONE corpus scan against a broadcast query block
-    * (linear, the [[qNearestNeighbor]] shape) and the five ANN sides cost
-    * what the production probes cost; the hit join and the method×query
-    * universe are eval-sized (500 rows). This is the recurring
-    * recall-regression audit a production ANN deployment runs per index
-    * build — priced at five probes + one scan regardless of corpus size. */
-  def qAnnEval(s: SparkSession, d: String): DataFrame =
-    annEvalFrom(
-      AnnEvalMethods.map {
-        case m @ "lsh"    => m -> qAnnLsh(s, d)
-        case m @ "ivf"    => m -> qAnnIvf(s, d)
-        case m @ "pq"     => m -> qAnnPq(s, d)
-        case m @ "ivfpq"  => m -> qAnnIvfPq(s, d)
-        case m @ "2level" => m -> qAnnTwoLevel(s, d)
-      },
-      annExactTop3(s, d))
 
   /** The exact brute-force ground-truth table the recall audit compares
     * against — registered in its own right (ann_exact_top3, r14): top-3
@@ -781,18 +748,25 @@ object Similarity {
       .select(col("query_id"), col("nn_id"), col("cos"), col("rn"))
   }
 
-  /** The audit kernel over ALREADY-MATERIALIZED per-method top-3 outputs
-    * and the exact ground-truth table (r14, VERDICT r13 task 1 — the
-    * classifierTrainScoreFrom billing-split precedent): union the five
-    * method results, join against exact on (query_id, nn_id), count hits
-    * per (method, query) over the dense method×query universe. Every
-    * frame here is eval-sized (≤ 5×3×100 rows), so the billed cost of the
+  /** ann_eval: recall@3 audit of every approximate ANN path against the
+    * exact brute-force top-3 — the eval harness that turns the test-only
+    * recall assertions (OperatorSpec's 0.8 floors) into a driver-oracled
+    * entry: one row per (method, query) with the top-3 hit count and
+    * recall. Integer algebra end to end, so the DuckDB twin (which
+    * re-derives BOTH sides from the frozen artifacts / base parquet)
+    * hash-matches without any float hazard beyond the shared 4-dp cosine
+    * rounding.
+    *
+    * The kernel runs over ALREADY-MATERIALIZED per-method top-3 outputs
+    * (the five ANN entries, each freezing its quantizer artifact) and the
+    * exact ground-truth table ([[annExactTop3]]): union the five method
+    * results, join against exact on (query_id, nn_id), count hits per
+    * (method, query) over the dense method×query universe. Every frame
+    * here is eval-sized (≤ 5×3×100 rows), so the billed cost of the
     * recurring recall-regression audit is the hit join + one bounded agg
     * — the five ANN pipelines and the exact scan are billed once each in
     * their own entries, exactly as a production deployment prices a
-    * per-index-build audit. The registered [[qAnnEval]] composes this
-    * same kernel over freshly-built inputs, so the driver hash is
-    * unchanged. */
+    * per-index-build audit. */
   def annEvalFrom(methodTop3: Seq[(String, DataFrame)],
                   exactTop3: DataFrame): DataFrame = {
     val s = exactTop3.sparkSession

@@ -126,9 +126,6 @@ object TextOps {
     * and summed as decimal(30,12) — order-invariant and exact across
     * engines — then rounded to 6 dp. JS is symmetric, so only (a < b)
     * pairs are emitted; values live in [0, ln 2]. */
-  def qCorpusDivergence(s: SparkSession, d: String): DataFrame =
-    corpusDivergence(documents(s, d))
-
   def corpusDivergence(docs: DataFrame): DataFrame =
     corpusDivergenceFrom(tokenTable(docs))
 
@@ -230,14 +227,10 @@ object TextOps {
     * never a global sort. Only the id-assignment window runs single
     * partition, and its input is the already-cut N rows — bounded by the
     * vocab size parameter, not the corpus. */
-  def qVocabBuild(s: SparkSession, d: String): DataFrame =
-    vocabBuild(documents(s, d), topN = 1000)
-
-  /** See [[qVocabBuild]]. */
   def vocabBuild(docs: DataFrame, topN: Int): DataFrame =
     vocabBuildFrom(tokenTable(docs), topN)
 
-  /** See [[qVocabBuild]]; takes a prebuilt [[tokenTable]]. */
+  /** See [[vocabBuild]]; takes a prebuilt [[tokenTable]]. */
   def vocabBuildFrom(tokens: DataFrame, topN: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = tokens
@@ -254,7 +247,7 @@ object TextOps {
   val CoverageMilestones: Seq[Int] = Seq(4, 8, 16, 32, 64, 256, 1024, 4096, 16384)
 
   /** Vocabulary coverage curve (vocab_coverage) — the tokenizer-sizing
-    * companion to [[vocabBuildFrom]] / [[qOovRate]]: the cumulative corpus
+    * companion to [[vocabBuildFrom]] / [[oovRateFrom]]: the cumulative corpus
     * token mass covered by the top-R vocabulary entries at size milestones
     * R, i.e. the curve whose plateau picks the vocab size (the standard
     * Zipf-coverage plot). One vocab-grain count agg; the corpus-total
@@ -266,10 +259,8 @@ object TextOps {
     * single-partition window input is 16384 rows by construction, never
     * the 10⁸–10⁹-row web-scale vocabulary (r11 VERDICT's one `weak`).
     * cum_tokens at every milestone ≤ 16384 is unchanged by the cut.
-    * Deterministic (count desc, word) tiebreak shared with vocab_build. */
-  def qVocabCoverage(s: SparkSession, d: String): DataFrame =
-    vocabCoverageFrom(tokenTable(documents(s, d)))
-
+    * Deterministic (count desc, word) tiebreak shared with vocab_build.
+    * Takes a prebuilt [[tokenTable]]. */
   def vocabCoverageFrom(tokens: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = tokens.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -303,11 +294,8 @@ object TextOps {
     * per-source aggregation — no shuffle of token rows at all beyond the
     * tokenize explode itself. The vocab-construction agg is vocab-grain.
     * Determinism: the top-N cut uses the same (tf desc, token) total
-    * order as vocab_build; the rate is one integer÷integer division. */
-  def qOovRate(s: SparkSession, d: String): DataFrame =
-    oovRateFrom(tokenTable(documents(s, d)))
-
-  /** See [[qOovRate]]; takes a prebuilt [[tokenTable]]. */
+    * order as vocab_build; the rate is one integer÷integer division.
+    * Takes a prebuilt [[tokenTable]]. */
   def oovRateFrom(tokens: DataFrame): DataFrame = {
     val vocab = tokens.groupBy(col("w")).agg(count(lit(1)).as("tf"))
       .orderBy(col("tf").desc, col("w")).limit(1000)
@@ -383,7 +371,7 @@ object TextOps {
   }
 
   /** Winnowing with an engine-portable hash — the ORACLE twin of
-    * [[qWinnowFingerprint]] (same trick as Dedup.qMinHashLshMd5): the
+    * [[qWinnowFingerprint]] (same trick as minhash_lsh_md5): the
     * k-gram hash is the md5 hex STRING, and because the hex is fixed-width
     * lowercase, the sliding-window lexicographic `min` selects exactly the
     * fingerprint a numeric min would. Selection structure (k-gram → window
@@ -417,12 +405,8 @@ object TextOps {
     * term) so the rank order is identical across engines regardless of
     * last-ulp `ln` differences. Scale: the explode is the standard
     * tokenize shuffle; df is a term-keyed partial-agg'd count; only the
-    * 1-row corpus count crosses the driver. */
-  def qTfIdf(s: SparkSession, d: String): DataFrame =
-    tfIdfFrom(tokenTable(documents(s, d)), documents(s, d))
-
-  /** See [[qTfIdf]]; takes a prebuilt [[tokenTable]] (docs only for the
-    * 1-row corpus count). */
+    * 1-row corpus count crosses the driver. Takes a prebuilt
+    * [[tokenTable]] (docs only for the 1-row corpus count). */
   def tfIdfFrom(tokens: DataFrame, docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = tokens.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
@@ -445,7 +429,7 @@ object TextOps {
     * per document under the Okapi BM25 scoring kernel (Robertson-style
     * idf = ln(1 + (N-df+0.5)/(df+0.5)), tf saturation k1=1.2, length
     * normalization b=0.75) — the retrieval/quality-filter sibling of
-    * [[qTfIdf]]. Same cross-engine discipline as q31: scores are ROUNDED
+    * [[tfIdfFrom]]. Same cross-engine discipline as q31: scores are ROUNDED
     * BEFORE RANKING and tie-broken by term, so rank order is identical
     * regardless of last-ulp `ln` differences. Scale: one tokenize explode
     * shared by tf and dl (both doc-keyed partial aggs), df is the standard
@@ -453,10 +437,9 @@ object TextOps {
     * (n_docs, total_tokens) frame broadcast for avgdl. */
   val Bm25K1 = 1.2
   val Bm25B = 0.75
-  def qBm25(s: SparkSession, d: String): DataFrame =
-    bm25TopTermsFrom(tokenTable(documents(s, d)))
 
-  /** See [[qBm25]]; takes a prebuilt [[tokenTable]]. */
+  /** bm25_topterms (see the BM25 notes above); takes a prebuilt
+    * [[tokenTable]]. */
   def bm25TopTermsFrom(tokens: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (tf, dl, dfreq, stats) = bm25StatsFromTokens(tokens)
@@ -476,13 +459,13 @@ object TextOps {
         col("rank").cast("int").as("rank"))
   }
 
-  /** Fixed retrieval query for [[qBm25Search]] (three common corpus
+  /** Fixed retrieval query for [[bm25Search]] (three common corpus
     * words, so the scoring exercises multi-term accumulation). */
   val Bm25Query = Seq("spark", "join", "stream")
 
   /** BM25 top-k retrieval (bm25_search): score every document against a
     * query and return the k best — the sparse-retrieval half of a RAG
-    * stack, completing [[qBm25]] (which emits per-doc term WEIGHTS; this
+    * stack, completing [[bm25TopTermsFrom]] (which emits per-doc term WEIGHTS; this
     * runs an actual SEARCH with them).
     *
     * Ranking determinism across engines: each (doc, term) partial score
@@ -495,10 +478,7 @@ object TextOps {
     * literals — pushed into the tf scan, so the corpus-sized frames never
     * carry non-query terms past the first aggregation; the final top-k is
     * orderBy+limit = TakeOrderedAndProject (no global sort). df/dl/stats
-    * reuse the same one-scan aggregations as [[qBm25]]. */
-  def qBm25Search(s: SparkSession, d: String): DataFrame =
-    bm25Search(documents(s, d), Bm25Query, 10)
-
+    * reuse the same one-scan aggregations as [[bm25TopTermsFrom]]. */
   def bm25Search(docs: DataFrame, query: Seq[String], k: Int): DataFrame = {
     val (tf, dl, dfreq, stats) = bm25Stats(docs)
     bm25SearchFrom(tf, dl, dfreq, stats, query, k)
@@ -574,18 +554,11 @@ object TextOps {
     * recomputed — only the fresh load is tokenized; the df merge moves
     * vocabulary-grain rows and the stats merge 1-row frames. Exactness:
     * every merged statistic is an integer count, so merged scoring is
-    * bit-identical to direct scoring. */
+    * bit-identical to direct scoring. The registered bm25_incremental
+    * entry takes state = docs with doc_id % 3 != 0, fresh load = the rest. */
   def bm25Incremental(stateDocs: DataFrame, freshDocs: DataFrame,
                       query: Seq[String], k: Int): DataFrame =
     bm25IncrementalFromTokens(tokenTable(stateDocs), tokenTable(freshDocs), query, k)
-
-  /** Registered bm25_incremental entry: state = docs with doc_id % 3 != 0,
-    * fresh load = the rest. */
-  def qBm25Incremental(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    bm25Incremental(docs.filter(col("doc_id") % 3 =!= 0),
-      docs.filter(col("doc_id") % 3 === 0), Bm25Query, 10)
-  }
 
   /** Streaming BM25 index maintenance — the ingest-side of
     * [[bm25Incremental]]: a `foreachBatch` sink that materializes each
@@ -815,11 +788,8 @@ object TextOps {
     * loose — when k11 < k10 a wrongly selected 11th-ranked term still
     * passed). The oracle recomputes the exact counts, the 10th-count
     * cutoff (a 10-row TakeOrderedAndProject — bounded), and both
-    * verdicts from the frozen file. */
-  def qHeavyHittersChecked(s: SparkSession, d: String): DataFrame =
-    heavyHittersCheckedFrom(tokenTable(documents(s, d)), d)
-
-  /** See [[qHeavyHittersChecked]]; takes a prebuilt [[tokenTable]]. */
+    * verdicts from the frozen file. Takes a prebuilt [[tokenTable]]; the
+    * top-k freezes under `d`'s artifact path. */
   def heavyHittersCheckedFrom(tokens: DataFrame, d: String): DataFrame = {
     val fz = freeze(heavyHittersFrom(tokens), textArtifactPath(d, "hh-top"))
     val counts = tokens.select(col("w").as("term"))
@@ -846,11 +816,8 @@ object TextOps {
     * (source, term) count; the rank window then runs over VOCABULARY-
     * grain rows partitioned by source (an external sort that spills —
     * never corpus grain). When even per-source vocab is too wide, the
-    * per-group heap form is [[graft.functions.TopKAggregator]] (q51). */
-  def qHeavyHittersExact(s: SparkSession, d: String): DataFrame =
-    heavyHittersExactFrom(tokenTable(documents(s, d)))
-
-  /** See [[qHeavyHittersExact]]; takes a prebuilt [[tokenTable]]. */
+    * per-group heap form is [[graft.functions.TopKAggregator]] (q51).
+    * Takes a prebuilt [[tokenTable]]. */
   def heavyHittersExactFrom(tokens: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = tokens
@@ -907,9 +874,7 @@ object TextOps {
     * map-side-combined (source, term) count, a depth-×-vocab-grain
     * explode collapsed to depth×width counters per source (bounded
     * state), broadcast query/row frames; nothing token-grain crosses a
-    * shuffle. */
-  def qCmsCounts(s: SparkSession, d: String): DataFrame =
-    cmsCountsFrom(tokenTable(documents(s, d)))
+    * shuffle. The body is [[cmsCountsFrom]]. */
 
   /** The CMS row-hash bucket — md5-derived, so both engines compute the
     * identical sketch from the identical inputs (shared by cms_counts and
@@ -922,7 +887,7 @@ object TextOps {
     * accumulate at vocabulary grain, then lossless counter summation
     * across sources. This is the artifact a 100 TB rollup persists once
     * per ingest cycle and every point-frequency lookup serves from
-    * ([[qCmsLookup]]); bounded state: ≤ depth×width rows regardless of
+    * (cms_lookup); bounded state: ≤ depth×width rows regardless of
     * corpus size. */
   def cmsMergedSketch(tokens: DataFrame): DataFrame = {
     val s = tokens.sparkSession
@@ -933,6 +898,11 @@ object TextOps {
       .groupBy(col("source"), col("r"), col("b")).agg(sum(col("c")).as("cnt"))
       .groupBy(col("r"), col("b")).agg(sum(col("cnt")).as("cnt"))
   }
+
+  /** cms_sketch_build: the merged sketch frozen to `d`'s artifact path and
+    * read back — the artifact the cms_lookup serve leg reads. */
+  def cmsSketchFrozen(tokens: DataFrame, d: String): DataFrame =
+    freeze(cmsMergedSketch(tokens), Relational.sketchArtifactPath(d, "cms-merged"))
 
   /** RTBF purge for the CMS serving sketch (r15, completing deletion
     * propagation across the serving artifacts: gram index → refcounts,
@@ -954,7 +924,7 @@ object TextOps {
       .groupBy(col("r"), col("b")).agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") =!= 0)
 
-  /** See [[qCmsCounts]]; takes a prebuilt [[tokenTable]]. */
+  /** cms_counts (see above); takes a prebuilt [[tokenTable]]. */
   def cmsCountsFrom(tokens: DataFrame): DataFrame = {
     val s = tokens.sparkSession
     val rows = s.range(CmsDepth).select(col("id").cast("int").as("r"))
@@ -998,7 +968,7 @@ object TextOps {
 
   /** CMS point-frequency SERVING path (cms_lookup, r14 — VERDICT r13
     * task 6): completes accumulate→merge→serve for the CMS family the way
-    * bm25 and overlap already do. [[qCmsCounts]] proves the sketch
+    * bm25 and overlap already do. cms_counts proves the sketch
     * algebra; this entry QUERIES it: the merged depth×width counter table
     * is frozen to parquet (the once-per-ingest-cycle artifact) and every
     * probe term is answered FROM THE FROZEN TABLE ALONE — est = min over
@@ -1012,18 +982,10 @@ object TextOps {
     * so the driver hash additionally proves the frozen artifact equals
     * the recomputed sketch. Scale shape: the serve leg is a 40-row probe
     * join against a ≤ depth×width counter table — independent of corpus
-    * size; the bench bills it from the cached merged sketch
-    * ([[cmsLookupFrom]]) so the committed number IS the serving cost. */
-  def qCmsLookup(s: SparkSession, d: String): DataFrame = {
-    val tokens = tokenTable(documents(s, d))
-    val path = Relational.sketchArtifactPath(d, "cms-merged")
-    cmsMergedSketch(tokens).write.mode("overwrite").parquet(path)
-    cmsLookupFrom(s.read.parquet(path), tokens)
-  }
-
-  /** See [[qCmsLookup]]; serves from an already-materialized merged
-    * sketch (frozen table or cached frame) + a prebuilt [[tokenTable]]
-    * for the exact-count audit anchor. */
+    * size; the merged sketch is its own catalogue node
+    * (cms_sketch_build, [[cmsSketchFrozen]]), so the billed number IS the
+    * serving cost. Serves from that already-materialized merged sketch +
+    * a prebuilt [[tokenTable]] for the exact-count audit anchor. */
   def cmsLookupFrom(merged: DataFrame, tokens: DataFrame): DataFrame = {
     val s = merged.sparkSession
     val rows = s.range(CmsDepth).select(col("id").cast("int").as("r"))
@@ -1291,14 +1253,11 @@ object TextOps {
     * shingle-grain count, one shingle-keyed join back, one doc_id agg —
     * the TF-IDF shuffle shape (q31), Zipf-head keys split by AQE skew
     * handling, nothing quadratic. */
-  def qNoveltyScore(s: SparkSession, d: String): DataFrame =
-    noveltyScore(graft.Tables.documents(s, d))
-
   def noveltyScore(docs: DataFrame): DataFrame =
     noveltyScoreFrom(Dedup.shingleTable(docs))
 
   /** See [[noveltyScore]]; takes a prebuilt [[Dedup.shingleTable]] (the
-    * bench threads the shared shingle pipeline table here). */
+    * shared shingle_table artifact). */
   def noveltyScoreFrom(ex: DataFrame): DataFrame = {
     val dfs = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     ex.join(dfs, Seq("shingle"))
@@ -1456,7 +1415,7 @@ object TextOps {
   }
 
   /** Tokenizer fertility report — the tokenizer-sizing companion to
-    * [[qOovRate]]: per language, how many characters one token "costs"
+    * [[oovRateFrom]]: per language, how many characters one token "costs"
     * under (a) whitespace tokenization and (b) the BPE-ish regex tokenizer
     * from [[qTokenCount]]. Languages whose fertility is far above the
     * corpus norm are under-served by the tokenizer (each token carries too

@@ -8,10 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Bench, SparkEntry, Tables}
+import graft.{Bench, Node, SparkEntry, Tables}
 
-/** The one measurement tool over the registered catalogue
-  * (`SparkEntry.queries ++ SparkEntry.benchOnly`):
+/** The one measurement tool over the catalogue DAG
+  * (`SparkEntry.catalogue`: every registered and bench-only entry, and the
+  * shared artifacts such as shingle_table):
   *
   * {{{
   *   runMain graft.tools.Profile profile <dir>[,<dirB>] <name,...>
@@ -21,14 +22,16 @@ import graft.{Bench, SparkEntry, Tables}
   *
   *  - `profile` prints, per entry, the jobs, stages, tasks, summed task
   *    time, wall and `par` = taskTime / (wall · cores) of its fastest run.
+  *    An entry is measured as Bench bills it: its dependencies are built
+  *    first, outside the counters and the clock.
   *    `par` ≈ 1 means the cores were busy the whole wall; `par` ≪ 1 means
   *    the wall is mostly driver work: planning and per-job scheduling.
   *    With two dirs each entry runs on both in this one JVM and the B/A
   *    wall ratio is printed, so the co-tenant load cancels out of it.
   *  - `plans` writes each entry's executed physical plan as one
-  *    `## <name>` section (docs/PLANS.md is its output on sf0.01). For
-  *    before/after evidence, run it on both revisions and diff the files.
-  *    PlanLintSpec is the automated gate over the same plans.
+  *    `## <name>` section. For before/after evidence, run it on both
+  *    revisions and diff the files; PlanLintSpec is the automated gate
+  *    over the same plans.
   *  - `generate` writes a perturbed K× replica of a data dir (see
   *    [[generate]]); Bench's sf1 tier reads `target/testdata/sf1`, made by
   *    `generate <sf0.1 dir> target/testdata/sf1 10`.
@@ -38,24 +41,15 @@ import graft.{Bench, SparkEntry, Tables}
   * `SPARK_GRAFT_CPUS` cores (default 32) with that many shuffle partitions,
   * as Bench's does. */
 object Profile {
-  type Entry = (SparkSession, String) => DataFrame
-
-  def catalogue: Map[String, Entry] = SparkEntry.queries ++ SparkEntry.benchOnly
-
-  /** Names Bench times only inside its shared pipelines (`Bench.runPass`):
-    * they have no standalone registered form to profile. */
-  val PipelineOnly: Set[String] =
-    Set("shingle_table", "token_table", "cms_sketch_build", "curation_state_build")
+  def catalogue: Map[String, Node[_]] = SparkEntry.catalogue.map(n => n.name -> n).toMap
 
   /** Looks every name up in [[catalogue]]; Left names each unknown one. */
-  def resolve(names: Seq[String]): Either[String, Seq[(String, Entry)]] = {
+  def resolve(names: Seq[String]): Either[String, Seq[Node[_]]] = {
     val cat = catalogue
     names.filterNot(cat.contains) match {
-      case Seq() => Right(names.map(n => n -> cat(n)))
-      case unknown => Left(unknown.map { n =>
-        if (PipelineOnly(n)) s"$n: billed only inside Bench's shared pipelines (no standalone entry)"
-        else s"$n: not a registered entry"
-      }.mkString("unknown entry names:\n  ", "\n  ", ""))
+      case Seq() => Right(names.map(cat))
+      case unknown => Left(unknown.map(n => s"$n: not a catalogue entry")
+        .mkString("unknown entry names:\n  ", "\n  ", ""))
     }
   }
 
@@ -82,19 +76,23 @@ object Profile {
   }
 
   /** Warms the session and prints Bench's calibration line, then per entry
-    * runs one untimed warm-up on the first dir and min-of-2 timed
-    * `toRdd.count()` runs per dir, clearing the cache after every run.
+    * runs one untimed warm-up on the first dir and min-of-2 timed runs per
+    * dir, clearing the cache after every run. A run builds the entry's
+    * dependencies first, untimed and uncounted, then times [[Node.make]]
+    * (kept, as the bench keeps it, iff another node consumes it).
     * Counters are read after the listener bus has drained. */
-  def profile(spark: SparkSession, dirs: Seq[String], entries: Seq[(String, Entry)]): Seq[Profiled] = {
+  def profile(spark: SparkSession, dirs: Seq[String], entries: Seq[Node[_]]): Seq[Profiled] = {
     val sc = spark.sparkContext
     val counter = new Counter
+    val consumed = SparkEntry.catalogue.flatMap(_.deps).toSet[Node[_]]
     def drain(): Unit = GraftListenerBusShim.waitUntilEmpty(sc, 60000L)
-    def timed(fn: Entry, dir: String): Run = {
+    def timed(n: Node[_], dir: String): Run = {
+      val in = Node.prepare(spark, dir, n.deps)
       drain()
       Seq(counter.jobs, counter.stages, counter.tasks).foreach(_.set(0))
       counter.taskNanos.set(0)
       val t0 = System.nanoTime()
-      fn(spark, dir).queryExecution.toRdd.count()
+      n.make(in, shared = consumed(n))
       val wall = (System.nanoTime() - t0) / 1e9
       drain()
       spark.catalog.clearCache()
@@ -106,10 +104,10 @@ object Profile {
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       println(f"[profile] calibration ${Bench.calibrate(spark)}%.2fs (Bench's fixed 20M-row groupBy kernel)")
-      entries.map { case (name, fn) =>
-        fn(spark, dirs.head).queryExecution.toRdd.count()
-        spark.catalog.clearCache()
-        val p = Profiled(name, dirs.map(d => Seq(timed(fn, d), timed(fn, d)).minBy(_.wallS)))
+      entries.map { n =>
+        val name = n.name
+        timed(n, dirs.head)
+        val p = Profiled(name, dirs.map(d => Seq(timed(n, d), timed(n, d)).minBy(_.wallS)))
         p.runs.zip(Seq("A", "B")).foreach { case (r, tag) =>
           println(f"[profile] $name%-28s ${if (dirs.size > 1) tag else ""}%1s jobs=${r.jobs}%4d " +
             f"stages=${r.stages}%4d tasks=${r.tasks}%6d taskTime=${r.taskS}%8.2fs " +
@@ -126,18 +124,20 @@ object Profile {
     * plan over an iteratively built cached table (the CC labels) embeds
     * every iteration's lineage, thousands of lines with no audit value
     * below the top operators. */
-  def plans(spark: SparkSession, dir: String, out: String, entries: Seq[(String, Entry)]): Unit = {
+  def plans(spark: SparkSession, dir: String, out: String, entries: Seq[Node[_]]): Unit = {
     val sb = new StringBuilder
     sb ++= s"# Physical plans (${Paths.get(dir).getFileName}, generated by graft.tools.Profile plans)\n\n"
     sb ++= "Audit evidence for the scaling claims in README.md: filters/pruning\n"
     sb ++= "reach the scans, dims broadcast, top-k avoids global sorts, dedup\n"
     sb ++= "and ANN shuffle only ids/keys/signatures.\n"
-    entries.foreach { case (name, fn) =>
-      val df = fn(spark, dir)
-      df.collect() // materialize AQE final plan
-      val lines = df.queryExecution.executedPlan.toString.linesIterator
-        .map(l => if (l.length > 200) l.take(197) + "..." else l).toSeq
-      sb ++= s"\n## $name\n\n```\n" + lines.take(150).mkString("\n")
+    entries.foreach { n =>
+      val lines = n.entry.fold(Seq("(no output frame: the artifact is written by its step)")) { fn =>
+        val df = fn(spark, dir)
+        df.collect() // materialize AQE final plan
+        df.queryExecution.executedPlan.toString.linesIterator
+          .map(l => if (l.length > 200) l.take(197) + "..." else l).toSeq
+      }
+      sb ++= s"\n## ${n.name}\n\n```\n" + lines.take(150).mkString("\n")
       if (lines.length > 150) sb ++= s"\n... (${lines.length - 150} more lines truncated)"
       sb ++= "\n```\n"
       spark.catalog.clearCache()
@@ -237,7 +237,7 @@ object Profile {
     * or an unknown entry name, both found before any session exists. */
   def run(args: Array[String]): Int = {
     def names(csv: String) = csv.split(',').toSeq.filter(_.nonEmpty)
-    def withEntries(ns: Seq[String])(body: (SparkSession, Seq[(String, Entry)]) => Unit): Int =
+    def withEntries(ns: Seq[String])(body: (SparkSession, Seq[Node[_]]) => Unit): Int =
       resolve(ns) match {
         case Left(err) => System.err.println(s"[profile] $err"); 2
         case Right(entries) => withSession(body(_, entries)); 0
@@ -246,7 +246,7 @@ object Profile {
       case Seq("profile", dirs, ns) if (1 to 2).contains(names(dirs).size) =>
         withEntries(names(ns))((s, es) => profile(s, names(dirs), es))
       case Seq("plans", dir, out, rest @ _*) if rest.size <= 1 =>
-        withEntries(rest.headOption.fold(catalogue.keys.toSeq)(names))((s, es) => plans(s, dir, out, es))
+        withEntries(rest.headOption.fold(SparkEntry.catalogue.map(_.name))(names))((s, es) => plans(s, dir, out, es))
       case Seq("generate", sfDir, outDir, k) if k.toIntOption.exists(_ > 0) =>
         withSession(generate(_, sfDir, outDir, k.toInt))
         println(s"""{"metric":"scale_generate","k":$k,"base":"$sfDir","out":"$outDir"}""")

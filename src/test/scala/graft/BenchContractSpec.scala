@@ -2,6 +2,11 @@ package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-visible bench protocol pins (VERDICT r15 task 5): the BENCH
@@ -13,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-facing surface: per-query lines parse, the summary line parses
   * and is emitted even when later passes are deadline-skipped, the
   * bench.json artifact is valid JSON, and a nonexistent SF dir yields
-  * all-failed / total 0.0 instead of a crash.
+  * all-failed / total 0.0 instead of a crash. The walker and probe
+  * protocol run on a small synthetic DAG passed to `Bench.run`, so only
+  * one full-catalogue pass runs here.
   *
   * Config reaches the main via system properties (Bench.cfg checks props
   * before env — a JVM cannot set its own environment). The main must NOT
@@ -27,7 +34,10 @@ class BenchContractSpec extends AnyFunSuite {
   private val QueryLine = """\{"query":"([A-Za-z0-9_]+)","sec":(-?[0-9.]+)\}""".r
   private val SummaryFrag = """"metric":"total","value":(-?[0-9.]+)""".r.unanchored
 
-  private def runMain(props: Map[String, String]): Seq[String] = {
+  /** Runs the bench (`Bench.main`, or `Bench.run` over `catalogue`) under
+    * `props` and returns its non-empty stdout lines. */
+  private def runMain(props: Map[String, String],
+      catalogue: Option[Seq[Node[_]]] = None): Seq[String] = {
     val saved = props.keys.map(k => k -> sys.props.get(k)).toMap
     props.foreach { case (k, v) => System.setProperty(k, v) }
     // Bench.main's getOrCreate applies its builder confs to the SHARED
@@ -42,7 +52,7 @@ class BenchContractSpec extends AnyFunSuite {
     val savedConf = confKeys.map(k => k -> spark.conf.getOption(k))
     val bos = new ByteArrayOutputStream()
     try Console.withOut(new PrintStream(bos, true, "UTF-8")) {
-      Bench.main(Array.empty)
+      catalogue.fold(Bench.main(Array.empty))(Bench.run)
     } finally {
       saved.foreach {
         case (k, Some(v)) => System.setProperty(k, v)
@@ -97,13 +107,8 @@ class BenchContractSpec extends AnyFunSuite {
     val expected = SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet
     assert((expected -- reported).isEmpty,
       s"entries missing from bench stdout: ${expected -- reported}")
-    // the scheduler's protection sets must track the live catalogue: a
-    // renamed entry left behind in sharedPipelineEntries/newSf1Entries
-    // would silently lose its probe-exclusion / min-of-2 protection
-    assert((Bench.sharedPipelineEntries -- reported).isEmpty,
-      s"sharedPipelineEntries names not in the catalogue: ${Bench.sharedPipelineEntries -- reported}")
-    assert((Bench.newSf1Entries -- reported).isEmpty,
-      s"newSf1Entries names not in the catalogue: ${Bench.newSf1Entries -- reported}")
+    assert(reported == SparkEntry.catalogue.map(_.name).toSet,
+      s"bench stdout must name exactly the catalogue DAG's nodes")
     // artifact: valid JSON with the same per-query map (a real parse —
     // Spark's JSON reader — not a regex)
     val spark = graft.streaming.StreamFixture.spark
@@ -190,57 +195,137 @@ class BenchContractSpec extends AnyFunSuite {
       (Map.empty, Map.empty, Seq.empty, Seq.empty))
   }
 
+  // ---- the DAG walker, on a synthetic catalogue ----
+
+  private val SlowS = 0.4
+
+  /** A small synthetic DAG: `base` sleeps [[SlowS]] in its step and feeds
+    * `dep`; `other` is still held when `check` (its consumer) records the
+    * storage levels of base — whose last consumer has run — and of other;
+    * `broken` fails, and `after_broken` → `after_after` depend on it. Each
+    * node counts its step invocations. */
+  private final class Synthetic {
+    private val spark = graft.streaming.StreamFixture.spark
+    val builds = mutable.Map.empty[String, Int].withDefaultValue(0)
+    @volatile var baseFrame: DataFrame = _
+    @volatile var levelsAtCheck: (StorageLevel, StorageLevel) = _
+    private def node(name: String, deps: Node[_]*)(body: Node.In => DataFrame) =
+      Node.frame(name, deps: _*) { in => builds(name) += 1; body(in) }
+    val base = node("base") { _ =>
+      Thread.sleep((SlowS * 1000).toLong)
+      baseFrame = spark.range(1000).toDF("id")
+      baseFrame
+    }
+    val other = node("other")(_ => spark.range(5).toDF("id"))
+    val dep = node("dep", base)(in => in(base).filter(col("id") % 2 === 0))
+    val check = node("check", other) { in =>
+      levelsAtCheck = (baseFrame.storageLevel, in(other).storageLevel)
+      in(other)
+    }
+    val leaf = node("leaf")(_ => spark.range(10).toDF("id"))
+    val broken = node("broken")(_ => throw new IllegalStateException("synthetic failure"))
+    val afterBroken = node("after_broken", broken)(in => in(broken))
+    val afterAfter = node("after_after", afterBroken)(in => in(afterBroken))
+    val healthy: Seq[Node[_]] = Seq(base, other, dep, check, leaf)
+  }
+
+  private val fixture = "/root/testdata/sf0.001"
+
+  test("walker: each artifact is built once per pass, handed to its consumers, " +
+    "and unpersisted after its last consumer") {
+    val s = new Synthetic
+    val spark = graft.streaming.StreamFixture.spark
+    val out = Bench.runPass(spark, s.healthy, fixture)
+    assert(out.map(_._1) == s.healthy.map(_.name), "one line per node, in walk order")
+    assert(out.forall(_._2 >= 0), s"no synthetic node may fail: $out")
+    assert(s.healthy.forall(n => s.builds(n.name) == 1), s"each node built once: ${s.builds}")
+    val sec = out.toMap
+    assert(sec("base") >= SlowS, s"base bills its own step: $out")
+    assert(sec("dep") < SlowS, s"dep reads the kept base, never rebuilds it: $out")
+    val (baseLevel, otherLevel) = s.levelsAtCheck
+    assert(baseLevel == StorageLevel.NONE, "base must be unpersisted after its last consumer")
+    assert(otherLevel != StorageLevel.NONE, "other must stay kept until its consumer ran")
+    assert(s.baseFrame.storageLevel == StorageLevel.NONE)
+    intercept[IllegalArgumentException](Bench.runPass(spark, Seq(s.dep, s.base), fixture))
+  }
+
+  test("walker: a failed dependency marks each dependent -1 and names the dependency") {
+    val s = new Synthetic
+    val spark = graft.streaming.StreamFixture.spark
+    val err = new ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new PrintStream(err, true, "UTF-8"))
+    val out =
+      try Bench.runPass(spark, s.healthy ++ Seq(s.broken, s.afterBroken, s.afterAfter), fixture).toMap
+      finally System.setErr(saved)
+    assert(Seq("broken", "after_broken", "after_after").forall(out(_) == -1.0), s"$out")
+    assert(s.healthy.forall(n => out(n.name) >= 0), s"$out")
+    assert(s.builds("after_broken") == 0 && s.builds("after_after") == 0,
+      "a dependent of a failed node must not run its step")
+    val log = err.toString("UTF-8")
+    assert(log.contains("upstream entry 'broken' failed — dependent entry after_broken skipped"), log)
+    assert(log.contains("upstream entry 'after_broken' failed — dependent entry after_after skipped"), log)
+  }
+
   test("end-to-end: a prior claiming tiny values makes the re-probe run " +
     "(reprobed tag) and the sf1 flag probe run (sf1.probes + probe_cal)") {
     val out = java.nio.file.Files.createTempFile("graft-bench-reprobe", ".json")
     val prior = java.nio.file.Files.createTempFile("graft-bench-prior", ".json")
-    // a committed prior in which one cheap standalone entry was ~free
-    // (but above outlierEntries' 0.001 epsilon floor) at BOTH tiers: the
-    // live run's min exceeds 2.5x (sf0.1 re-probe) / 1.5x-normalized
-    // (sf1 probe) of it, so both probe paths must fire. The "sf1 tier"
-    // here is the sf0.001 fixture again — the protocol under test is the
-    // probe machinery, not the scaling numbers.
+    // a committed prior in which one cheap DEPENDENT entry was ~free (but
+    // above outlierEntries' 0.001 epsilon floor) at BOTH tiers: the live
+    // run's min exceeds 2.5x (sf0.1 re-probe) / 1.5x-normalized (sf1
+    // probe) of it, so both probe paths must fire. The catalogue is the
+    // synthetic DAG and the "sf1 tier" the same fixture — the protocol
+    // under test is the probe machinery, not the scaling numbers.
     java.nio.file.Files.writeString(prior,
       """{
         |  "summary": {"metric":"total","value":1.0,"unit":"sec","calibration_s":[0.5],"sf":"/root/testdata/sf0.001","sf1":{"total":1.0,"calibration_s":[0.5],"dir":"/root/testdata/sf0.001"}},
         |  "queries": {
-        |    "q01_scan_count": 0.002
+        |    "dep": 0.002
         |  },
         |  "sf1_queries": {
-        |    "q01_scan_count": 0.002
+        |    "dep": 0.002
         |  }
         |}""".stripMargin)
+    val s = new Synthetic
     val lines = runMain(Map(
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
+      "SPARK_GRAFT_SF_DIR" -> fixture,
       "SPARK_GRAFT_BENCH_RUNS" -> "1",
       "SPARK_GRAFT_BENCH_DEADLINE_S" -> "9999",
       "SPARK_GRAFT_SF1" -> "1",
-      "SPARK_GRAFT_SF1_DIR" -> "/root/testdata/sf0.001",
+      "SPARK_GRAFT_SF1_DIR" -> fixture,
       "SPARK_GRAFT_SF1_RUNS" -> "1",
       "SPARK_GRAFT_BENCH_PRIOR" -> prior.toString,
       "SPARK_GRAFT_BENCH_OUT" -> out.toString,
-      "SPARK_GRAFT_BENCH_NO_STOP" -> "1"))
+      "SPARK_GRAFT_BENCH_NO_STOP" -> "1"), Some(s.healthy))
     val summary = lines.last
-    assert(field(summary, "reprobed").exists(_.contains("q01_scan_count")),
+    assert(field(summary, "reprobed").exists(_.contains("dep")),
       s"re-probe must fire for the >2.5x-prior entry: $summary")
     // entries absent from the prior must not be re-probed
     val reprobed = field(summary, "reprobed").getOrElse("[]")
-    assert(reprobed.count(_ == ',') == 0 && reprobed.contains("q01_scan_count"),
+    assert(reprobed.count(_ == ',') == 0 && reprobed.contains("dep"),
       s"only the flagged entry may re-probe: $reprobed")
     assert(field(summary, "deferred").contains("[]"),
       s"nothing may defer under a 9999s deadline: $summary")
     // the sf1 probe leg: flagged vs the tiny prior, min-of-2 probed,
     // probe window calibration recorded
-    assert(field(summary, "probes").exists(_.contains("q01_scan_count")),
+    assert(field(summary, "probes").exists(_.contains("dep")),
       s"sf1 probe must fire for the flagged entry: $summary")
     assert(field(summary, "probe_cal").exists(_.toDouble > 0),
       s"probe calibration must be recorded: $summary")
+    // a dependent entry's probes pre-build its dependency OUTSIDE the
+    // timed block: base (SlowS per build) ran once per pass and once per
+    // probe of dep (sf0.1 re-probe + two sf1 probes), yet dep's probed
+    // time stays below one base build
+    assert(s.builds("base") == 5 && s.builds("dep") == 5, s"builds: ${s.builds}")
+    val probed = """"probes":\{"dep":([0-9.]+)\}""".r.findFirstMatchIn(summary).map(_.group(1).toDouble)
+    assert(probed.exists(_ < SlowS), s"dep's probe billed its dependency: $summary")
     // sf1 side of the writer <-> parsePrior drift loop (the sf0.001
     // contract test covers the sf0.1 section; only this run writes an
     // sf1_queries section to read back)
     val (_, sf1Q, _, sf1Cals) =
       Bench.parsePrior(java.nio.file.Files.readString(out))
-    assert(sf1Q.nonEmpty && sf1Q.contains("q01_scan_count"),
+    assert(sf1Q.nonEmpty && sf1Q.contains("dep"),
       s"parsePrior must read back the sf1_queries section: ${sf1Q.size} entries")
     assert(sf1Cals.nonEmpty && sf1Cals.forall(_ > 0),
       s"parsePrior must read back the sf1 calibration column: $sf1Cals")

@@ -17,10 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamFixture.spark
 
-/** Plan-shape lint over the ENTIRE registered catalogue (r9 VERDICT task
-  * 2): turns the per-round manual plan audit into a regression gate. For
-  * every `SparkEntry.queries` entry the pre-AQE physical plan must be free
-  * of:
+/** Plan-shape lint over the ENTIRE catalogue DAG (r9 VERDICT task 2):
+  * turns the per-round manual plan audit into a regression gate. For every
+  * `SparkEntry.catalogue` node that outputs a frame — every registered and
+  * bench-only entry plus the shared artifacts such as shingle_table — the
+  * pre-AQE physical plan must be free of:
   *
   *  1. `CartesianProductExec` — an unbroadcast all-pairs join is never the
   *     right plan at 100 TB; every intentional crossJoin in this library
@@ -34,11 +35,9 @@ import graft.streaming.StreamFixture.spark
   *     global collects). Declared exceptions carry a justification in
   *     [[singlePartitionAllowlist]] and each has a registered scale twin.
   *
-  * Boundedness is structural (the subtree CONTAINS a 1-row-per-partition
-  * producer with no re-expanding generate above it would be exact; the
-  * lint's contains-check is the conservative approximation that matches
-  * every legitimate pattern in this codebase — grand aggregates, bounds
-  * arrays, codebooks, stats frames).
+  * Boundedness is structural: see [[bounded]]. An entry's dependencies
+  * are built first and read as cached relations; each is linted at its
+  * own row, and [[bounded]] sees through the cached plan.
   */
 class PlanLintSpec extends AnyFunSuite {
 
@@ -68,7 +67,12 @@ class PlanLintSpec extends AnyFunSuite {
     "q46_histogram" -> ("cumulative distribution over fixed-width value " +
       "buckets — rows = value-range/25, a constant (~17)"),
     "weighted_sample" -> ("global cumulative base over the 256-bucket md5 " +
-      "prefix grain — exactly 256 rows at any scale"))
+      "prefix grain — exactly 256 rows at any scale"),
+    // surfaced when bounded() stopped accepting a grand aggregate or limit
+    // merely somewhere below: the child is a join, bounded by key contract
+    "hybrid_search" -> ("the two RRF rank windows run over the BM25 top-50 " +
+      "candidates joined to their vectors on the unique vec_id — at most " +
+      "HybridN = 50 rows at any scale"))
     // equidepth_hist and selectivity_estimate left the allowlist when the
     // quantile refinement became driver round trips: their plans read the
     // boundaries as a local frame and carry no single-partition window.
@@ -87,6 +91,8 @@ class PlanLintSpec extends AnyFunSuite {
     "hybrid_search" -> "build = the one query vector feeding the cosine leg",
     "curate_incremental" -> ("build = the CurationState stats/bounds artifacts " +
       "— 1-row parquet frames by construction (CurationStateSpec)"),
+    "curation_state_report" -> ("build = the same loaded CurationState stats/" +
+      "bounds frames (1 row each) and its count aggregates"),
     "bigram_surprisal_scale" -> ("build = the frozen pplCutsPath artifact — " +
       "a 1-row (cut1, cut2) parquet by construction"),
     "corpus_curate_scale" -> ("build = the same 1-row frozen-cuts artifact"),
@@ -99,29 +105,53 @@ class PlanLintSpec extends AnyFunSuite {
 
   def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }
 
-  /** A subtree that provably produces a bounded number of rows: a grand
-    * aggregate (no grouping keys — including Spark's constant-key rewrite
-    * `keys=[0 AS 0]`, whose grouping expressions are foldable), a limit, a
-    * local relation, or a small range. */
-  def bounded(p: SparkPlan): Boolean = p.exists {
-    case agg: BaseAggregateExec =>
-      // Alias never overrides foldable (defaults false) — strip it, or the
-      // constant-key rewrite `0 AS 0#n` reads as unbounded
-      agg.groupingExpressions.isEmpty || agg.groupingExpressions.forall {
-        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child.foldable
-        case e => e.foldable
-      }
+  /** A grand aggregate: no grouping keys — including Spark's constant-key
+    * rewrite `keys=[0 AS 0]`, whose grouping expressions are foldable. */
+  def grand(agg: BaseAggregateExec): Boolean =
+    // Alias never overrides foldable (defaults false) — strip it, or the
+    // constant-key rewrite `0 AS 0#n` reads as unbounded
+    agg.groupingExpressions.isEmpty || agg.groupingExpressions.forall {
+      case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child.foldable
+      case e => e.foldable
+    }
+
+  /** A subtree that provably produces a bounded number of rows: a bounded
+    * PRODUCER — a grand aggregate, a limit, a local relation, a small
+    * range — reached from the root through operators that never add rows
+    * (project, filter, sort, aggregate, window, exchanges, and the
+    * codegen / AQE / input-adapter / cached-relation wrappers), or a join
+    * or union whose inputs are all bounded. A grand aggregate somewhere
+    * BELOW a data-sized join, generate or scan does not bound the subtree. */
+  def bounded(p: SparkPlan): Boolean = p match {
+    case agg: BaseAggregateExec if grand(agg) => true
     case _: GlobalLimitExec | _: LocalLimitExec => true
     // prepared-plan spellings of a limit (the lint runs on executedPlan
     // since r11: EnsureRequirements inserts the exchanges it audits)
     case _: org.apache.spark.sql.execution.CollectLimitExec => true
     case _: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => true
-    // ReusedExchangeExec is a LEAF pointing at another exchange — descend
-    // into the referenced subtree or every reuse reads as unbounded
-    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-      bounded(r.child)
     case _: LocalTableScanExec => true
     case r: RangeExec => r.numElements <= BigInt(1000000)
+    // ReusedExchangeExec is a LEAF pointing at another exchange — descend
+    // into the referenced subtree or every reuse reads as unbounded
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => bounded(r.child)
+    // a dependency's artifact, read from the cache: bounded iff its plan is
+    case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+      bounded(m.relation.cachedPlan)
+    case _: org.apache.spark.sql.execution.joins.BaseJoinExec |
+         _: org.apache.spark.sql.execution.UnionExec => p.children.forall(bounded)
+    case _: org.apache.spark.sql.execution.ProjectExec |
+         _: org.apache.spark.sql.execution.FilterExec |
+         _: org.apache.spark.sql.execution.SortExec |
+         _: BaseAggregateExec |
+         _: org.apache.spark.sql.execution.window.WindowExec |
+         _: org.apache.spark.sql.execution.exchange.Exchange |
+         _: org.apache.spark.sql.execution.WholeStageCodegenExec |
+         _: org.apache.spark.sql.execution.InputAdapter |
+         _: org.apache.spark.sql.execution.ColumnarToRowExec |
+         _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec |
+         _: org.apache.spark.sql.execution.adaptive.QueryStageExec |
+         _: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec =>
+      p.children.forall(bounded)
     case _ => false
   }
 
@@ -181,10 +211,13 @@ class PlanLintSpec extends AnyFunSuite {
     }
   }
 
-  // benchOnly entries (raw codec boundaries, r16) keep their plan gates
-  // even though they left the oracle surface — they still run on the
-  // bench and at scale, so their shuffle budget stays pinned.
-  def catalogue: Seq[Entry] = SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq
+  // The bench's catalogue DAG: benchOnly entries (raw codec boundaries,
+  // r16) keep their plan gates even though they left the oracle surface,
+  // and the shared artifacts (shingle_table, token_table, …) are linted
+  // at their own rows — their consumers read them as cached relations.
+  // A node that outputs no frame (curation_state_build) is linted through
+  // its consumers' construction queries.
+  def catalogue: Seq[Entry] = SparkEntry.catalogue.flatMap(n => n.entry.map(n.name -> _))
 
   lazy val built: Seq[(String, Either[String, Built])] = buildAll()
 
@@ -198,7 +231,7 @@ class PlanLintSpec extends AnyFunSuite {
     * §"Checkpoint sites at 100 TB".
     *
     * A `Ckpt.local` nested UPSTREAM of a `Ckpt.state` (`pairs` in
-    * `qDedupClustersIncremental` and `qDedupClustersMaintain`) is seen
+    * `Dedup.dedupClustersIncremental` and `Dedup.dedupClustersMaintain`) is seen
     * through the construction-time queries: the state boundary's own
     * materialization runs while the entry is built, and in this view its
     * plan carries the bypassed local's subtree. */
@@ -308,6 +341,27 @@ class PlanLintSpec extends AnyFunSuite {
       assert(failures.exists(f => f.startsWith("seeded [seeded, construction query 1]: " +
         "CartesianProductExec")), failures.mkString("\n"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
+  }
+
+  test("a single-partition exchange over a data-sized plan is flagged even " +
+    "with a grand aggregate below it (seeded repartition(1) over LM scores)") {
+    // CurationState's LM scores cross-join a grand-aggregate stats frame,
+    // so a contains-check would call the doc-grain scores bounded
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Curation, CurationState}
+    val seeded: Entry = ("seeded", (s: SparkSession, dir: String) => {
+      val toks = Curation.tokens(graft.Tables.documents(s, dir))
+      val c1 = toks.groupBy(col("w")).count().withColumnRenamed("count", "c")
+      val c2 = CurationState.bigramsOf(toks).groupBy(col("w1"), col("w2")).count()
+        .withColumnRenamed("count", "c2")
+      val stats = toks.agg(org.apache.spark.sql.functions.count(col("w")).as("t"),
+        org.apache.spark.sql.functions.countDistinct(col("w")).as("v"))
+      CurationState.lmScores(CurationState.bigramsOf(toks), c1, c2, stats).repartition(1)
+    })
+    val Seq((_, Right(b))) = buildAll(Seq(seeded))
+    val failures = shapeLint("seeded", Seq("seeded" -> Right(b)))
+    assert(failures.exists(_.startsWith("seeded [seeded]: Exchange SinglePartition over unbounded child")),
+      failures.mkString("\n"))
   }
 
   /** r10 VERDICT task 6: the shuffle BUDGET. The shape lint above forbids

@@ -13,9 +13,8 @@ import scala.jdk.CollectionConverters._
   * rounds later as an unexplained blind spot.
   *
   * Scope: every `.scala` file under `graft/operators` and `graft/tools`,
-  * recursively, except `Ckpt.scala` itself. `graft/Bench.scala` is out of
-  * scope: its inline pipeline rebuilds are slated to fold into the
-  * registered entries (ROADMAP direction 3). */
+  * recursively, and the top-level sources directly in `graft` (`Bench.scala`,
+  * `SparkEntry.scala`, …), except `Ckpt.scala` itself. */
 class CheckpointRegistrySpec extends AnyFunSuite {
 
   /** A call with or without parens: `.localCheckpoint()`, `.localCheckpoint`,
@@ -37,10 +36,13 @@ class CheckpointRegistrySpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** Every code line under `graft/<dir>` that calls `.localCheckpoint`,
-    * skipping `Ckpt.scala`; asserts the walk found `witness`. */
+  /** Every code line under `graft/<dir>` (or, for "", directly in
+    * `graft/`) that calls `.localCheckpoint`, skipping `Ckpt.scala`;
+    * asserts the walk found `witness`. */
   private def rawSites(dir: String, witness: String): Seq[String] = {
-    val files = scalaFiles(src.resolve(dir))
+    val files =
+      if (dir.nonEmpty) scalaFiles(src.resolve(dir))
+      else scalaFiles(src).filter(_.getParent == src)
     assert(files.exists(_.getFileName.toString == witness),
       s"walk found no $witness under $src/$dir")
     files
@@ -65,6 +67,11 @@ class CheckpointRegistrySpec extends AnyFunSuite {
 
   test("no raw localCheckpoint outside the Ckpt registry in graft/tools") {
     assertNoRawSites(rawSites("tools", "Profile.scala"))
+  }
+
+  test("no raw localCheckpoint outside the Ckpt registry in graft/Bench.scala " +
+    "and the other top-level sources") {
+    assertNoRawSites(rawSites("", "Bench.scala"))
   }
 
   /** The last top-level argument of the call whose `(` sits at `open`,

@@ -463,7 +463,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("curate_incremental: stateless gates match batch; dedup/keep reconcile") {
     val d = "/root/testdata/sf0.001"
-    val inc = Pipeline.qCurateIncremental(spark, d).persist()
+    val inc = graft.SparkEntry.queries("curate_incremental")(spark, d).persist()
     val docs = graft.Tables.documents(spark, d)
     val freshCount = docs.filter(col("doc_id") % 2 === 1).count()
     assert(inc.count() == freshCount, "one verdict row per fresh doc")

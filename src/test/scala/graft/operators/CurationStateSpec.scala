@@ -14,7 +14,7 @@ import graft.streaming.StreamFixture.spark
   * frame, and (b) serving a fresh batch from the written-then-loaded
   * artifact equals the direct in-memory pipeline row for row. The driver's
   * curate_incremental hash gate additionally runs through the artifact path
-  * (qCurateIncremental writes + loads before serving). */
+  * (curate_incremental writes + loads before serving). */
 class CurationStateSpec extends AnyFunSuite {
 
   val d = "/root/testdata/sf0.001"

@@ -166,7 +166,7 @@ class GraphSpec extends AnyFunSuite {
     val nSrc = docs.select("source").distinct().count().toInt
     val vocab = docs
       .select(explode(TextOps.normWords(col("text"))).as("w")).distinct().count()
-    val out = TextOps.qCorpusDivergence(spark, d).collect()
+    val out = graft.SparkEntry.queries("corpus_divergence")(spark, d).collect()
     assert(out.length == nSrc * (nSrc - 1) / 2, "one row per unordered source pair")
     out.foreach { r =>
       assert(r.getString(0) < r.getString(1), "pairs are emitted a < b once")

@@ -62,7 +62,7 @@ class OperatorSpec extends AnyFunSuite {
     allOnes(Relational.q09ApproxDistinctChecked(spark, d), Seq("within_bound"))
     allOnes(Relational.q37ApproxPercentileChecked(spark, d), Seq("within_bound"))
     allOnes(Relational.qHllMergeChecked(spark, d), Seq("merge_equal", "within_bound"))
-    allOnes(TextOps.qHeavyHittersChecked(spark, d), Seq("count_match", "is_valid_topk"))
+    allOnes(graft.SparkEntry.queries("heavy_hitters")(spark, d), Seq("count_match", "is_valid_topk"))
   }
 
   test("ann_lsh recall@3 >= 0.8 vs exact nearest neighbor (VERDICT r01 #6)") {
@@ -191,8 +191,8 @@ class OperatorSpec extends AnyFunSuite {
   test("minhash LSH candidates recover the exact ngram-Jaccard pair set at this scale") {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Dedup.qNgramJaccard(spark, d))
-    val approx = pairs(Dedup.qMinHashLsh(spark, d))
+    val exact = pairs(graft.SparkEntry.queries("ngram_jaccard")(spark, d))
+    val approx = pairs(graft.SparkEntry.queries("minhash_lsh")(spark, d))
     // MinHash is an estimator: demand full recall of true pairs and no
     // more than a small false-positive margin at threshold 0.5.
     assert((exact -- approx).isEmpty, s"missed pairs: ${(exact -- approx).take(5)}")
@@ -234,8 +234,8 @@ class OperatorSpec extends AnyFunSuite {
   test("prefix_jaccard equals ngram_jaccard row-for-row on the corpus") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact = rows(Dedup.qNgramJaccard(spark, d))
-    val pref = rows(Dedup.qPrefixJaccard(spark, d))
+    val exact = rows(graft.SparkEntry.queries("ngram_jaccard")(spark, d))
+    val pref = rows(graft.SparkEntry.queries("prefix_jaccard")(spark, d))
     assert(exact.nonEmpty, "fixture must produce pairs or the equality is vacuous")
     assert(pref == exact,
       s"missed=${(exact -- pref).take(3)} extra=${(pref -- exact).take(3)}")
@@ -268,8 +268,8 @@ class OperatorSpec extends AnyFunSuite {
   test("md5-permutation MinHash (oracle twin) recovers the same true pairs as xxhash") {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Dedup.qNgramJaccard(spark, d))
-    val md5v = pairs(Dedup.qMinHashLshMd5(spark, d))
+    val exact = pairs(graft.SparkEntry.queries("ngram_jaccard")(spark, d))
+    val md5v = pairs(graft.SparkEntry.queries("minhash_lsh_md5")(spark, d))
     // same estimator family, different permutation hash: the portability
     // trade (hex-string min) must not change the quality bar
     assert((exact -- md5v).isEmpty, s"missed pairs: ${(exact -- md5v).take(5)}")
@@ -309,11 +309,11 @@ class OperatorSpec extends AnyFunSuite {
     // signature table finds exactly the new↔old near-dup edges the
     // full-corpus pass would, for every pair whose bands collide the same
     // way. Cross-parity pairs of the full run ARE that slice (odd = new).
-    val full = Dedup.qMinHashLshMd5(spark, d).collect()
+    val full = graft.SparkEntry.queries("minhash_lsh_md5")(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter { case (a, b, _) => (a % 2) != (b % 2) }
       .map { case (a, b, j) => if (a % 2 == 1) (a, b, j) else (b, a, j) }.toSet
-    val inc = Dedup.qMinHashIncremental(spark, d).collect()
+    val inc = graft.SparkEntry.queries("minhash_incremental")(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(inc == full,
       s"inc-only: ${(inc -- full).take(3)}; full-only: ${(full -- inc).take(3)}")
@@ -324,7 +324,7 @@ class OperatorSpec extends AnyFunSuite {
     // HOF lambdas evaluate interpreted (~35 µs/element); the signature and
     // estimate stages must stay inside whole-stage codegen. `lambdavariable`
     // in a plan marks an interpreted higher-order function.
-    val plan = Dedup.qMinHashLsh(spark, d).queryExecution.executedPlan.toString
+    val plan = graft.SparkEntry.queries("minhash_lsh")(spark, d).queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("lambdavariable"),
       s"interpreted HOF on the MinHash path:\n$plan")
     assert(plan.contains("graft_agree_count"), s"estimate not on the codegen'd kernel:\n$plan")
@@ -379,7 +379,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("cms_counts: every verdict flag is 1 — a hash match must never mask a failed CMS property") {
-    val got = graft.operators.TextOps.qCmsCounts(spark, d).collect()
+    val got = graft.SparkEntry.queries("cms_counts")(spark, d).collect()
     assert(got.length == graft.operators.TextOps.CmsQueryTerms.length)
     got.foreach { r =>
       assert(r.getAs[Int]("merge_match") == 1, s"CMS merge != direct: $r")
@@ -394,7 +394,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("cms_lookup: serving path flags are 1, unseen probes hit, and " +
     "frozen-sketch estimates == accumulate-side estimates where probes overlap") {
-    val got = graft.operators.TextOps.qCmsLookup(spark, d).collect()
+    val got = graft.SparkEntry.queries("cms_lookup")(spark, d).collect()
     assert(got.length == graft.operators.TextOps.CmsProbeTerms.length)
     got.foreach { r =>
       assert(r.getAs[Int]("over_ok") == 1, s"CMS serve underestimated: $r")
@@ -405,7 +405,7 @@ class OperatorSpec extends AnyFunSuite {
     // cross-entry agreement: terms probed by BOTH cms_counts and
     // cms_lookup must get the same merged estimate (the frozen serving
     // table is the same sketch the algebra audit accumulates)
-    val acc = graft.operators.TextOps.qCmsCounts(spark, d).collect()
+    val acc = graft.SparkEntry.queries("cms_counts")(spark, d).collect()
       .map(r => r.getAs[String]("term") -> r.getAs[Long]("est_merged")).toMap
     val shared = got.filter(r => acc.contains(r.getAs[String]("term")))
     assert(shared.nonEmpty, "probe sets should overlap on at least one term")
@@ -539,7 +539,7 @@ class OperatorSpec extends AnyFunSuite {
     // produce affected prior clusters — guards against fixture drift
     // silently turning the registered entry into a no-merge path (the
     // parity split had exactly that defect, measured affected == 0).
-    val pairs = Dedup.qNgramJaccard(spark, d).select(col("doc_a"), col("doc_b"))
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d).select(col("doc_a"), col("doc_b"))
     val priorLab = Dedup.clusterPairs(
       pairs.filter(col("doc_a") % 5 =!= 2 && col("doc_b") % 5 =!= 2))
     val deltaP = pairs.filter(col("doc_a") % 5 === 2 || col("doc_b") % 5 === 2)
@@ -1221,7 +1221,7 @@ class OperatorSpec extends AnyFunSuite {
     val dfm = tokens.distinct.groupBy(_._2).view.mapValues(_.length).toMap
     val nDocs = dl.size
     val avgdl = tokens.length.toDouble / nDocs
-    val out = TextOps.qBm25(spark, d).collect()
+    val out = graft.SparkEntry.queries("bm25_topterms")(spark, d).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val (id, term, score, rank) =
@@ -1530,7 +1530,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan shape: bm25_search top-k is TakeOrderedAndProject — no global sort") {
-    val plan = TextOps.qBm25Search(spark, d).queryExecution.executedPlan.toString
+    val plan = graft.SparkEntry.queries("bm25_search")(spark, d).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$plan")
   }
 
@@ -1711,12 +1711,12 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("lsh_eval: counts reconcile with the ngram_jaccard truth and the minhash entry") {
-    val r = Dedup.qLshEval(spark, d).collect().head
+    val r = graft.SparkEntry.queries("lsh_eval")(spark, d).collect().head
     val (nTruth, nCand, nCandHit, nEst, nEstHit) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    assert(nTruth == Dedup.qNgramJaccard(spark, d).count(),
+    assert(nTruth == graft.SparkEntry.queries("ngram_jaccard")(spark, d).count(),
       "truth side must be exactly the registered exact-Jaccard output")
-    assert(nEst == Dedup.qMinHashLshMd5(spark, d).count(),
+    assert(nEst == graft.SparkEntry.queries("minhash_lsh_md5")(spark, d).count(),
       "est side must be exactly the registered minhash entry's pairs")
     assert(nEstHit <= nEst && nEstHit <= nTruth)
     assert(nCandHit <= nCand && nCandHit <= nTruth)
@@ -1734,7 +1734,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("curation_funnel: monotone chain from total docs to the kept count") {
     val cc = Pipeline.qCorpusCurate(spark, d).persist()
-    val rows = Pipeline.qCurationFunnel(spark, d).collect()
+    val rows = graft.SparkEntry.queries("curation_funnel")(spark, d).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5))).sortBy(_._1)
     assert(rows.map(_._2).toSeq ==
@@ -1786,7 +1786,7 @@ class OperatorSpec extends AnyFunSuite {
       .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
     assert(byLabel.getOrElse(true, 0L) > 0 && byLabel.getOrElse(false, 0L) > 0,
       s"degenerate training label: $byLabel")
-    val scored = Curation.qClassifierTrainScore(spark, d)
+    val scored = graft.SparkEntry.queries("classifier_train_score")(spark, d)
     val joined = scored.join(labeled, "doc_id")
       .groupBy("label").agg(avg(col("score")).as("m"), count(lit(1)).as("n"))
       .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
@@ -1923,7 +1923,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("curation_report: per-source counts reconcile with the verdict frame and funnel") {
     val cc = Pipeline.qCorpusCurate(spark, d).persist()
-    val rows = Pipeline.qCurationReport(spark, d).collect()
+    val rows = graft.SparkEntry.queries("curation_report")(spark, d).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(8), r.getDouble(9))).toMap
     assert(rows.values.map(_._1).sum == cc.count(), "sources must partition the corpus")
     assert(rows.values.map(_._2).sum == cc.filter(col("keep")).count(),
@@ -1936,13 +1936,13 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("dedup_agreement: counts reconcile with the three registered pair entries") {
-    val rows = Dedup.qDedupAgreement(spark, d).collect()
+    val rows = graft.SparkEntry.queries("dedup_agreement")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5)))
     assert(rows.map(x => (x._1, x._2)).toSet ==
       Set(("jaccard", "simhash"), ("jaccard", "winnow"), ("simhash", "winnow")))
-    val nJac = Dedup.qNgramJaccard(spark, d).count()
-    val nSim = Dedup.qSimHashPairsMd5(spark, d).count()
+    val nJac = graft.SparkEntry.queries("ngram_jaccard")(spark, d).count()
+    val nSim = graft.SparkEntry.queries("simhash_pairs_md5")(spark, d).count()
     rows.foreach { case (ma, _, na, nb, nc, pj) =>
       if (ma == "jaccard") assert(na == nJac)
       if (ma == "simhash") assert(na == nSim)
@@ -2004,7 +2004,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("vocab_coverage: milestones are a monotone prefix of the Zipf curve") {
-    val out = TextOps.qVocabCoverage(spark, d)
+    val out = graft.SparkEntry.queries("vocab_coverage")(spark, d)
       .orderBy(col("vocab_size")).collect()
     assert(out.nonEmpty)
     // milestones present are exactly those <= |V|, in declared order

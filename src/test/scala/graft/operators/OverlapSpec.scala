@@ -46,10 +46,10 @@ class OverlapSpec extends AnyFunSuite {
   }
 
   test("KMV estimates track the exact twin within the 1/sqrt(k) error band") {
-    val exact = Overlap.qOverlapExact(spark, d).collect()
+    val exact = graft.SparkEntry.queries("overlap_exact")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
-    val est = Overlap.qOverlapKmv(spark, d).collect()
+    val est = graft.SparkEntry.queries("overlap_kmv")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
     assert(exact.keySet == est.keySet)
@@ -110,7 +110,7 @@ class OverlapSpec extends AnyFunSuite {
   test("overlap_exact: pair grain is C(sources,2); intersections bounded; Jaccard in [0,1]") {
     val docs = graft.Tables.documents(spark, d)
     val nSources = docs.select(col("source")).distinct().count().toInt
-    val rows = Overlap.qOverlapExact(spark, d).collect()
+    val rows = graft.SparkEntry.queries("overlap_exact")(spark, d).collect()
     assert(rows.length == nSources * (nSources - 1) / 2)
     rows.foreach { r =>
       val (na, nb, common, j) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))

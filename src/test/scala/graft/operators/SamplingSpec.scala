@@ -129,13 +129,13 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("canonical_select picks the max-quality member of every cluster") {
-    val clusters = Dedup.qDedupClusters(spark, d)
+    val clusters = graft.SparkEntry.queries("dedup_clusters")(spark, d)
     val quality = graft.Tables.documents(spark, d)
       .select(col("doc_id"), TextOps.qualityExpr(col("text")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val members = clusters.collect()
       .groupBy(_.getLong(1)).view.mapValues(_.map(_.getLong(0)).toSet).toMap
-    val out = Dedup.qCanonicalSelect(spark, d).collect()
+    val out = graft.SparkEntry.queries("canonical_select")(spark, d).collect()
     assert(out.map(_.getLong(0)).toSet == members.keySet, "one row per cluster")
     out.foreach { r =>
       val (cid, canon, q) = (r.getLong(0), r.getLong(1), r.getDouble(2))
@@ -251,8 +251,8 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("split_leakage accounts for every near-dup pair; cells are valid splits") {
-    val nPairs = Dedup.qNgramJaccard(spark, d).count()
-    val cells = Sampling.qSplitLeakage(spark, d).collect()
+    val nPairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d).count()
+    val cells = graft.SparkEntry.queries("split_leakage")(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getBoolean(3)))
     assert(cells.map(_._3).sum == nPairs, "cells must partition the pair table")
     val valid = Set("train", "valid", "test")
@@ -264,12 +264,12 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("cluster_split: zero near-dup leakage by construction; singletons keep the doc-keyed split") {
-    val split = Sampling.qClusterSplit(spark, d)
+    val split = graft.SparkEntry.queries("cluster_split")(spark, d)
       .select(col("doc_id"), col("cluster_key"), col("split")).persist()
     val n = graft.Tables.documents(spark, d).count()
     assert(split.count() == n, "one split row per doc")
     // THE property: both endpoints of every near-dup pair share a split
-    val pairs = Dedup.qNgramJaccard(spark, d).select(col("doc_a"), col("doc_b"))
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d).select(col("doc_a"), col("doc_b"))
     val crossSplit = pairs
       .join(split.select(col("doc_id").as("doc_a"), col("split").as("sa")), Seq("doc_a"))
       .join(split.select(col("doc_id").as("doc_b"), col("split").as("sb")), Seq("doc_b"))
@@ -310,7 +310,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("dsir_weights: bounded model table, consistent counts, smoothed ratios finite") {
-    val w = Sampling.qDsirWeights(spark, d).collect()
+    val w = graft.SparkEntry.queries("dsir_weights")(spark, d).collect()
     assert(w.length <= Sampling.DsirBuckets, "model table must stay <= B rows")
     w.foreach { r =>
       assert(r.getLong(1) <= r.getLong(2), "target grams are a subset of raw grams")
@@ -345,7 +345,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("dsir_select: deterministic contiguous top-k with non-increasing scores; plan is broadcast + TakeOrdered") {
-    val sel = Sampling.qDsirSelect(spark, d)
+    val sel = graft.SparkEntry.queries("dsir_select")(spark, d)
     val rows = sel.collect().sortBy(_.getLong(2))
     assert(rows.map(_.getLong(2)).toSeq == (1L to rows.length).toSeq, "ranks contiguous from 1")
     rows.sliding(2).foreach { case Array(a, b) =>
@@ -354,7 +354,7 @@ class SamplingSpec extends AnyFunSuite {
         "ordering must be (score desc, doc_id asc)")
       case _ => ()
     }
-    val again = Sampling.qDsirSelect(spark, d).collect().sortBy(_.getLong(2))
+    val again = graft.SparkEntry.queries("dsir_select")(spark, d).collect().sortBy(_.getLong(2))
     assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       again.map(r => (r.getLong(0), r.getDouble(1))).toSeq, "content-keyed => rerun-identical")
     val plan = sel.queryExecution.executedPlan.toString
@@ -364,7 +364,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("dsir_resample: g_score is the exact decimal sum of score and gumbel key") {
-    val rows = Sampling.qDsirResample(spark, d).collect()
+    val rows = graft.SparkEntry.queries("dsir_resample")(spark, d).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (score, gkey, gscore) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))

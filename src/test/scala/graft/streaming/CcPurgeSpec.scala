@@ -25,7 +25,7 @@ class CcPurgeSpec extends AnyFunSuite {
     val spark = StreamFixture.spark
     import spark.implicits._
 
-    val pairs = Dedup.qNgramJaccard(spark, d)
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().sortBy(p => (p._1, p._2)).toSeq
     assert(pairs.size >= 3, s"fixture needs near-dup pairs: ${pairs.size}")
@@ -96,7 +96,7 @@ class CcPurgeSpec extends AnyFunSuite {
     val spark = StreamFixture.spark
     import spark.implicits._
 
-    val pairs = Dedup.qNgramJaccard(spark, d)
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().sortBy(p => (p._1, p._2)).toSeq
     val full = Dedup.clusterPairs(pairs.toDF("doc_a", "doc_b")).collect()

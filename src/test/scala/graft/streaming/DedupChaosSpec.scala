@@ -36,7 +36,7 @@ class DedupChaosSpec extends AnyFunSuite {
     val spark = StreamFixture.spark
     import spark.implicits._
 
-    val pairs = Dedup.qNgramJaccard(spark, d)
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().sortBy(p => (p._1, p._2)).toSeq
     assert(pairs.size >= 3, s"fixture must have enough near-dup pairs: ${pairs.size}")
@@ -86,7 +86,7 @@ class DedupChaosSpec extends AnyFunSuite {
     val spark = StreamFixture.spark
     import spark.implicits._
 
-    val pairs = Dedup.qNgramJaccard(spark, d)
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().sortBy(p => (p._1, p._2)).toSeq
     val (c1, c2) = pairs.splitAt(pairs.size / 2)

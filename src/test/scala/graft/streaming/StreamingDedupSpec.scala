@@ -145,7 +145,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val pairs = Dedup.qNgramJaccard(spark, d)
+    val pairs = graft.SparkEntry.queries("ngram_jaccard")(spark, d)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().sortBy(p => (p._1, p._2)).toSeq
     assert(pairs.size >= 3, s"fixture must have enough near-dup pairs: ${pairs.size}")

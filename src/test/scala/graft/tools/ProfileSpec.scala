@@ -56,11 +56,18 @@ class ProfileSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
 
     val Left(err) = Profile.resolve(Seq("q07_agg_tpch_q1", "no_such_entry", "curation_state_build"))
-    assert(err.contains("no_such_entry: not a registered entry"), err)
-    assert(err.contains("curation_state_build: billed only inside Bench's shared pipelines"), err)
-    assert(!err.contains("q07_agg_tpch_q1"), err)
-    assert(Profile.PipelineOnly.forall(n => !Profile.catalogue.contains(n)))
+    assert(err.contains("no_such_entry: not a catalogue entry"), err)
+    assert(!err.contains("q07_agg_tpch_q1") && !err.contains("curation_state_build"), err)
     assert(Profile.run(Array("generate", d, "out", "zero")) == 2)
+  }
+
+  test("the shared artifacts resolve, and shingle_table profiles as the bench bills it") {
+    val artifacts = Seq("shingle_table", "token_table", "cms_sketch_build", "curation_state_build")
+    assert(Profile.resolve(artifacts).map(_.map(_.name)) == Right(artifacts))
+    val Seq(p) = Profile.profile(spark, Seq(d), entries("shingle_table"))
+    val Seq(r) = p.runs
+    assert(p.name == "shingle_table")
+    assert(r.jobs >= 1 && r.tasks >= 1 && r.wallS > 0, r)
   }
 
   test("generate with K = 2 doubles documents and lineitem and keeps doc_id unique") {
