@@ -242,14 +242,7 @@ object Bench {
     // passed at 53:44, r15's timed out — default to a safe ~45 min and
     // let the scheduler below drop repeat passes first, sf1 passes last.
     val deadlineS = cfg("SPARK_GRAFT_BENCH_DEADLINE_S", "2700").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(cpus)
     // warm the session (task scheduling, codegen compiler, parquet footer
     // caches) so the first timed query doesn't absorb JVM start-up costs
     spark.range(1000000).selectExpr("sum(id)").collect()

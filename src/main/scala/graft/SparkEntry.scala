@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import scala.collection.immutable.ListMap
 
-import graft.operators.{Audit, Curation, CurationState, Dedup, Graph, Layout, Multimodal, Overlap, Pipeline, Relational => R, Sampling, Similarity, TextOps}
+import graft.operators.{Audit, Curation, CurationState, Dedup, Frozen, Graph, Layout, Multimodal, Overlap, Pipeline, Relational => R, Sampling, Similarity, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -131,7 +131,7 @@ object SparkEntry {
     "token_fertility"     -> (TextOps.qTokenFertility _), // per-language chars-per-token under both tokenizers
     "bpe_pair_counts"     -> (TextOps.qBpePairCounts _),
     "bpe_merges"          -> (TextOps.qBpeMerges _), // 8 chained CTE rounds recompute every argmax + greedy merge in DuckDB (hash-green since r11); loop also pinned vs hand-computed reference in OperatorSpec
-    "bpe_tokenize"        -> (TextOps.qBpeTokenize _), // apply step oracled via the frozen segmentation artifact (bpeSegsPath); the merge loop itself is oracled by bpe_merges' chained CTEs
+    "bpe_tokenize"        -> (TextOps.qBpeTokenize _), // apply step oracled via the frozen segmentation artifact (Frozen "bpe-segs"); the merge loop itself is oracled by bpe_merges' chained CTEs
     "html_extract"        -> (TextOps.qHtmlExtract _), // web-corpus boilerplate strip + entity decode
     "q39_array_setops"    -> (TextOps.qArraySetOps _),
     "q40_range_band_join" -> (R.qRangeBandJoin _),
@@ -184,7 +184,7 @@ object SparkEntry {
     "unigram_surprisal"   -> (Curation.qUnigramSurprisal _),
     "heldout_surprisal"   -> (Curation.qHeldoutSurprisal _), // leak-free LM eval: train-split model scores the valid split
     "bigram_surprisal"    -> (Curation.qBigramSurprisal _),
-    "bigram_surprisal_scale" -> (Curation.qBigramSurprisalScaleArtifact _), // sketch cutoffs frozen to the pplCutsPath artifact; oracle recomputes scores + applies them (hash-green since r10)
+    "bigram_surprisal_scale" -> (Curation.qBigramSurprisalScaleArtifact _), // sketch cutoffs frozen to the "ppl-cuts-bigram" Frozen artifact; oracle recomputes scores + applies them (hash-green since r10)
     "sequence_pack"       -> (Curation.qSequencePack _),
     "pack_assemble"       -> (Curation.qPackAssemble _), // packed bins -> actual training examples
     "classifier_score"    -> (Curation.qClassifierScore _), // broadcast-model linear scoring
@@ -228,7 +228,7 @@ object SparkEntry {
     reg(CorpusCurate),
     reg(CurationFunnel), // per-gate drop accounting over the curation keep conjunction
     reg(CurationReport), // per-source gate-flag counts + keep rate (the dashboard grain)
-    "corpus_curate_scale" -> (Pipeline.qCorpusCurateScale _), // sketch cutoffs frozen to this entry's own pplCutsPath("curate") artifact; oracle recomputes scores + gating (hash-green since r10)
+    "corpus_curate_scale" -> (Pipeline.qCorpusCurateScale _), // sketch cutoffs frozen to this entry's own "ppl-cuts-curate" Frozen artifact; oracle recomputes scores + gating (hash-green since r10)
     reg(CurationStateReport), // frozen-artifact scalar audit (counts + tercile cutoffs), hash-gated
     reg(CurateIncremental), // fresh batch gated by FROZEN state-corpus statistics (no state rescan)
     // ---- graph analytics (iterative join+agg rounds) ----
@@ -752,7 +752,7 @@ object SparkEntry {
     * from the engine under test; candidate generation, the exact cosine
     * kernel, and the top-3 ranking are recomputed by DuckDB. */
   private lazy val ANN_LSH_SQL =
-    s"""WITH eb AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "lsh")}/*.parquet')),
+    s"""WITH eb AS (SELECT * FROM read_parquet('${Frozen.path("ann-lsh", VerifySf)}/*.parquet')),
        |e AS (SELECT vec_id, embedding AS v FROM embeddings),
        |qb AS (SELECT vec_id AS query_id, tbl, bucket FROM eb WHERE vec_id < 100),
        |cand AS (SELECT DISTINCT query_id, eb.vec_id AS nn_id
@@ -767,8 +767,8 @@ object SparkEntry {
        |WHERE rn <= 3""".stripMargin
 
   private lazy val ANN_IVF_SQL =
-    s"""WITH cells AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "ivf-cells")}/*.parquet')),
-       |probes AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "ivf-probes")}/*.parquet')),
+    s"""WITH cells AS (SELECT * FROM read_parquet('${Frozen.path("ann-ivf-cells", VerifySf)}/*.parquet')),
+       |probes AS (SELECT * FROM read_parquet('${Frozen.path("ann-ivf-probes", VerifySf)}/*.parquet')),
        |e AS (SELECT vec_id, embedding AS v FROM embeddings),
        |cand AS (SELECT query_id, vec_id AS nn_id
        |         FROM cells JOIN probes USING (cell) WHERE vec_id <> query_id),
@@ -782,7 +782,7 @@ object SparkEntry {
        |WHERE rn <= 3""".stripMargin
 
   private lazy val ANN_2LEVEL_SQL =
-    s"""WITH cells AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "2level-cells")}/*.parquet')),
+    s"""WITH cells AS (SELECT * FROM read_parquet('${Frozen.path("ann-2level-cells", VerifySf)}/*.parquet')),
        |e AS (SELECT vec_id, embedding AS v FROM embeddings),
        |qb AS (SELECT vec_id AS query_id, coarse, fine FROM cells WHERE vec_id < 100),
        |cand AS (SELECT DISTINCT query_id, cells.vec_id AS nn_id
@@ -807,8 +807,8 @@ object SparkEntry {
     val methodSql = Seq(
       "lsh" -> ANN_LSH_SQL,
       "ivf" -> ANN_IVF_SQL,
-      "pq" -> annShortlistRerankSql(Similarity.annArtifactPath(VerifySf, "pq-shortlist")),
-      "ivfpq" -> annShortlistRerankSql(Similarity.annArtifactPath(VerifySf, "ivfpq-shortlist")),
+      "pq" -> annShortlistRerankSql(Frozen.path("ann-pq-shortlist", VerifySf)),
+      "ivfpq" -> annShortlistRerankSql(Frozen.path("ann-ivfpq-shortlist", VerifySf)),
       "2level" -> ANN_2LEVEL_SQL)
       .map { case (m, sql) =>
         s"SELECT '$m' AS method, query_id, nn_id FROM (\n$sql\n)" }
@@ -838,7 +838,7 @@ object SparkEntry {
     * pair generation + the exact cosine threshold gate over the frozen
     * assignment table. */
   private lazy val EMBEDDING_DEDUP_2LEVEL_SQL =
-    s"""WITH asg AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "dedup2l")}/*.parquet')),
+    s"""WITH asg AS (SELECT * FROM read_parquet('${Frozen.path("ann-dedup2l", VerifySf)}/*.parquet')),
        |e AS (SELECT vec_id, embedding AS v FROM embeddings),
        |cp AS (SELECT DISTINCT x.vec_id AS ia, y.vec_id AS ib
        |       FROM asg x JOIN asg y
@@ -851,7 +851,7 @@ object SparkEntry {
 
   /** ppl-gate CTE bodies for [[corpusCurateSql]]: the exact ntile tercile
     * (corpus_curate) and the frozen-sketch-cutoff form reading the
-    * pplCutsPath artifact (corpus_curate_scale — only the sketch boundary
+    * Frozen "ppl-cuts-curate" artifact (corpus_curate_scale — only the sketch boundary
     * comes from the engine under test; DuckDB recomputes the scores and
     * the whole gating algebra). */
   private val PPL_EXACT_CTE =
@@ -865,7 +865,7 @@ object SparkEntry {
       |         WHEN avg_surprisal <= cut2 THEN 'middle'
       |         ELSE 'tail' END AS ppl_bucket
       |  FROM pagg CROSS JOIN (SELECT cut1, cut2
-      |    FROM read_parquet('${Curation.pplCutsPath(VerifySf, "curate")}/*.parquet'))""".stripMargin
+      |    FROM read_parquet('${Frozen.path("ppl-cuts-curate", VerifySf)}/*.parquet'))""".stripMargin
 
   private def corpusCurateSql(pplCte: String) =
     s"""WITH t AS (SELECT doc_id, text, source, $WORDS AS words FROM documents),
@@ -1080,7 +1080,7 @@ object SparkEntry {
     // (r11 VERDICT task 1; sketch-check pattern shared by q37/q43/
     // heavy_hitters).
     "q09_approx_distinct" ->
-      s"""WITH fz AS (SELECT * FROM read_parquet('${R.sketchArtifactPath(VerifySf, "q09")}/*.parquet')),
+      s"""WITH fz AS (SELECT * FROM read_parquet('${Frozen.path("sketch-q09", VerifySf)}/*.parquet')),
          |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
          |       FROM events GROUP BY 1),
          |j AS (SELECT fz.event_type, approx_users, exact_users,
@@ -1096,7 +1096,7 @@ object SparkEntry {
     // value x and the distance-from-target algebra — identical double
     // expression shapes on both sides.
     "q37_approx_percentile" ->
-      s"""WITH fz AS (SELECT * FROM read_parquet('${R.sketchArtifactPath(VerifySf, "q37")}/*.parquet')),
+      s"""WITH fz AS (SELECT * FROM read_parquet('${Frozen.path("sketch-q37", VerifySf)}/*.parquet')),
          |j AS (SELECT e.event_type, CAST(e.value AS DOUBLE) AS v, p50_approx, p95_approx
          |      FROM events e JOIN fz USING (event_type)),
          |a AS (SELECT event_type, p50_approx, p95_approx, count(*) AS n,
@@ -1308,7 +1308,7 @@ object SparkEntry {
          |LEFT JOIN inter ON inter.source_a = ca.source AND inter.source_b = cb.source""".stripMargin,
 
     // overlap_kmv twin (r10 VERDICT task 1): the per-source xxhash64
-    // shingle-hash table is frozen (Overlap.overlapArtifactPath); DuckDB
+    // shingle-hash table is frozen (Frozen "overlap-hashes"); DuckDB
     // independently recomputes the k-minimum selection (unsigned 64-bit
     // order == ORDER BY (h < 0), h), the per-source and pairwise-union
     // cardinality estimates ((k-1)/U_k with U_k as a (0,1) fraction —
@@ -1318,7 +1318,7 @@ object SparkEntry {
     // cases m/512*1e6 can hit).
     "overlap_kmv" -> kmvEstimateSql(
       s"""SELECT DISTINCT source, h
-         |  FROM read_parquet('${Overlap.overlapArtifactPath(VerifySf)}/*.parquet')""".stripMargin),
+         |  FROM read_parquet('${Frozen.path("overlap-hashes", VerifySf)}/*.parquet')""".stripMargin),
 
     // overlap_purge twin (r16, VERDICT r15 task 4): the SAME k-min +
     // pairwise-estimate recomputation as overlap_kmv, over the LIVE rows
@@ -1328,7 +1328,7 @@ object SparkEntry {
     // must equal exactly.
     "overlap_purge" -> kmvEstimateSql(
       s"""SELECT DISTINCT source, h
-         |  FROM read_parquet('${Overlap.overlapPurgeArtifactPath(VerifySf)}/*.parquet')
+         |  FROM read_parquet('${Frozen.path("overlap-purge-hashes", VerifySf)}/*.parquet')
          |  WHERE live""".stripMargin),
 
     "minhash_lsh_md5" ->
@@ -1396,7 +1396,7 @@ object SparkEntry {
          |SELECT doc_id, simhash FROM sig""".stripMargin,
 
     // simhash twin (r10 VERDICT task 2): the per-(doc, token-occurrence)
-    // xxhash64 BAG is frozen (Dedup.dedupArtifactPath "simhash-toks");
+    // xxhash64 BAG is frozen (Frozen "dedup-simhash-toks");
     // DuckDB recomputes the 64 signed vote sums (arithmetic >> + mask,
     // the simhash_pairs-verified semantics) and assembles the two's-
     // complement BIGINT signature — bit 63 as the explicit Long.MinValue
@@ -1410,7 +1410,7 @@ object SparkEntry {
       val asm = (0 until 63).map(j => s"CASE WHEN b$j > 0 THEN ${1L << j} ELSE 0 END")
         .mkString(" +\n|  ") + " +\n|  CASE WHEN b63 > 0 THEN -9223372036854775807 - 1 ELSE 0 END"
       s"""WITH h AS (SELECT doc_id, h
-         |  FROM read_parquet('${Dedup.dedupArtifactPath(VerifySf, "simhash-toks")}/*.parquet')),
+         |  FROM read_parquet('${Frozen.path("dedup-simhash-toks", VerifySf)}/*.parquet')),
          |v AS (SELECT doc_id,
          |    $votes
          |  FROM h GROUP BY doc_id)
@@ -1424,13 +1424,13 @@ object SparkEntry {
     "winnow_md5" -> WINNOW_MD5_SQL,
 
     // winnow_fingerprint twin (r10 VERDICT task 2): the per-(doc, pos)
-    // k-gram xxhash64 table is frozen (TextOps.textArtifactPath
-    // "winnow-kgrams"); DuckDB recomputes the sliding-window minimum
+    // k-gram xxhash64 table is frozen (Frozen
+    // "text-winnow-kgrams"); DuckDB recomputes the sliding-window minimum
     // (same ROWS frame over the same pos order) and the distinct. The
     // md5 twin (winnow_md5) pins the k-gram construction portably.
     "winnow_fingerprint" ->
       s"""WITH kg AS (SELECT doc_id, pos, h
-         |  FROM read_parquet('${TextOps.textArtifactPath(VerifySf, "winnow-kgrams")}/*.parquet')),
+         |  FROM read_parquet('${Frozen.path("text-winnow-kgrams", VerifySf)}/*.parquet')),
          |mn AS (SELECT doc_id,
          |         min(h) OVER (PARTITION BY doc_id ORDER BY pos
          |           ROWS BETWEEN CURRENT ROW AND ${TextOps.WinnowW - 1} FOLLOWING) AS fp
@@ -2043,7 +2043,7 @@ object SparkEntry {
     // tie-tolerant top-k validity: every selected term's exact count >=
     // the cutoff).
     "heavy_hitters" ->
-      s"""WITH fz AS (SELECT * FROM read_parquet('${TextOps.textArtifactPath(VerifySf, "hh-top")}/*.parquet')),
+      s"""WITH fz AS (SELECT * FROM read_parquet('${Frozen.path("text-hh-top", VerifySf)}/*.parquet')),
          |tok AS (SELECT unnest($WORDS) AS term FROM documents),
          |c AS (SELECT term, count(*) AS exact_n FROM tok GROUP BY 1),
          |k AS (SELECT min(exact_n) AS k10 FROM
@@ -2213,13 +2213,13 @@ object SparkEntry {
            |FROM t GROUP BY lang""".stripMargin,
 
     // The apply-step twin reads the SAME frozen segmentation parquet the
-    // Spark entry writes and serves from (TextOps.bpeSegsPath): the merge
+    // Spark entry writes and serves from (Frozen "bpe-segs"): the merge
     // loop itself is iterative (bpe_merges, rows-only), but everything
     // downstream of it — the salted vocab join + per-doc aggregation — is
     // hash-gated here. Path is pinned to the driver's verify SF (0.01).
     "bpe_tokenize" ->
       s"""WITH segs AS (SELECT w, n_pieces, saved
-         |  FROM read_parquet('${TextOps.bpeSegsPath(VerifySf)}/*.parquet')),
+         |  FROM read_parquet('${Frozen.path("bpe-segs", VerifySf)}/*.parquet')),
          |t AS (SELECT doc_id, unnest($WORDS) AS w FROM documents),
          |tt AS (SELECT doc_id, w FROM t WHERE len(w) > 0)
          |SELECT doc_id, count(*) AS n_words,
@@ -2548,8 +2548,8 @@ object SparkEntry {
     // 0.5 threshold are recomputed by DuckDB. (The md5 twin additionally
     // verifies signature CONSTRUCTION with a portable hash.)
     "minhash_lsh" ->
-      s"""WITH sg AS (SELECT * FROM read_parquet('${Dedup.dedupArtifactPath(VerifySf, "minhash-sigs")}/*.parquet')),
-         |bk AS (SELECT * FROM read_parquet('${Dedup.dedupArtifactPath(VerifySf, "minhash-buckets")}/*.parquet')),
+      s"""WITH sg AS (SELECT * FROM read_parquet('${Frozen.path("dedup-minhash-sigs", VerifySf)}/*.parquet')),
+         |bk AS (SELECT * FROM read_parquet('${Frozen.path("dedup-minhash-buckets", VerifySf)}/*.parquet')),
          |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |         FROM bk a JOIN bk b
          |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -2565,7 +2565,7 @@ object SparkEntry {
     // (arithmetic shift + mask — semantics verified identical in both
     // engines), the banded join, hamming and the <=6 gate are recomputed.
     "simhash_pairs" ->
-      s"""WITH sg AS (SELECT * FROM read_parquet('${Dedup.dedupArtifactPath(VerifySf, "simhash-sigs")}/*.parquet')),
+      s"""WITH sg AS (SELECT * FROM read_parquet('${Frozen.path("dedup-simhash-sigs", VerifySf)}/*.parquet')),
          |ch AS (SELECT doc_id, simhash, c AS chunk,
          |         (simhash >> (c * 16)) & 65535 AS ckey
          |       FROM sg CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c))
@@ -2578,8 +2578,8 @@ object SparkEntry {
     // PQ / IVF-PQ twins: the ADC shortlist is the sketch boundary —
     // frozen to parquet; the oracle recomputes the exact-cosine re-rank
     // and the top-3 independently (annShortlistRerankSql).
-    "ann_pq" -> annShortlistRerankSql(Similarity.annArtifactPath(VerifySf, "pq-shortlist")),
-    "ann_ivfpq" -> annShortlistRerankSql(Similarity.annArtifactPath(VerifySf, "ivfpq-shortlist")),
+    "ann_pq" -> annShortlistRerankSql(Frozen.path("ann-pq-shortlist", VerifySf)),
+    "ann_ivfpq" -> annShortlistRerankSql(Frozen.path("ann-ivfpq-shortlist", VerifySf)),
 
     // two-level quantizer twins: the (vec_id, coarse, fine[, rk])
     // assignment is frozen; candidate generation, the exact cosine kernel
@@ -2613,7 +2613,7 @@ object SparkEntry {
     // downstream — cosine gate, deterministic negative draw, margins —
     // is recomputed by the oracle exactly as in triplet_mine.
     "triplet_mine_scale" ->
-      s"""WITH asg AS (SELECT * FROM read_parquet('${Similarity.annArtifactPath(VerifySf, "dedup2l")}/*.parquet')),
+      s"""WITH asg AS (SELECT * FROM read_parquet('${Frozen.path("ann-dedup2l", VerifySf)}/*.parquet')),
          |e AS (SELECT vec_id, embedding AS v FROM embeddings),
          |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
          |cp AS (SELECT DISTINCT x.vec_id AS ia, y.vec_id AS ib
@@ -2641,7 +2641,7 @@ object SparkEntry {
          |         JOIN e nv ON d2.neg_id = nv.vec_id""".stripMargin,
 
     // ann_lsh / ann_ivf twins read the frozen bucket/cell-assignment
-    // parquet the Spark entries write (Similarity.annArtifactPath): the
+    // parquet the Spark entries write (Frozen "ann-<which>"): the
     // hash/quantizer assignment is taken from the engine under test,
     // candidate generation + the exact cosine kernel + the top-3 ranking
     // are recomputed independently. Paths pinned to the verify SF (0.01).
@@ -2917,14 +2917,14 @@ object SparkEntry {
 
     // The scale twin recomputes scores INDEPENDENTLY and applies the
     // frozen percentile_approx cutoffs from the parquet artifact the
-    // Spark entry wrote (Curation.pplCutsPath; the bpe_tokenize pattern —
+    // Spark entry wrote (Frozen "ppl-cuts-bigram"; the bpe_tokenize pattern —
     // only the sketch boundary itself is taken from the engine under
     // test, everything downstream is verified). Path pinned to the
     // driver's verify SF (0.01).
     "bigram_surprisal_scale" ->
       s"""WITH $BIGRAM_SCORES_CTES,
          |cut AS (SELECT cut1, cut2
-         |  FROM read_parquet('${Curation.pplCutsPath(VerifySf, "bigram")}/*.parquet'))
+         |  FROM read_parquet('${Frozen.path("ppl-cuts-bigram", VerifySf)}/*.parquet'))
          |SELECT doc_id, n_bigrams, avg_surprisal,
          |  CASE WHEN avg_surprisal <= cut1 THEN 'head'
          |       WHEN avg_surprisal <= cut2 THEN 'middle'
@@ -3417,7 +3417,7 @@ object SparkEntry {
     // register-wise max, so the per-day rollup must reproduce the one-pass
     // sketch) and the 5% relative-error bound (the q09 pattern).
     "q43_hll_sketch_merge" ->
-      s"""WITH fz AS (SELECT * FROM read_parquet('${R.sketchArtifactPath(VerifySf, "q43")}/*.parquet')),
+      s"""WITH fz AS (SELECT * FROM read_parquet('${Frozen.path("sketch-q43", VerifySf)}/*.parquet')),
          |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
          |       FROM events GROUP BY 1),
          |j AS (SELECT fz.event_type, merged_distinct, direct_distinct, exact_users,
@@ -3658,14 +3658,14 @@ object SparkEntry {
         |FROM documents""".stripMargin,
 
     // media_resize twin (r10 VERDICT task 7): decoded input dims frozen
-    // (Multimodal.mediaArtifactPath "resize-in" — a REAL ImageIO/
+    // (Frozen "media-resize-in" — a REAL ImageIO/
     // AudioSystem decode pass on executors); DuckDB recomputes the
     // aspect-keeping box arithmetic. floor() == Scala's positive .toInt
     // truncation; the s >= 1 passthrough keeps decoded dims verbatim;
     // audio (and degenerate zero-dim payloads) pass through.
     "media_resize" ->
       s"""WITH f AS (SELECT asset_id, media_type, width AS w0, height AS h0, n_frames
-         |  FROM read_parquet('${Multimodal.mediaArtifactPath(VerifySf, "resize-in")}/*.parquet')),
+         |  FROM read_parquet('${Frozen.path("media-resize-in", VerifySf)}/*.parquet')),
          |sc AS (SELECT asset_id, media_type, w0, h0, n_frames,
          |         least(1.0, least(320.0 / w0, 240.0 / h0)) AS s
          |       FROM f WHERE media_type <> 'audio' AND w0 > 0 AND h0 > 0)
@@ -3686,7 +3686,7 @@ object SparkEntry {
     // recomputed by DuckDB from the same parquet.
     "media_report" ->
       s"""WITH f AS (SELECT *
-         |  FROM read_parquet('${Multimodal.mediaArtifactPath(VerifySf, "features")}/*.parquet'))
+         |  FROM read_parquet('${Frozen.path("media-features", VerifySf)}/*.parquet'))
          |SELECT media_type,
          |  count(*) AS n_assets,
          |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
@@ -3704,7 +3704,7 @@ object SparkEntry {
     // boundary content, putting the codec OUTPUT under the driver gate.
     "media_features_check" ->
       s"""WITH f AS (SELECT *
-         |  FROM read_parquet('${Multimodal.mediaArtifactPath(VerifySf, "features-check")}/*.parquet'))
+         |  FROM read_parquet('${Frozen.path("media-features-check", VerifySf)}/*.parquet'))
          |SELECT media_type,
          |  count(*) AS n_assets,
          |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
@@ -3717,7 +3717,7 @@ object SparkEntry {
     // the frozen per-frame table the entry wrote.
     "media_frames_check" ->
       s"""WITH f AS (SELECT *
-         |  FROM read_parquet('${Multimodal.mediaArtifactPath(VerifySf, "frames-check")}/*.parquet'))
+         |  FROM read_parquet('${Frozen.path("media-frames-check", VerifySf)}/*.parquet'))
          |SELECT asset_id,
          |  count(*) AS n_frames_sampled,
          |  CAST(sum(frame_bytes) AS BIGINT) AS total_frame_bytes,
@@ -3733,7 +3733,7 @@ object SparkEntry {
     // lands exactly on the arithmetic's positions for every asset.
     "media_frame_audit" ->
       s"""WITH f AS (SELECT asset_id, media_type, n_frames
-         |  FROM read_parquet('${Multimodal.mediaArtifactPath(VerifySf, "frames-in")}/*.parquet')),
+         |  FROM read_parquet('${Frozen.path("media-frames-in", VerifySf)}/*.parquet')),
          |n AS (SELECT asset_id, media_type, n_frames,
          |        CASE media_type
          |          WHEN 'image' THEN 1

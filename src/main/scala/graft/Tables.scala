@@ -10,6 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `PushedFilters` / `ReadSchema`).
   */
 object Tables {
+  /** The `local[cpus]` session the driver mains (Bench, Verify, Profile)
+    * run on: `cpus` shuffle partitions, UTC session time, nanos-as-long
+    * parquet (see [[eventsWithTs]]), no UI, WARN logging. */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 

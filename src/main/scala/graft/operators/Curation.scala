@@ -639,22 +639,6 @@ object Curation {
   def bigramSurprisalScale(docs: DataFrame): DataFrame =
     bigramSurprisalScaleFrom(tokens(docs))
 
-  /** Frozen-cutoff location for a data directory — shared verbatim with
-    * the DuckDB oracle's read_parquet (the bpeSegsPath pattern): the
-    * sketch cutoffs are the ONE engine-specific piece of the scale form,
-    * so the registered entry freezes them and the oracle independently
-    * recomputes everything else (scores, bucketing algebra) and applies
-    * the same frozen cuts — rows-only → hash-green.
-    *
-    * Keyed PER ENTRY (`which`), not shared (r10 ADVICE): two entries
-    * overwriting one path would make the first entry's oracle depend on
-    * percentile_approx being bit-stable across separately-built token
-    * plans AND on driver execution order — each entry now freezes its own
-    * boundary and its oracle reads exactly the artifact its Spark run
-    * wrote. */
-  def pplCutsPath(d: String, which: String): String =
-    s"/tmp/graft-ppl-cuts-$which/" + new java.io.File(d).getName
-
   /** Registered scale entry: [[bigramSurprisalScaleFrom]] with the
     * percentile_approx cutoffs round-tripped through the parquet artifact
     * both engines read. */
@@ -663,18 +647,27 @@ object Curation {
 
   /** See [[qBigramSurprisalScaleArtifact]]; takes a prebuilt token table
     * plus the per-entry artifact key (corpus_curate_scale threads its
-    * shared token table and its own key). */
+    * shared token table and its own key).
+    *
+    * The sketch cutoffs are the ONE engine-specific piece of the scale
+    * form, so they freeze to [[Frozen]] "ppl-cuts-<which>" and the oracle
+    * independently recomputes everything else (scores, bucketing algebra)
+    * and applies the same frozen cuts — rows-only → hash-green. Keyed PER
+    * ENTRY (`which`), not shared (r10 ADVICE): two entries overwriting one
+    * path would make the first entry's oracle depend on percentile_approx
+    * being bit-stable across separately-built token plans AND on driver
+    * execution order — each entry freezes its own boundary and its oracle
+    * reads exactly the artifact its Spark run wrote. */
   def bigramSurprisalScaleArtifactFrom(s: SparkSession, d: String,
                                        toks: DataFrame, which: String): DataFrame = {
     val scores = bigramScores(toks).persist()
-    val cutsPath = pplCutsPath(d, which)
-    scores.agg(
+    val cuts = Frozen(scores.agg(
         percentile_approx(col("avg_surprisal"),
           array(lit(1.0 / 3), lit(2.0 / 3)), lit(10000)).as("cuts"))
       .select(element_at(col("cuts"), 1).as("cut1"),
-        element_at(col("cuts"), 2).as("cut2"))
-      .write.mode("overwrite").parquet(cutsPath)
-    scores.crossJoin(broadcast(s.read.parquet(cutsPath)))
+        element_at(col("cuts"), 2).as("cut2")),
+      Frozen.path(s"ppl-cuts-$which", d))
+    scores.crossJoin(broadcast(cuts))
       .select(col("doc_id"), col("n_bigrams"), col("avg_surprisal"),
         when(col("avg_surprisal") <= col("cut1"), "head")
           .when(col("avg_surprisal") <= col("cut2"), "middle")

@@ -268,9 +268,17 @@ object Dedup {
       iter += 1
       if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"[cc] round $iter sum=$curSum")
     }
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
+    withClusterSizes(labels, "id", "label")
+  }
+
+  /** (doc_id, cluster_id, cluster_size) from a labeling whose document
+    * and cluster columns are `doc` and `cluster`: the labeling joined to
+    * its per-cluster member counts. */
+  private def withClusterSizes(labels: DataFrame, doc: String = "doc_id",
+      cluster: String = "cluster_id"): DataFrame = {
+    val sizes = labels.groupBy(col(cluster)).agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, cluster)
+      .select(col(doc).as("doc_id"), col(cluster).as("cluster_id"), col("cluster_size"))
   }
 
   /** Canonical-document selection: for each near-dup cluster, keep the
@@ -377,16 +385,13 @@ object Dedup {
     * fold == full-recompute proof. `pairTable` is the ngram_jaccard
     * artifact; the state table lands under `d`'s artifact path. */
   def dedupClustersMaintain(pairTable: DataFrame, d: String): DataFrame = {
-    val s = pairTable.sparkSession
     val pairs = Ckpt.local(
       pairTable.select(col("doc_a"), col("doc_b")), Ckpt.PairGraphSized)
     val prior = clusterPairs(
         pairs.filter(col("doc_a") % 5 =!= 2 && col("doc_b") % 5 =!= 2))
       .select(col("doc_id"), col("cluster_id"))
-    val statePath = dedupArtifactPath(d, "ccstate")
-    prior.write.mode("overwrite").parquet(statePath)
     maintainClusters(
-      s.read.parquet(statePath),
+      Frozen(prior, Frozen.path("dedup-ccstate", d)),
       Ckpt.state(pairs.filter(col("doc_a") % 5 === 2 || col("doc_b") % 5 === 2),
         Ckpt.BatchSized))
   }
@@ -429,10 +434,7 @@ object Dedup {
       Ckpt.BatchSized)
     val untouched = prior.join(affected, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
-    val labels = untouched.union(relabeled)
-    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+    withClusterSizes(untouched.union(relabeled))
   }
 
   /** Streaming connected-components maintenance — the foreachBatch sink
@@ -458,11 +460,7 @@ object Dedup {
           .select(col("doc_id"), col("cluster_id")), Ckpt.PairGraphSized)
     }
     /** Current labeling with sizes — the serve-side read. */
-    def serve(): DataFrame = {
-      val sizes = state.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-      state.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-    }
+    def serve(): DataFrame = withClusterSizes(state)
   }
 
   /** Crash-safe PERSISTED form of [[ClusterMaintainer]] (r14, VERDICT r13
@@ -577,12 +575,7 @@ object Dedup {
       ()
     }
     /** Current labeling with sizes, read from the committed state. */
-    def serve(): DataFrame = {
-      val state = loadState()
-      val sizes = state.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-      state.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-    }
+    def serve(): DataFrame = withClusterSizes(loadState())
   }
 
   /** Edit-distance verification (q38) over the near-dup CANDIDATE pairs —
@@ -827,7 +820,7 @@ object Dedup {
     * partials + compaction. */
   def buildGramServeState(s: SparkSession, d: String): (String, String) = {
     val prior = substringInjectedDocs(s, d).filter(col("doc_id") % 5 =!= 2)
-    val statePath = dedupArtifactPath(d, "gramidx")
+    val statePath = Frozen.path("dedup-gramidx", d)
     deleteRecursively(new java.io.File(statePath))
     gramIndexSink(statePath)(prior.filter(col("doc_id") % 5 <= 1), 0L)
     gramIndexSink(statePath)(prior.filter(col("doc_id") % 5 === 3), 1L)
@@ -924,7 +917,7 @@ object Dedup {
     * Returns the state path. */
   def buildRefGramState(s: SparkSession, d: String): String = {
     val prior = substringInjectedDocs(s, d).filter(col("doc_id") % 5 =!= 2)
-    val statePath = dedupArtifactPath(d, "refgramidx")
+    val statePath = Frozen.path("dedup-refgramidx", d)
     deleteRecursively(new java.io.File(statePath))
     val pub = lit("publish")
     refGramIndexSink(statePath)(
@@ -1099,22 +1092,13 @@ object Dedup {
         array((0 until MinHashPerms).map(p => col(s"m$p")): _*).as("sig"))
   }
 
+  // Signature/bucket tables freeze as [[Frozen]] "dedup-<which>": the
+  // xxhash64-derived values are the engine-specific piece; the oracle
+  // recomputes banding joins / agreement / hamming from the frozen tables.
+
   /** (doc_id, band, bkey) rows: band b's key hashes signature rows
     * 4b..4b+3. Exploded + codegen'd (top-level xxhash64 projection), not a
     * per-row HOF. */
-  /** Frozen-artifact location for signature/bucket tables — shared
-    * verbatim with the DuckDB twins (the annArtifactPath pattern): the
-    * xxhash64-derived values are the engine-specific piece; the oracle
-    * recomputes banding joins / agreement / hamming from the frozen
-    * tables. */
-  def dedupArtifactPath(d: String, which: String): String =
-    s"/tmp/graft-dedup-$which/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
   def bandKeyTable(sigs: DataFrame): DataFrame = {
     val rows = MinHashPerms / LshBands
     sigs
@@ -1146,11 +1130,11 @@ object Dedup {
     * `d`'s artifact path so the DuckDB twin verifies everything downstream
     * of the xxhash values. */
   def minHashLshFrom(ex: DataFrame, d: String): DataFrame = {
-    // no persist on the signature job: its single consumer is the freeze()
+    // no persist on the signature job: its single consumer is the Frozen
     // write — every downstream read comes from the re-loaded frozen parquet,
     // so a cached copy would live (unused) for the session (r10 ADVICE)
-    val sigs = freeze(minhashSigs(ex), dedupArtifactPath(d, "minhash-sigs"))
-    val buckets = freeze(bandKeyTable(sigs), dedupArtifactPath(d, "minhash-buckets"))
+    val sigs = Frozen(minhashSigs(ex), Frozen.path("dedup-minhash-sigs", d))
+    val buckets = Frozen(bandKeyTable(sigs), Frozen.path("dedup-minhash-buckets", d))
     minHashLshFromParts(sigs, buckets)
   }
 
@@ -1386,7 +1370,7 @@ object Dedup {
     val h0 = documents(s, d)
       .select(col("doc_id"), explode(normWords(col("text"))).as("w"))
       .select(col("doc_id"), xxhash64(col("w")).as("h"))
-    simHashFromTokenHashes(freeze(h0, dedupArtifactPath(d, "simhash-toks")))
+    simHashFromTokenHashes(Frozen(h0, Frozen.path("dedup-simhash-toks", d)))
   }
 
   /** Vote sums + bit assembly over an explicit (doc_id, h) token-hash
@@ -1623,7 +1607,7 @@ object Dedup {
   def qSimHashPairs(s: SparkSession, d: String): DataFrame =
     // signatures frozen so the DuckDB twin recomputes chunking, the banded
     // join, hamming and the threshold from the same values
-    simHashPairsFromSigs(freeze(qSimHash(s, d), dedupArtifactPath(d, "simhash-sigs")))
+    simHashPairsFromSigs(Frozen(qSimHash(s, d), Frozen.path("dedup-simhash-sigs", d)))
 
   /** Banded pair generation + hamming gate over an explicit signature
     * table. */

@@ -385,20 +385,13 @@ object Multimodal {
 
   // ------------------------------------------------ frozen decode boundary
 
-  /** Frozen-artifact location for the decode boundary — shared verbatim
-    * with the DuckDB twins (the annArtifactPath pattern): decode itself
-    * cannot run in DuckDB, so the per-asset DECODED table is the frozen
-    * boundary and everything downstream of it (resize-box arithmetic,
-    * per-type aggregation algebra) is recomputed independently by the
-    * oracle. The decode stays pinned by OperatorSpec's deterministic-
-    * checksum and distributed==local equality tests. */
-  def mediaArtifactPath(d: String, which: String): String =
-    s"/tmp/graft-media-$which/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
+  // The decode boundary freezes as [[Frozen]] "media-<which>", shared
+  // verbatim with the DuckDB twins: decode itself cannot run in DuckDB, so
+  // the per-asset DECODED table is the frozen boundary and everything
+  // downstream of it (resize-box arithmetic, per-type aggregation
+  // algebra) is recomputed independently by the oracle. The decode stays
+  // pinned by OperatorSpec's deterministic-checksum and
+  // distributed==local equality tests.
 
   /** Image dimensions via the codec's HEADER parse — `ImageReader
     * .getWidth/getHeight` read the PNG IHDR without rasterizing a single
@@ -459,10 +452,10 @@ object Multimodal {
   def qMediaResize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val assets = mediaFromDocuments(s, d)
-    freeze(
+    Frozen(
       assets.mapPartitions(_.map(dimsOnly))
         .toDF("asset_id", "media_type", "width", "height", "n_frames"),
-      mediaArtifactPath(d, "resize-in"))
+      Frozen.path("media-resize-in", d))
     resize(assets, 320, 240).toDF().drop("content")
   }
 
@@ -470,15 +463,15 @@ object Multimodal {
     * report a media-curation run ships (asset counts, payload mass,
     * frame totals, decoded-dimension envelope, order-independent decoded-
     * content checksum). The registered entry freezes the decoded table
-    * ([[mediaArtifactPath]] "features") and aggregates the loaded copy;
+    * ([[Frozen]] "media-features") and aggregates the loaded copy;
     * the DuckDB twin recomputes the whole aggregation from the same
     * parquet — the downstream algebra of the media family is hash-gated
     * even though the decode boundary itself cannot run in SQL. Checksum
     * travels as decimal(38,0)-summed STRING (the release_manifest
     * convention: order/partitioning-independent, engine-portable). */
   def qMediaReport(s: SparkSession, d: String): DataFrame = {
-    val frozen = freeze(extractFeatures(mediaFromDocuments(s, d)).toDF(),
-      mediaArtifactPath(d, "features"))
+    val frozen = Frozen(extractFeatures(mediaFromDocuments(s, d)).toDF(),
+      Frozen.path("media-features", d))
     frozen.groupBy(col("media_type")).agg(
       count(lit(1)).as("n_assets"),
       sum(col("n_bytes")).as("total_bytes"),
@@ -492,7 +485,7 @@ object Multimodal {
   /** Registered media_frame_audit entry — HASH-GREEN frames accounting
     * (r11 VERDICT task 4, completing the media family the media_report
     * way): the header-parse dims/frame-count table is frozen
-    * ([[mediaArtifactPath]] "frames-in"), then the REAL sampler
+    * ([[Frozen]] "media-frames-in"), then the REAL sampler
     * ([[sampleFrames]], k=4 — the registered media_frames entry's k) runs
     * over the real decode and each asset's sampled container indices are
     * emitted with their per-asset sample ordinal. The DuckDB twin
@@ -508,10 +501,10 @@ object Multimodal {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val assets = mediaFromDocuments(s, d)
-    val fz = freeze(
+    val fz = Frozen(
       assets.mapPartitions(_.map(dimsOnly))
         .toDF("asset_id", "media_type", "width", "height", "n_frames"),
-      mediaArtifactPath(d, "frames-in"))
+      Frozen.path("media-frames-in", d))
     val byAsset = Window.partitionBy(col("asset_id")).orderBy(col("frame_idx"))
     sampleFrames(assets, 4).toDF()
       .select(col("asset_id"), col("frame_idx"))
@@ -537,7 +530,7 @@ object Multimodal {
     * OUTPUT accounting no longer is. */
   def qMediaFeaturesCheck(s: SparkSession, d: String): DataFrame = {
     val live = extractFeatures(mediaFromDocuments(s, d)).toDF()
-    freeze(live, mediaArtifactPath(d, "features-check"))
+    Frozen(live, Frozen.path("media-features-check", d))
     live.groupBy(col("media_type")).agg(
       count(lit(1)).as("n_assets"),
       sum(col("n_bytes")).as("total_bytes"),
@@ -554,7 +547,7 @@ object Multimodal {
     * pinpointed, not averaged away in a corpus total. */
   def qMediaFramesCheck(s: SparkSession, d: String): DataFrame = {
     val live = sampleFrames(mediaFromDocuments(s, d), 4).toDF()
-    freeze(live, mediaArtifactPath(d, "frames-check"))
+    Frozen(live, Frozen.path("media-frames-check", d))
     live.groupBy(col("asset_id")).agg(
       count(lit(1)).as("n_frames_sampled"),
       sum(col("frame_bytes")).as("total_frame_bytes"),

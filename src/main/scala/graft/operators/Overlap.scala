@@ -6,6 +6,7 @@ import graft.operators.TextOps.normWords
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** Cross-source corpus-overlap estimation — the "how much does crawl N
   * overlap crawl N−1 / how redundant are my sources" question a
@@ -86,35 +87,18 @@ object Overlap {
           .as("jaccard"))
   }
 
-  /** Frozen-artifact location for the per-source hashed-shingle table —
-    * shared verbatim with the DuckDB twin (the annArtifactPath pattern):
-    * the xxhash64 value per distinct (source, shingle) is the ONE
+  /** overlap_kmv over (source, shingle) rows: the per-source
+    * hashed-shingle table frozen to [[Frozen]] "overlap-hashes", sketches
+    * + estimates served from the loaded copy so both engines see identical
+    * hash values (hash-green since r11; before that, rows-only). The
+    * xxhash64 value per distinct (source, shingle) is the ONE
     * engine-specific piece of the KMV path; the oracle recomputes the
     * k-minimum selection, the pairwise union/intersection estimates and
     * the rounding algebra from the same frozen values. */
-  def overlapArtifactPath(d: String): String =
-    "/tmp/graft-overlap-hashes/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  /** overlap_kmv over (source, shingle) rows: the hash table frozen to
-    * `d`'s artifact path, sketches + estimates served from the loaded copy
-    * so both engines see identical hash values (hash-green since r11;
-    * before that, rows-only). */
   def overlapKmvFrozen(srcShingles: DataFrame, d: String): DataFrame = {
     val hashed = srcShingles.select(col("source"), xxhash64(col("shingle")).as("h"))
-    overlapKmvFromHashes(freeze(hashed, overlapArtifactPath(d)))
+    overlapKmvFromHashes(Frozen(hashed, Frozen.path("overlap-hashes", d)))
   }
-
-  /** Frozen-artifact location for the overlap_purge entry — the same
-    * per-source hashed-shingle table as [[overlapArtifactPath]] plus the
-    * `live` flag, so the oracle can recompute the post-purge estimates
-    * over live rows alone. */
-  def overlapPurgeArtifactPath(d: String): String =
-    "/tmp/graft-overlap-purge-hashes/" + new java.io.File(d).getName
 
   /** overlap_purge — RTBF deletion propagation for the KMV overlap
     * sketches, the one serving artifact the r15 purge sweep declared a
@@ -131,7 +115,8 @@ object Overlap {
     * and broadcasts into both legs).
     *
     * Oracle (the overlap_kmv frozen-hash pattern): the per-(source,
-    * shingle) xxhash64 table is frozen WITH the live flag; DuckDB
+    * shingle) xxhash64 table is frozen WITH the live flag to [[Frozen]]
+    * "overlap-purge-hashes"; DuckDB
     * independently recomputes the k-min selection and pairwise
     * estimates over `WHERE live` rows alone — which the source-grain
     * Spark path must equal exactly, per the argument above. Purge set:
@@ -145,7 +130,7 @@ object Overlap {
       .withColumn("live", lit(true))
     val flagged = all.join(live, Seq("source", "h"), "left")
       .select(col("source"), col("h"), coalesce(col("live"), lit(false)).as("live"))
-    overlapPurgeFromHashes(freeze(flagged, overlapPurgeArtifactPath(d)))
+    overlapPurgeFromHashes(Frozen(flagged, Frozen.path("overlap-purge-hashes", d)))
   }
 
   /** Source-grain purge rebuild over a flagged (source, h, live) hash
@@ -237,47 +222,25 @@ object Overlap {
   /** RTBF purge for the streamed sketch state ([[sketchSink]]): KMV is
     * non-linear, so the purge RE-SKETCHES each affected source from its
     * live rows (supplied by the caller — at scale, a scan of those
-    * sources' partitions only) and writes (a) the rebuilt per-source
-    * sketches under `purge/epoch=<id>` and (b) a `ts/epoch=<id>`
-    * tombstone of (source, cutoff) rows, where cutoff = max existing
-    * ingest batch id + 1 — the serve fold then drops the affected
+    * sources' partitions only) and tombstones every affected source —
+    * [[StatePath.writePurgeEpoch]]: the serve fold then drops the affected
     * sources' pre-cutoff ingest partials and folds the rebuilt sketch in
-    * their place, while ingest batches arriving AFTER the purge (ids >=
-    * cutoff) merge back in by plain KMV union. Untouched sources' state
-    * is never rewritten — source-grain, like the batch [[qOverlapPurge]].
-    *
-    * Epoch ids live in their own purge/ + ts/ namespaces, DISJOINT from
-    * foreachBatch's sk/batch=<id> allocator (the dsirPurgeSink r16
-    * contract: a caller-chosen id can never clobber a micro-batch
-    * partial). Replay of the same epoch overwrites identical files —
-    * idempotent. Caller contract: epoch ids strictly increase across
-    * purge requests (later epoch wins per source via max-epoch fold).
+    * their place, while ingest batches arriving AFTER the purge merge back
+    * in by plain KMV union. Untouched sources' state is never rewritten —
+    * source-grain, like the batch [[qOverlapPurge]].
     *
     * `liveAffectedDocs`: the affected sources' LIVE documents (doc_id,
-    * source, text); `affectedSources` the full affected list — kept
-    * separate so a source whose every doc was purged still gets its
-    * tombstone (it simply has no rebuilt sketch, and so vanishes from
-    * the served estimates exactly as a rebuild would have it). */
+    * source, text); `affectedSources` the full affected list. */
   def overlapPurgeSink(s: SparkSession, statePath: String, epochId: Long)(
       liveAffectedDocs: DataFrame, affectedSources: Seq[String]): Unit = {
     import s.implicits._
-    // A purge may legitimately precede any ingest (ops ordering is not
-    // ours to dictate): absent sk/ dir or an all-null max → cutoff 0, so
-    // the tombstone admits every future ingest batch and the purge still
-    // lands instead of crashing on a missing path / NPE.
-    val skDir = s"$statePath/sk"
-    val cutoff =
-      if (!StatePath.exists(s, skDir)) 0L
-      else {
-        val row = s.read.parquet(skDir)
-          .agg(max(col("batch").cast("long"))).collect()(0)
-        if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
-      }
-    sketchTable(sourceShingleTable(liveAffectedDocs))
-      .write.mode("overwrite").parquet(s"$statePath/purge/epoch=$epochId")
-    affectedSources.toDF("source").withColumn("cutoff", lit(cutoff))
-      .write.mode("overwrite").parquet(s"$statePath/ts/epoch=$epochId")
+    StatePath.writePurgeEpoch(s, statePath, epochId)(
+      sketchTable(sourceShingleTable(liveAffectedDocs)), affectedSources.toDF("source"))
   }
+
+  /** (source, sk): the partial schema [[sketchSink]] writes. */
+  private val KmvPartial = StructType(Seq(StructField("source", StringType),
+    StructField("sk", ArrayType(LongType))))
 
   /** Serve pairwise overlap estimates from a [[sketchSink]] state
     * directory. KMV composes EXACTLY under union — the k smallest of
@@ -287,50 +250,12 @@ object Overlap {
     * pass, provided no document spans batches (shingles are per-doc).
     * OverlapStreamSpec pins served == direct EXACTLY after every chunk,
     * not within a tolerance. With [[overlapPurgeSink]] tombstones
-    * present, each tombstoned source folds its winning (max-epoch)
-    * rebuilt sketch plus only its cutoff-or-later ingest partials —
-    * served == a direct pass over the live corpus, still exact. */
+    * present, [[StatePath.foldSketches]] gives each tombstoned source its
+    * winning rebuilt sketch plus only its cutoff-or-later ingest partials
+    * — served == a direct pass over the live corpus, still exact. */
   def overlapServeFromState(s: SparkSession, statePath: String,
       k: Int = KMinValues.DefaultK): DataFrame = {
-    // Same ops-ordering tolerance as the purge sink: a state dir holding
-    // only purge epochs (no ingest batch yet) serves the rebuilt sketches
-    // alone rather than crashing on the missing sk/ path.
-    val skDir = s"$statePath/sk"
-    val parts =
-      if (StatePath.exists(s, skDir))
-        s.read.parquet(skDir)
-          .select(col("source"), col("sk"), col("batch").cast("long").as("batch"))
-      else {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("source", StringType),
-            StructField("sk", ArrayType(LongType)), StructField("batch", LongType))))
-      }
-    val tsDir = s"$statePath/ts"
-    val folded =
-      if (!StatePath.exists(s, tsDir)) parts.select(col("source"), col("sk"))
-      else {
-        // winning purge epoch per source (caller contract: later epoch =
-        // later request); the tombstone table is sources-sized → broadcast
-        val win = s.read.parquet(tsDir)
-          .groupBy(col("source"))
-          .agg(max(struct(col("epoch").cast("long").as("epoch"),
-            col("cutoff").as("cutoff"))).as("w"))
-          .select(col("source"), col("w.epoch").as("win_epoch"),
-            col("w.cutoff").as("cutoff"))
-        val liveParts = parts.join(broadcast(win), Seq("source"), "left")
-          .filter(col("cutoff").isNull || col("batch") >= col("cutoff"))
-          .select(col("source"), col("sk"))
-        val rebuilt = s.read.parquet(s"$statePath/purge")
-          .select(col("source"), col("sk"), col("epoch").cast("long").as("epoch"))
-          .as("r")
-          .join(broadcast(win.as("t")),
-            col("r.source") === col("t.source") &&
-              col("r.epoch") === col("t.win_epoch"))
-          .select(col("r.source").as("source"), col("r.sk").as("sk"))
-        liveParts.unionByName(rebuilt)
-      }
-    val merged = folded
+    val merged = StatePath.foldSketches(s, statePath, KmvPartial)
       .select(col("source"), explode(col("sk")).as("h"))
       .groupBy(col("source"))
       .agg(KMinValues.kmv(k)(col("h")).as("sk"))

@@ -198,7 +198,7 @@ object Pipeline {
     * within sketch error of a boundary may land one bucket over vs the
     * exact form (≥95% keep-agreement asserted in CurationSpec); since r10
     * the entry is HASH-GREEN anyway: the sketch cutoffs round-trip through
-    * this entry's own pplCutsPath("curate") parquet artifact and the
+    * this entry's own [[Frozen]] "ppl-cuts-curate" artifact and the
     * DuckDB twin recomputes the scores and the whole gating algebra
     * against the same frozen boundary. */
   def qCorpusCurateScale(s: SparkSession, d: String): DataFrame =
@@ -215,13 +215,24 @@ object Pipeline {
     val con = Curation.contaminationFromTokens(toks).select(col("doc_id"), col("contaminated"))
     val qual = TextOps.qQualityScore(s, d).select(col("doc_id"), col("quality"))
     // scale form: the sketch cutoffs go through THIS entry's own
-    // pplCutsPath("curate") parquet artifact so the DuckDB twin applies
+    // Frozen "ppl-cuts-curate" artifact so the DuckDB twin applies
     // the identical frozen boundary regardless of entry execution order
     val ppl = (if (exactTercile) Curation.bigramSurprisalFrom(toks)
                else Curation.bigramSurprisalScaleArtifactFrom(s, d, toks, "curate"))
       .select(col("doc_id"), col("avg_surprisal"), col("ppl_bucket"))
     val mix = Pipeline.qDomainMix(s, d).select(col("doc_id"), col("kept").as("mix_kept"))
-    documents(s, d).select(col("doc_id"), col("source"))
+    keepVerdict(documents(s, d).select(col("doc_id"), col("source")),
+      keepRep, rep, con, qual, ppl, mix)
+  }
+
+  /** The curation keep verdict over (doc_id, source) `docs`: each gate's
+    * signal joined by doc_id in gate order (dedup → repetition →
+    * contamination → quality → perplexity → domain mix), missing signals
+    * defaulted, and `keep` = every gate passed. Shared by the batch
+    * [[corpusCurate]] and [[curateIncrementalFromState]]. */
+  private def keepVerdict(docs: DataFrame, keepRep: DataFrame, rep: DataFrame,
+      con: DataFrame, qual: DataFrame, ppl: DataFrame, mix: DataFrame): DataFrame =
+    docs
       .join(keepRep, Seq("doc_id"), "left")
       .join(rep, Seq("doc_id"))
       .join(con, Seq("doc_id"), "left") // benchmark docs have no contamination row
@@ -241,7 +252,6 @@ object Pipeline {
         col("dedup_rep") && !col("repetitive") && !col("contaminated") &&
           col("quality") >= CurateQualityMin &&
           col("ppl_bucket") =!= "tail" && col("mix_kept"))
-  }
 
   /** Curation loss funnel — the observability report every large-scale
     * curation run ships alongside its output: how many documents each
@@ -426,26 +436,8 @@ object Pipeline {
     val mix = domainMixFromCounts(cs.srcCounts, fresh)
       .select(col("doc_id"), col("kept").as("mix_kept"))
 
-    fresh.select(col("doc_id"), col("source"))
-      .join(keepRep, Seq("doc_id"), "left")
-      .join(rep, Seq("doc_id"))
-      .join(con, Seq("doc_id"), "left") // benchmark docs have no contamination row
-      .join(qual, Seq("doc_id"))
-      .join(ppl, Seq("doc_id"), "left") // <2-token docs score no bigram
-      .join(mix, Seq("doc_id"))
-      .select(
-        col("doc_id"), col("source"),
-        coalesce(col("dedup_rep"), lit(false)).as("dedup_rep"),
-        col("repetitive"),
-        coalesce(col("contaminated"), lit(true)).as("contaminated"),
-        col("quality"),
-        col("avg_surprisal"),
-        coalesce(col("ppl_bucket"), lit("tail")).as("ppl_bucket"),
-        col("mix_kept"))
-      .withColumn("keep",
-        col("dedup_rep") && !col("repetitive") && !col("contaminated") &&
-          col("quality") >= CurateQualityMin &&
-          col("ppl_bucket") =!= "tail" && col("mix_kept"))
+    keepVerdict(fresh.select(col("doc_id"), col("source")),
+      keepRep, rep, con, qual, ppl, mix)
   }
 
   def qTrainingMix(s: SparkSession, d: String): DataFrame = {

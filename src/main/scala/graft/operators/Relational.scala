@@ -134,19 +134,11 @@ object Relational {
       .groupBy(col("event_type"))
       .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"))
 
-  /** Frozen-artifact location for sketch-check entries (q09/q37/q43 —
-    * the [[graft.operators.Similarity.annArtifactPath]] pattern): each
-    * engine-specific sketch ESTIMATE is frozen to parquet, and the DuckDB
-    * twin recomputes the exact answer from the base tables plus the whole
-    * error-bound algebra from the same frozen file. The sketch stays
-    * engine-specific; the CHECK is hash-gated (r11 VERDICT task 1). */
-  def sketchArtifactPath(d: String, which: String): String =
-    s"/tmp/graft-sketch-$which/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
+  // Sketch-check entries (q09/q37/q43) freeze as [[Frozen]]
+  // "sketch-<which>": each engine-specific sketch ESTIMATE is frozen, and
+  // the DuckDB twin recomputes the exact answer from the base tables plus
+  // the whole error-bound algebra from the same frozen file. The sketch
+  // stays engine-specific; the CHECK is hash-gated (r11 VERDICT task 1).
 
   /** Registered q09_approx_distinct entry — HASH-GREEN since r12: the HLL
     * estimates are frozen to parquet (the one engine-specific piece), and
@@ -158,7 +150,7 @@ object Relational {
     * Scale shape unchanged: sketch + exact are each one pass; the join is
     * group-grain (5 rows). */
   def q09ApproxDistinctChecked(s: SparkSession, d: String): DataFrame = {
-    val fz = freeze(q09ApproxDistinct(s, d), sketchArtifactPath(d, "q09"))
+    val fz = Frozen(q09ApproxDistinct(s, d), Frozen.path("sketch-q09", d))
     val exact = events(s, d)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
@@ -665,7 +657,7 @@ object Relational {
     * identical interval algebra from the frozen file. One broadcast join
     * + one map-side-combined conditional agg — no sort anywhere. */
   def q37ApproxPercentileChecked(s: SparkSession, d: String): DataFrame = {
-    val fz = freeze(q37ApproxPercentile(s, d), sketchArtifactPath(d, "q37"))
+    val fz = Frozen(q37ApproxPercentile(s, d), Frozen.path("sketch-q37", d))
     val n = col("n").cast("double")
     val ranks = events(s, d)
       .select(col("event_type"), col("value").cast("double").as("v"))
@@ -850,9 +842,9 @@ object Relational {
     val direct = events(s, d)
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"))).as("direct_distinct"))
-    val fz = freeze(
+    val fz = Frozen(
       qHllPartitionedDistinct(s, d).join(direct, Seq("event_type")),
-      sketchArtifactPath(d, "q43"))
+      Frozen.path("sketch-q43", d))
     val exact = events(s, d)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
@@ -877,11 +869,9 @@ object Relational {
   // subtract a departed user), so purge re-sketches — but at CELL grain,
   // never corpus grain: only (event_type, day) cells that actually lost
   // a user rebuild from their live events; untouched cells keep their
-  // partials, which already equal a live-rows rebuild. Namespace / epoch
-  // discipline is the overlapPurgeSink contract verbatim: purge/ + ts/
-  // epochs disjoint from the foreachBatch sk/batch allocator, replay
-  // idempotent by overwrite, later epoch wins by max-epoch fold, cutoff
-  // defaults to 0 when no ingest batch exists yet (ADVICE r16).
+  // partials, which already equal a live-rows rebuild. Namespaces, epoch
+  // discipline, cutoff and the max-epoch fold are [[StatePath]]'s purge
+  // protocol, shared with the KMV overlap state.
 
   /** foreachBatch sink: sketch THIS micro-batch's events at the q43 cell
     * grain and overwrite the per-batch partial (a retried micro-batch
@@ -889,92 +879,36 @@ object Relational {
     * union is idempotent, but the idempotence contract stays uniform
     * across every serving sink). Per-batch state is cells × one sketch. */
   def hllSketchSink(statePath: String)(batch: DataFrame, id: Long): Unit =
-    batch.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+    hllCells(batch).write.mode("overwrite").parquet(s"$statePath/sk/batch=$id")
+
+  private def hllCells(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      .write.mode("overwrite").parquet(s"$statePath/sk/batch=$id")
+
+  /** (event_type, day, sk): the partial schema [[hllSketchSink]] writes. */
+  private val HllPartial = StructType(Seq(StructField("event_type", StringType),
+    StructField("day", DateType), StructField("sk", BinaryType)))
 
   /** RTBF purge for the streamed HLL state: re-sketch the AFFECTED cells
     * from their live events (caller-supplied — at scale, a scan of those
-    * cells' partitions only) under `purge/epoch=<id>`, and tombstone
-    * (event_type, day, cutoff) under `ts/epoch=<id>`. `affectedCells` is
-    * kept separate from the live events so a cell whose every event was
-    * purged still gets its tombstone (it has no rebuilt sketch and so
-    * vanishes from the served rollup, exactly as a rebuild would have
-    * it). Cutoff 0 when no ingest batch exists yet. */
+    * cells' partitions only) and tombstone every affected
+    * (event_type, day) cell — [[StatePath.writePurgeEpoch]]. */
   def hllPurgeSink(s: SparkSession, statePath: String, epochId: Long)(
-      liveAffectedEvents: DataFrame, affectedCells: DataFrame): Unit = {
-    val skDir = s"$statePath/sk"
-    val cutoff =
-      if (!StatePath.exists(s, skDir)) 0L
-      else {
-        val row = s.read.parquet(skDir)
-          .agg(max(col("batch").cast("long"))).collect()(0)
-        if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
-      }
-    liveAffectedEvents
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      .write.mode("overwrite").parquet(s"$statePath/purge/epoch=$epochId")
-    affectedCells
-      .select(col("event_type"), col("day").cast("date").as("day"))
-      .withColumn("cutoff", lit(cutoff))
-      .write.mode("overwrite").parquet(s"$statePath/ts/epoch=$epochId")
-  }
+      liveAffectedEvents: DataFrame, affectedCells: DataFrame): Unit =
+    StatePath.writePurgeEpoch(s, statePath, epochId)(hllCells(liveAffectedEvents),
+      affectedCells.select(col("event_type"), col("day").cast("date").as("day")))
 
-  /** Serve the q43 rollup from a [[hllSketchSink]] state directory: fold
-    * each cell's partials (tombstoned cells: the winning max-epoch
-    * rebuilt sketch plus only cutoff-or-later ingest partials), union per
-    * cell, then roll up per event_type — identical to
-    * [[hllPartitionedDistinctFrom]] over the live corpus because HLL
-    * union is register-wise max. The tombstone table is cells-sized →
-    * broadcast. */
-  def hllServeFromState(s: SparkSession, statePath: String): DataFrame = {
-    val skDir = s"$statePath/sk"
-    val parts =
-      if (StatePath.exists(s, skDir))
-        s.read.parquet(skDir)
-          .select(col("event_type"), col("day"), col("sk"),
-            col("batch").cast("long").as("batch"))
-      else {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("event_type", StringType),
-            StructField("day", DateType), StructField("sk", BinaryType),
-            StructField("batch", LongType))))
-      }
-    val tsDir = s"$statePath/ts"
-    val folded =
-      if (!StatePath.exists(s, tsDir)) parts.select(col("event_type"), col("day"), col("sk"))
-      else {
-        val win = s.read.parquet(tsDir)
-          .groupBy(col("event_type"), col("day"))
-          .agg(max(struct(col("epoch").cast("long").as("epoch"),
-            col("cutoff").as("cutoff"))).as("w"))
-          .select(col("event_type"), col("day"),
-            col("w.epoch").as("win_epoch"), col("w.cutoff").as("cutoff"))
-        val liveParts = parts
-          .join(broadcast(win), Seq("event_type", "day"), "left")
-          .filter(col("cutoff").isNull || col("batch") >= col("cutoff"))
-          .select(col("event_type"), col("day"), col("sk"))
-        val rebuilt = s.read.parquet(s"$statePath/purge")
-          .select(col("event_type"), col("day"), col("sk"),
-            col("epoch").cast("long").as("epoch"))
-          .as("r")
-          .join(broadcast(win.as("t")),
-            col("r.event_type") === col("t.event_type") &&
-              col("r.day") === col("t.day") &&
-              col("r.epoch") === col("t.win_epoch"))
-          .select(col("r.event_type").as("event_type"),
-            col("r.day").as("day"), col("r.sk").as("sk"))
-        liveParts.unionByName(rebuilt)
-      }
-    folded
+  /** Serve the q43 rollup from a [[hllSketchSink]] state directory: the
+    * [[StatePath.foldSketches]] cell partials, union per cell, then roll
+    * up per event_type — identical to [[hllPartitionedDistinctFrom]] over
+    * the live corpus because HLL union is register-wise max. */
+  def hllServeFromState(s: SparkSession, statePath: String): DataFrame =
+    StatePath.foldSketches(s, statePath, HllPartial)
       .groupBy(col("event_type"), col("day"))
       .agg(hll_union_agg(col("sk")).as("sk"))
       .groupBy("event_type")
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("merged_distinct"))
       .orderBy("event_type")
-  }
 
   /** Bucketized range join (q42) — the scale composition q40's scaladoc
     * names, built: when the interval table is too large to broadcast, a

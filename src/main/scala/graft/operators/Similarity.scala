@@ -200,14 +200,14 @@ object Similarity {
     val centroids = ivfCentroids(e, IvfCells)
     // cell assignments + probed cells are the engine-specific quantizer
     // output — frozen to parquet so the DuckDB twin reproduces the scan
-    // and ranking (see annArtifactPath)
-    val cells = freeze(assignCells(e, centroids), annArtifactPath(d, "ivf-cells"))
-    val probes = freeze(cellDistances(e.filter(col("vec_id") < 100), centroids)
+    // and ranking (see [[Frozen]])
+    val cells = Frozen(assignCells(e, centroids), Frozen.path("ann-ivf-cells", d))
+    val probes = Frozen(cellDistances(e.filter(col("vec_id") < 100), centroids)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cell"))))
       .filter(col("rk") <= IvfProbes)
       .select(col("vec_id").as("query_id"), col("cell")),
-      annArtifactPath(d, "ivf-probes"))
+      Frozen.path("ann-ivf-probes", d))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("nn_id").asc)
     cells.join(probes, Seq("cell"))
@@ -257,7 +257,7 @@ object Similarity {
     // fine centroids distributed); [[qEmbeddingDedupSingleLevel]] keeps the
     // single-level path reachable with an explicitly bounded K.
     embeddingDedupTwoLevel(withVec(s, d),
-      freezePath = Some(annArtifactPath(d, "dedup2l")))
+      freezePath = Some(Frozen.path("ann-dedup2l", d)))
 
   /** Single-level IVF-blocked dedup with caller-bounded K (default
     * [[BlockCells]], a fixed 128×64 driver matrix). The auto-K form
@@ -344,7 +344,7 @@ object Similarity {
     */
   def qEmbeddingDedupTwoLevel(s: SparkSession, d: String): DataFrame =
     embeddingDedupTwoLevel(withVec(s, d),
-      freezePath = Some(annArtifactPath(d, "dedup2l")))
+      freezePath = Some(Frozen.path("ann-dedup2l", d)))
 
   /** The assignment table of the two-level quantizer: `probes` rows
     * (vec_id, coarse, fine) per vector. Public so occupancy/balance can be
@@ -446,7 +446,7 @@ object Similarity {
     // the DuckDB twin reproduces pair generation + the exact cosine gate
     val assigned0 = twoLevelAssignments(e, cells, probes, coarseProbes)
     val assigned = freezePath.fold(assigned0)(pth =>
-      freeze(assigned0.select(col("vec_id"), col("coarse"), col("fine")), pth))
+      Frozen(assigned0.select(col("vec_id"), col("coarse"), col("fine")), pth))
     // vectors ride the cell rows so each within-cell collision verifies
     // inline — the same shuffle-vs-compute trade as the single-level path.
     // Persisted: the self-join below would otherwise execute the whole
@@ -483,10 +483,10 @@ object Similarity {
     * driver never holds more than the √K coarse matrix. */
   def qAnnTwoLevel(s: SparkSession, d: String): DataFrame = {
     val e = withVec(s, d)
-    val cells = freeze(
+    val cells = Frozen(
       twoLevelAssignments(e, probes = AnnQueryProbes)
         .select(col("vec_id"), col("coarse"), col("fine"), col("rk")),
-      annArtifactPath(d, "2level-cells"))
+      Frozen.path("ann-2level-cells", d))
     val qb = cells.filter(col("vec_id") < 100)
       .select(col("vec_id").as("query_id"), col("coarse"), col("fine"))
     val cand = cells.filter(col("rk") <= BlockProbes)
@@ -611,10 +611,10 @@ object Similarity {
     val wAdc = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))
     // the ADC shortlist is the sketch boundary — frozen so the DuckDB
     // twin verifies the exact-cosine re-rank + top-3 independently
-    val shortlist = freeze(adc.withColumn("rk", row_number().over(wAdc))
+    val shortlist = Frozen(adc.withColumn("rk", row_number().over(wAdc))
       .filter(col("rk") <= PqShortlist)
       .select(col("query_id"), col("vec_id").as("nn_id")),
-      annArtifactPath(d, "pq-shortlist"))
+      Frozen.path("ann-pq-shortlist", d))
     rerankTop3(shortlist, e)
   }
 
@@ -669,12 +669,18 @@ object Similarity {
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("qd")).as("adc"))
     val wAdc = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))
-    val shortlist = freeze(adc.withColumn("rk", row_number().over(wAdc))
+    val shortlist = Frozen(adc.withColumn("rk", row_number().over(wAdc))
       .filter(col("rk") <= PqShortlist)
       .select(col("query_id"), col("vec_id").as("nn_id")),
-      annArtifactPath(d, "ivfpq-shortlist"))
+      Frozen.path("ann-ivfpq-shortlist", d))
     rerankTop3(shortlist, e)
   }
+
+  // The ANN family's artifacts ([[Frozen]] "ann-<which>"): the
+  // hash/quantizer ASSIGNMENT is the one engine-specific piece of each
+  // approximate path, so the registered entries freeze it and the oracle
+  // independently recomputes candidate generation, the exact cosine
+  // kernel, and the ranking from the same frozen table.
 
   /** LSH-bucketed ANN, top-3 per query: candidates = corpus vectors sharing
     * ≥1 (table, bucket) cell with the query; each surviving id-pair is
@@ -682,23 +688,9 @@ object Similarity {
     * recall@top-3 vs [[qNearestNeighbor]] is asserted ≥ 0.8 in tests. At
     * scale only (vec_id, table, bucket) rows shuffle for candidate gen;
     * vectors are joined back by id for scoring. */
-  /** Frozen-artifact location for ANN bucket/cell assignment tables —
-    * shared verbatim with the DuckDB twins (the bpe_tokenize pattern): the
-    * hash/quantizer ASSIGNMENT is the one engine-specific piece of each
-    * approximate path, so the registered entries freeze it to parquet and
-    * the oracle independently recomputes candidate generation, the exact
-    * cosine kernel, and the ranking from the same frozen table. */
-  def annArtifactPath(d: String, which: String): String =
-    s"/tmp/graft-ann-$which/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
   def qAnnLsh(s: SparkSession, d: String): DataFrame = {
     val e = withVec(s, d)
-    val eb = freeze(lshBucketTable(e), annArtifactPath(d, "lsh"))
+    val eb = Frozen(lshBucketTable(e), Frozen.path("ann-lsh", d))
     val qb = eb.filter(col("vec_id") < 100)
       .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
     val cand = eb.join(qb, Seq("tbl", "bucket"))

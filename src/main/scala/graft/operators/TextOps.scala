@@ -320,15 +320,8 @@ object TextOps {
   val WinnowK = 4  // words per rolling k-gram
   val WinnowW = 8  // window of consecutive k-gram hashes to min over
 
-  /** Frozen-artifact location for text-family hash tables — shared
-    * verbatim with the DuckDB twins (the dedupArtifactPath pattern). */
-  def textArtifactPath(d: String, which: String): String =
-    s"/tmp/graft-text-$which/" + new java.io.File(d).getName
-
-  private def freeze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
+  // Text-family hash tables freeze as [[Frozen]] "text-<which>", shared
+  // verbatim with the DuckDB twins.
 
   /** Registered entry — HASH-GREEN since r11 (r10 VERDICT task 2): the
     * per-(doc, pos) k-gram xxhash64 table is frozen to parquet and the
@@ -338,7 +331,7 @@ object TextOps {
     * under test; the md5 twin pins hash construction portably. */
   def qWinnowFingerprint(s: SparkSession, d: String): DataFrame =
     winnowFromKgramHashes(
-      freeze(winnowKgramHashes(documents(s, d)), textArtifactPath(d, "winnow-kgrams")))
+      Frozen(winnowKgramHashes(documents(s, d)), Frozen.path("text-winnow-kgrams", d)))
 
   /** Winnowing over any (doc_id, text) frame — see [[qWinnowFingerprint]]. */
   def winnowFingerprints(docs: DataFrame): DataFrame =
@@ -791,7 +784,7 @@ object TextOps {
     * verdicts from the frozen file. Takes a prebuilt [[tokenTable]]; the
     * top-k freezes under `d`'s artifact path. */
   def heavyHittersCheckedFrom(tokens: DataFrame, d: String): DataFrame = {
-    val fz = freeze(heavyHittersFrom(tokens), textArtifactPath(d, "hh-top"))
+    val fz = Frozen(heavyHittersFrom(tokens), Frozen.path("text-hh-top", d))
     val counts = tokens.select(col("w").as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("exact_n"))
     val k10 = counts.orderBy(col("exact_n").desc, col("term")).limit(10)
@@ -902,7 +895,7 @@ object TextOps {
   /** cms_sketch_build: the merged sketch frozen to `d`'s artifact path and
     * read back — the artifact the cms_lookup serve leg reads. */
   def cmsSketchFrozen(tokens: DataFrame, d: String): DataFrame =
-    freeze(cmsMergedSketch(tokens), Relational.sketchArtifactPath(d, "cms-merged"))
+    Frozen(cmsMergedSketch(tokens), Frozen.path("sketch-cms-merged", d))
 
   /** RTBF purge for the CMS serving sketch (r15, completing deletion
     * propagation across the serving artifacts: gram index → refcounts,
@@ -1176,26 +1169,20 @@ object TextOps {
     * iterative (bpe_merges stays rows-only, pinned in OperatorSpec against
     * a hand-computed reference corpus), but the APPLY step is a
     * deterministic join GIVEN the segmentation table — so the registered
-    * entry freezes that table to parquet at [[bpeSegsPath]] and serves
+    * entry freezes that table to [[Frozen]] "bpe-segs" and serves
     * from the loaded copy, and the DuckDB twin reads the same parquet and
     * reproduces the join + aggregation. The driver hash thus covers
     * everything downstream of the loop. */
   def qBpeTokenize(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val (_, words) = bpeTrain(docs, BpeMergeRounds)
-    val segDir = bpeSegsPath(d)
-    words.toDF("w", "freq", "syms")
+    val segs = Frozen(words.toDF("w", "freq", "syms")
       .select(col("w"), size(col("syms")).as("n_pieces"),
-        (length(col("w")) + 1 - size(col("syms"))).as("saved"))
-      .write.mode("overwrite").parquet(segDir)
+        (length(col("w")) + 1 - size(col("syms"))).as("saved")),
+      Frozen.path("bpe-segs", d))
     words.unpersist()
-    bpeTokenizeFromSegs(docs, s.read.parquet(segDir))
+    bpeTokenizeFromSegs(docs, segs)
   }
-
-  /** Frozen-segmentation-table location for a data directory — shared
-    * verbatim with the DuckDB oracle's read_parquet. */
-  def bpeSegsPath(d: String): String =
-    "/tmp/graft-bpe-segs/" + new java.io.File(d).getName
 
   /** Direct (no-artifact) form — kept for the crafted-corpus specs. */
   def bpeTokenize(docs: DataFrame, rounds: Int): DataFrame = {

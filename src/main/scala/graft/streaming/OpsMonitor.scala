@@ -35,11 +35,12 @@ final case class QueryFailure(queryId: UUID, runId: UUID, error: String)
   *
   *  - records the latest [[BatchHealth]] per query (progress visibility:
   *    batch id, input rows, trigger duration, resident state rows);
-  *  - records every error termination as a [[QueryFailure]] and invokes
-  *    `onFatal` ON THE LISTENER THREAD, so a deployment can escalate
-  *    (default wiring in [[Main]]: log and exit non-zero, letting the
-  *    orchestrator restart from the checkpoint — the reference's
-  *    fail-and-restart-from-savepoint posture);
+  *  - records every error termination of a query it [[watch]]es as a
+  *    [[QueryFailure]] and invokes `onFatal` ON THE LISTENER THREAD, so
+  *    a deployment can escalate (default wiring in [[Main]]: log and
+  *    exit non-zero, letting the orchestrator restart from the
+  *    checkpoint — the reference's fail-and-restart-from-savepoint
+  *    posture);
   *  - exposes [[assertHealthy]] for callers that poll instead of
   *    subscribing.
   *
@@ -48,37 +49,32 @@ final case class QueryFailure(queryId: UUID, runId: UUID, error: String)
   * `processAllAvailable` returns. Driver-side only; holds one small row
   * per live query — nothing here scales with data volume.
   */
-final class OpsMonitor(
-    onFatal: QueryFailure => Unit = _ => (),
-    scoped: Boolean = false)
+final class OpsMonitor(onFatal: QueryFailure => Unit = _ => ())
     extends StreamingQueryListener {
 
   private val names = TrieMap.empty[UUID, String]
   private val last = TrieMap.empty[UUID, BatchHealth]
   private val failed = TrieMap.empty[UUID, QueryFailure]
   private val watched = TrieMap.empty[UUID, Unit]
-  // error terminations seen in a scoped monitor for queries not (yet)
-  // watched — buffered, not escalated: in any query's attach→watch
-  // window an unrelated death must not trip an exit-style onFatal, but
-  // the soon-to-be-watched query's own death must not be lost either.
+  // error terminations of queries not (yet) watched — buffered, not
+  // escalated: in any query's attach→watch window an unrelated death
+  // must not trip an exit-style onFatal, but the soon-to-be-watched
+  // query's own death must not be lost either.
   // watch() replays its query's entry; onQueryTerminated double-checks
   // after buffering so a concurrent watch() cannot strand the failure.
   private val pending = TrieMap.empty[UUID, QueryFailure]
 
-  /** Restrict failure capture/escalation to the given query (call right
-    * after `start()`). Listener events are SESSION-wide, so an unscoped
-    * monitor in a process running several queries would escalate failures
-    * of queries it does not own — with an exit-style onFatal that kills
-    * the whole JVM for a neighbor's death. No watches = monitor all
-    * (unless constructed `scoped`, where no watches = escalate nothing
-    * yet). Replays a buffered pre-watch failure of this query. */
+  /** Capture and escalate failures of the given query (call right after
+    * `start()`). Listener events are SESSION-wide, so a monitor that
+    * escalated every failure in a process running several queries would
+    * act on queries it does not own — with an exit-style onFatal that
+    * kills the whole JVM for a neighbor's death. Only watched queries
+    * escalate; no watches = escalate nothing yet. Replays a buffered
+    * pre-watch failure of this query. */
   def watch(id: UUID): Unit = {
     watched.put(id, ())
     pending.remove(id).foreach(escalate)
   }
-
-  private def inScope(id: UUID): Boolean =
-    if (watched.isEmpty) !scoped else watched.contains(id)
 
   private def escalate(f: QueryFailure): Unit = {
     failed.put(f.queryId, f)
@@ -104,12 +100,12 @@ final class OpsMonitor(
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
     e.exception.foreach { msg =>
       val f = QueryFailure(e.id, e.runId, msg)
-      if (inScope(e.id)) escalate(f)
-      else if (scoped) {
-        // buffer EVERY scoped out-of-scope failure by query id (not only
+      if (watched.contains(e.id)) escalate(f)
+      else {
+        // buffer EVERY unwatched failure by query id (not only
         // while no watch exists — a second query's attach-to-watch window
         // must not lose its death just because the first is watched), then
-        // re-check: if watch() landed between the inScope test and the
+        // re-check: if watch() landed between the watched test and the
         // put, the atomic remove below fires exactly one escalation on
         // whichever thread wins (the lost-wakeup double-check)
         pending.put(e.id, f)
@@ -123,7 +119,7 @@ final class OpsMonitor(
   /** Every query this monitor saw die with an error, in no fixed order. */
   def failures: Seq[QueryFailure] = failed.values.toSeq
 
-  /** Fatal posture as a poll: throws if ANY monitored query terminated
+  /** Fatal posture as a poll: throws if ANY watched query terminated
     * with an exception. */
   def assertHealthy(): Unit =
     failures.headOption.foreach { f =>
@@ -137,11 +133,8 @@ object OpsMonitor {
   /** Register a monitor on the session's listener bus and return it.
     * One registration per monitor instance — callers own removal via
     * `spark.streams.removeListener`. */
-  def attach(
-      spark: SparkSession,
-      onFatal: QueryFailure => Unit = _ => (),
-      scoped: Boolean = false): OpsMonitor = {
-    val m = new OpsMonitor(onFatal, scoped)
+  def attach(spark: SparkSession, onFatal: QueryFailure => Unit = _ => ()): OpsMonitor = {
+    val m = new OpsMonitor(onFatal)
     spark.streams.addListener(m)
     m
   }

@@ -122,21 +122,22 @@ object ValidationJob {
       maxOffsetsPerTrigger: Option[Long] = None,
       /** Invoked (on the listener thread) if THIS query dies with an
         * error — the reference's checkpoint-failure-is-fatal posture
-        * (flink_job.rb:54-55). The monitor attached here is scoped to the
-        * started query (listener events are session-wide; an unscoped
-        * exit-on-fatal would kill the JVM for an unrelated query's death).
+        * (flink_job.rb:54-55). The monitor attached here watches only the
+        * started query (listener events are session-wide; escalating every
+        * failure would kill the JVM for an unrelated query's death).
         * Production ([[Main]]) passes [[OpsMonitor.exitOnFatal]]; embedded
         * callers that want to poll health attach their own monitor via
-        * [[OpsMonitor.attach]]. One listener registers per startKafka call
+        * [[OpsMonitor.attach]] and `watch` the returned query's id. One
+        * listener registers per startKafka call
         * and lives for the session — one per long-running job in
         * practice. */
       onFatal: QueryFailure => Unit = _ => ()): StreamingQuery = {
     import spark.implicits._
-    // scoped: between this attach and the watch() after start(), a
-    // neighbor query's failure must not hit onFatal (which exits the JVM
-    // in production); the owned query's own pre-watch death is buffered
-    // and replayed by watch().
-    val monitor = OpsMonitor.attach(spark, onFatal, scoped = true)
+    // between this attach and the watch() after start(), a neighbor
+    // query's failure must not hit onFatal (which exits the JVM in
+    // production); the owned query's own pre-watch death is buffered and
+    // replayed by watch().
+    val monitor = OpsMonitor.attach(spark, onFatal)
 
     def source(topic: String): DataFrame = {
       val base0 = spark.readStream.format("kafka")

@@ -256,15 +256,7 @@ object Profile {
   }
 
   private def withSession(body: SparkSession => Unit): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try body(spark) finally spark.stop()
   }
 }

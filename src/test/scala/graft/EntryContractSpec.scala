@@ -31,34 +31,43 @@ class EntryContractSpec extends AnyFunSuite {
     "(writer and oracle can never point at different locations)") {
     // r10 ADVICE: a raw '/tmp/graft-…' literal in oracle SQL silently
     // desynchronizes from the Spark writer when a path helper changes.
-    // Every artifact reference must round-trip through the SAME helper
-    // the writer uses — unknown families or stale formats fail here.
-    import graft.operators.{Curation, Dedup, Multimodal, Overlap, Relational, Similarity, TextOps}
+    // Every artifact reference must round-trip through Frozen.path, the
+    // one builder the writers use — undeclared families or stale formats
+    // fail here.
+    import graft.operators.Frozen
     val sf = "/root/testdata/sf0.01"
     val Pat = "(/tmp/graft-[A-Za-z0-9-]+/sf[0-9.]+)".r
-    def rebuild(fam: String): Option[String] = fam match {
-      case f if f.startsWith("ann-")      => Some(Similarity.annArtifactPath(sf, f.stripPrefix("ann-")))
-      case f if f.startsWith("sketch-")   => Some(Relational.sketchArtifactPath(sf, f.stripPrefix("sketch-")))
-      case f if f.startsWith("dedup-")    => Some(Dedup.dedupArtifactPath(sf, f.stripPrefix("dedup-")))
-      case f if f.startsWith("text-")     => Some(TextOps.textArtifactPath(sf, f.stripPrefix("text-")))
-      case f if f.startsWith("media-")    => Some(Multimodal.mediaArtifactPath(sf, f.stripPrefix("media-")))
-      case f if f.startsWith("ppl-cuts-") => Some(Curation.pplCutsPath(sf, f.stripPrefix("ppl-cuts-")))
-      case "bpe-segs"                     => Some(TextOps.bpeSegsPath(sf))
-      case "overlap-hashes"               => Some(Overlap.overlapArtifactPath(sf))
-      case "overlap-purge-hashes"         => Some(Overlap.overlapPurgeArtifactPath(sf))
-      case _                              => None
-    }
-    val bad = SparkEntry.oracleSql.toSeq.flatMap { case (name, sql) =>
+    val badSql = SparkEntry.oracleSql.toSeq.flatMap { case (name, sql) =>
       Pat.findAllMatchIn(sql).map(_.group(1)).toSeq.distinct.flatMap { path =>
         val fam = path.stripPrefix("/tmp/graft-").takeWhile(_ != '/')
-        rebuild(fam) match {
+        scala.util.Try(Frozen.path(fam, sf)).toOption match {
           case Some(expected) if expected == path => None
-          case Some(expected) => Some(s"$name: $path != helper's $expected")
-          case None => Some(s"$name: $path has no known path helper")
+          case Some(expected) => Some(s"$name: $path != Frozen.path's $expected")
+          case None => Some(s"$name: $path names no family Frozen declares")
         }
       }
     }
-    assert(bad.isEmpty, "artifact-path lint failures:\n" + bad.mkString("\n"))
+    // The writer side: no program source builds an artifact path or
+    // freezes a frame anywhere but Frozen (comments count too — a stale
+    // literal in a doc is how a second builder starts).
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main")
+    val owner = main.resolve("scala/graft/operators/Frozen.scala")
+    val files = {
+      val walk = Files.walk(main)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.contains(owner) && files.size > 20, s"walk under $main found ${files.size} files")
+    val Stray = "/tmp/graft-|def freeze".r
+    val badSrc = files.filterNot(_ == owner).flatMap { p =>
+      Files.readString(p).linesIterator.zipWithIndex.collect {
+        case (line, i) if Stray.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(badSql.isEmpty && badSrc.isEmpty, "artifact-path lint failures:\n" +
+      (badSql ++ badSrc.map("outside Frozen: " + _)).mkString("\n"))
   }
 
   test("no oracle SQL uses a NOT IN subquery (NULL-semantics footgun)") {

@@ -93,7 +93,7 @@ class PlanLintSpec extends AnyFunSuite {
       "— 1-row parquet frames by construction (CurationStateSpec)"),
     "curation_state_report" -> ("build = the same loaded CurationState stats/" +
       "bounds frames (1 row each) and its count aggregates"),
-    "bigram_surprisal_scale" -> ("build = the frozen pplCutsPath artifact — " +
+    "bigram_surprisal_scale" -> ("build = the frozen ppl-cuts-bigram artifact — " +
       "a 1-row (cut1, cut2) parquet by construction"),
     "corpus_curate_scale" -> ("build = the same 1-row frozen-cuts artifact"),
     "overlap_exact" -> "build = per-source distinct-shingle totals (source grain, ~20 rows)",

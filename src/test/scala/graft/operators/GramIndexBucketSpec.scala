@@ -54,7 +54,7 @@ class GramIndexBucketSpec extends AnyFunSuite {
     val bucketed = rows(Dedup.substringDedupFromBucketed(spark, table,
       spark.read.parquet(freshPath), batch))
     val viaIndex = rows(Dedup.substringDedupFromIndex(
-      Dedup.gramIndexFromState(spark, Dedup.dedupArtifactPath(d, "gramidx")), batch))
+      Dedup.gramIndexFromState(spark, Frozen.path("dedup-gramidx", d)), batch))
     assert(bucketed == viaIndex,
       "bucketed serve diverged from the index-frame serve\n" +
         s"bucketed-only: ${(bucketed -- viaIndex).take(2)}\n" +

@@ -75,6 +75,7 @@ class OpsMonitorSpec extends AnyFunSuite {
         throw new RuntimeException("injected sink failure")
       }
       .start()
+    monitor.watch(query.id)
     try {
       input.addData(1L, 2L, 3L)
       intercept[Exception](query.processAllAvailable()) // the query dies
@@ -106,7 +107,7 @@ class OpsMonitorSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
 
     val escalated = new ConcurrentLinkedQueue[QueryFailure]()
-    val monitor = OpsMonitor.attach(spark, f => escalated.add(f), scoped = true)
+    val monitor = OpsMonitor.attach(spark, f => escalated.add(f))
     val input = MemoryStream[Long]
     val query = input.toDF().writeStream
       .outputMode("append")
@@ -147,7 +148,7 @@ class OpsMonitorSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
 
     val escalated = new ConcurrentLinkedQueue[QueryFailure]()
-    val monitor = OpsMonitor.attach(spark, f => escalated.add(f), scoped = true)
+    val monitor = OpsMonitor.attach(spark, f => escalated.add(f))
     val inputA = MemoryStream[Long]
     val healthy = inputA.toDF().writeStream
       .outputMode("append")
