@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{classic, Dataset, SparkSession}
+import org.apache.spark.sql.execution.{CacheManager, CachedData}
 
 /** Benchmark main: times every catalogue entry at SPARK_GRAFT_SF_DIR and
   * prints one short JSON line PER QUERY ({"query":name,"sec":min}) followed
@@ -179,12 +180,15 @@ object Bench {
 
   /** One pass over `catalogue` (dependency order) at `dir`: per node, in
     * order, its seconds or -1. Each node is built and billed once; a node
-    * with consumers is kept for them and released after its last one. */
+    * with consumers is kept for them and released after its last one.
+    * Every other cache a node creates is dropped once it is billed, so a
+    * later node that caches the same frame builds and bills it itself. */
   def runPass(spark: SparkSession, catalogue: Seq[Node[_]], dir: String): Seq[(String, Double)] = {
     val lastUse = lastConsumer(catalogue)
     val held = mutable.LinkedHashMap.empty[Node[_], Any]
     def release[A](n: Node[A]): Unit = held.remove(n).foreach(a => n.free(a.asInstanceOf[A]))
     catalogue.zipWithIndex.map { case (n, i) =>
+      val before = cacheEntries(spark)
       val sec = n.deps.find(d => !held.contains(d)) match {
         case Some(d) =>
           System.err.println(s"[bench] FAILED: upstream entry '${d.name}' failed — " +
@@ -194,10 +198,23 @@ object Bench {
           val in = Node.in(spark, dir, n.deps, held)
           time { val a = n.make(in, shared = lastUse.contains(n)); if (lastUse.contains(n)) held(n) = a }
       }
+      val kept = held.get(n).collect { case df: Dataset[_] => df.queryExecution.analyzed }
+      cacheEntries(spark)
+        .filterNot(e => before.exists(_ eq e) || kept.exists(e.plan.sameResult))
+        .foreach(e => spark.sharedState.cacheManager.uncacheQuery(
+          spark.asInstanceOf[classic.SparkSession], e.plan, cascade = false))
       n.deps.filter(d => lastUse(d) == i).foreach(release(_))
       if (held.isEmpty) spark.catalog.clearCache()
       n.name -> sec
     }
+  }
+
+  /** The session's cache entries. `CacheManager` has no public listing,
+    * so this reads its private entry list. */
+  private def cacheEntries(spark: SparkSession): Seq[CachedData] = {
+    val entries = classOf[CacheManager].getDeclaredField("cachedData")
+    entries.setAccessible(true)
+    entries.get(spark.sharedState.cacheManager).asInstanceOf[IndexedSeq[CachedData]]
   }
 
   /** Index of each node's last consumer in `catalogue`; nodes without

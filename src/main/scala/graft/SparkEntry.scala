@@ -341,7 +341,7 @@ object SparkEntry {
   val CurationReport = Node.frame("curation_report", CorpusCurate)(in =>
     Pipeline.curationReport(in(CorpusCurate)))
   val CurationStateBuild = Node.typed("curation_state_build")(in =>
-    CurationState.frozen(docs(in).filter(col("doc_id") % 2 === 0)))
+    CurationState.frozen(docs(in).filter(col("doc_id") % 2 === 0), in.dir))
   val CurateIncremental = Node.frame("curate_incremental", CurationStateBuild)(in =>
     Pipeline.curateIncrementalFromState(in(CurationStateBuild), docs(in).filter(col("doc_id") % 2 === 1)))
   val CurationStateReport = Node.frame("curation_state_report", CurationStateBuild)(in =>

@@ -1,13 +1,19 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
-  * Plain `spark.read.parquet` — Catalyst pushes filters and prunes columns
-  * down to the scan, so callers just compose DataFrame ops and the physical
-  * plan reads only what it needs (verify with `.explain("formatted")`:
-  * `PushedFilters` / `ReadSchema`).
+  * A parquet read: Catalyst pushes filters and prunes columns down to the
+  * scan, so callers just compose DataFrame ops and the physical plan reads
+  * only what it needs (verify with `.explain("formatted")`:
+  * `PushedFilters` / `ReadSchema`). An inferring `spark.read.parquet`
+  * runs one Spark job to read the footer schema on every read; [[table]]
+  * hands the reader the schema of a file version it read before.
   */
 object Tables {
   /** The `local[cpus]` session the driver mains (Bench, Verify, Profile)
@@ -25,8 +31,44 @@ object Tables {
     spark
   }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `<sfDir>/<name>.parquet`, read with the schema Spark inferred the
+    * last time this version of the file was read under the same parquet
+    * settings, so only a first read runs the inference job. A version is
+    * the count, summed length and latest modification time of the files
+    * under the path (the file itself, for a single file), so a table
+    * rewritten at the same path is inferred again. The plan is the one an
+    * inferring read builds; a missing path fails as a plain read does. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return spark.read.parquet(path)
+    val v = version(spark, fs, p)
+    Option(schemas.get(path)).collect { case (`v`, schema) => schema } match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, (v, df.schema))
+        df
+    }
+  }
+
+  /** path → (version, inferred schema) of the last inferring read. */
+  private val schemas = new ConcurrentHashMap[String, (Seq[Any], StructType)]
+
+  /** The files' (count, summed length, latest modification time), then
+    * every session setting that names parquet: among them are those that
+    * change what inference returns (mergeSchema, binaryAsString,
+    * int96AsTimestamp, inferTimestampNTZ, nanosAsLong, field ids). */
+  private def version(spark: SparkSession, fs: FileSystem, p: Path): Seq[Any] = {
+    val files = fs.listFiles(p, true)
+    var (count, length, modified) = (0, 0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      count += 1; length += f.getLen; modified = math.max(modified, f.getModificationTime)
+    }
+    Seq(count, length, modified, spark.conf.getAll.filter(_._1.contains("parquet")))
+  }
 
   /** events.parquet has shipped `ts` both as parquet TIMESTAMP(NANOS)
     * (rounds ≤ 7) and as plain TIMESTAMP(MICROS) (driver regeneration,

@@ -141,12 +141,15 @@ object CurationState {
   }
 
   /** The bundle as the artifact a server reads (curation_state_build):
-    * [[compute]] written to a fresh scratch directory and [[load]]ed
-    * back, so every consumer runs THROUGH the parquet round trip. */
-  def frozen(state: DataFrame): CurationState = {
-    val path = java.nio.file.Files.createTempDirectory("graft-curation-state").toString
-    write(compute(state), path)
-    load(state.sparkSession, path)
+    * [[compute]] frozen frame by frame under data directory `d`'s
+    * `curation-state` artifact ([[Frozen]], overwritten by each build)
+    * and read back with each frame's own schema, so every consumer runs
+    * THROUGH the parquet round trip and no read infers a schema. */
+  def frozen(state: DataFrame, d: String): CurationState = {
+    val path = Frozen.path("curation-state", d)
+    val Seq(fp, c1, c2, stats, bounds, src, bench) =
+      frames(compute(state)).map { case (name, f) => Frozen(f, s"$path/$name") }
+    CurationState(fp, c1, c2, stats, bounds, src, bench)
   }
 
   /** Append one ingest chunk's MERGEABLE partials under

@@ -18,9 +18,10 @@ object Frozen {
 
   /** Declared artifact families. A family ending in `-` is a prefix that
     * takes a per-entry suffix (`ann-lsh`, `ppl-cuts-curate`); the others
-    * name one artifact each. */
+    * name one artifact each. `curation-state` is the one no oracle reads:
+    * curation_state_build's serving bundle, one directory per frame. */
   private val Families = Seq("ann-", "sketch-", "dedup-", "text-", "media-",
-    "ppl-cuts-", "bpe-segs", "overlap-hashes", "overlap-purge-hashes")
+    "ppl-cuts-", "bpe-segs", "overlap-hashes", "overlap-purge-hashes", "curation-state")
 
   private def declared(name: String): Boolean =
     Families.exists(f =>
@@ -34,9 +35,10 @@ object Frozen {
   }
 
   /** Write `df` to `path` as parquet and read it back: everything
-    * downstream sees exactly the values the oracle reads. */
+    * downstream sees exactly the values the oracle reads. The read takes
+    * the writer's schema, so it runs no schema-inference job. */
   def apply(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 }

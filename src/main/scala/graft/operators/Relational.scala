@@ -3,7 +3,12 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import graft.Tables._
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1279,36 +1284,49 @@ object Relational {
     (1 until nBuckets).map(i => (i, i.toDouble / nBuckets))
 
   /** Exact interpolated quantiles of `x` within every `grp`, in three
-    * bounded driver round trips, each one scan of `vals`:
+    * bounded driver round trips, each one scan of `vals` and ONE Spark
+    * job:
     *
-    *  1. `(lo, hi, n)` per group: one row per group.
+    *  1. `(lo, hi, n)` per group, and its row count with null `x`: each
+    *     task folds its rows into a hash map of group ranges, and the
+    *     driver merges the task results (`treeAggregate`): one entry per
+    *     group.
     *  2. Row counts per (group, coarse cell), where an order-preserving
     *     linear map puts each value into one of `coarse` fixed-width cells
-    *     of its group's [lo, hi]: at most groups × `coarse` rows. The
-    *     driver walks each group's cumulative counts to find, for every
-    *     target quantile, the sorted ranks ⌊r⌋ and ⌊r⌋+1 (r = pct·(n−1)):
-    *     the cell each falls in and its rank inside that cell.
-    *  3. Only the rows of those cells are ranked in the cluster (a window
-    *     over (group, cell): an external sort that spills, never an
-    *     in-memory map), and the at most 2·|pcts|·groups needed order
-    *     statistics come back.
+    *     of its group's [lo, hi] (NaN, which sorts last, into one more
+    *     cell): each task fills a groups × `coarse` array of longs, and the
+    *     driver sums them. The driver walks each group's cumulative counts
+    *     to find, for every target quantile, the sorted ranks ⌊r⌋ and
+    *     ⌊r⌋+1 (r = pct·(n−1)): the cell each falls in and its rank inside
+    *     that cell.
+    *  3. Only the rows of those cells are shuffled, by cell, and sorted
+    *     within partitions (`repartitionAndSortWithinPartitions`: an
+    *     external sort that spills, never an in-memory map), and the at
+    *     most 2·|pcts|·groups needed order statistics come back.
     *
-    * The driver then interpolates with Spark's `Percentile.getPercentile`
-    * arithmetic — (⌊r⌋+1−r)·vLo + (r−⌊r⌋)·vHi, the value itself when r is
-    * integral — so the result is bit-identical to per-group exact
-    * `percentile` (OperatorSpec pins this) and the DuckDB `quantile_cont`
-    * oracle stays hash-green. As in `percentile`, a null `x` is skipped
-    * and a null `grp` is a group of its own.
+    * Each round trip runs as one SQL execution of the (grp, x) input, so
+    * it reports as a query (UI, query-execution listeners, PlanLint) as a
+    * Dataset action would. A row finds its group through one hash lookup
+    * on its key.
     *
-    * Memory bound: the driver holds at most groups × `coarse` cell counts
-    * (round trip 2); executors hold map-side-combined counters and the
-    * round-trip-3 sort, which covers ~n·2|pcts|/coarse rows per group and
-    * spills. At 100 TB pick coarse ≈ n / 10⁶ to keep each needed cell
-    * around a million rows. Nothing buffers a distinct-value map, the
-    * shape per-group `percentile` has (q28's honesty note). Round trips
-    * 2 and 3 find a row's group through a literal CASE over the keys, so
-    * per-row work grows with the group count: the helper is for groups in
-    * the hundreds (event types, funnel steps), not for key-grain groups.
+    * The semantics are Spark SQL's `percentile`: a null `x` is skipped, a
+    * null `grp` is a group of its own, a floating key groups −0.0 with
+    * 0.0, and values order as SQL orders doubles (NaN last, −0.0 = 0.0).
+    * `x` is widened to double first, as `percentile` does before it
+    * interpolates; the widening is monotone, so the order statistics are
+    * the same. The driver then interpolates with `Percentile.getPercentile`'s
+    * arithmetic — (⌊r⌋+1−r)·vLo + (r−⌊r⌋)·vHi, or vLo itself when r is
+    * integral or vLo = vHi — so the result is bit-identical to per-group
+    * exact `percentile` (OperatorSpec and QuantileSpec pin this) and the
+    * DuckDB `quantile_cont` oracle stays hash-green.
+    *
+    * Memory bound: the driver and each task of round trip 2 hold groups ×
+    * `coarse` longs, which keeps the helper to groups in the hundreds
+    * (event types, funnel steps), not key-grain groups. The round-trip-3
+    * sort covers ~n·2|pcts|/coarse rows per group and spills. At 100 TB
+    * pick coarse ≈ n / 10⁶ to keep each needed cell around a million rows.
+    * Nothing buffers a distinct-value map, the shape per-group
+    * `percentile` has (q28's honesty note).
     *
     * Every round trip rescans `vals`: an expensive input (a scored frame
     * rather than a table scan) is materialized once by the caller through
@@ -1326,77 +1344,167 @@ object Relational {
       StructField("bound", DoubleType))))
   }
 
-  /** One group's quantiles on the driver: its key, its non-null row
-    * count, and each requested (id, value). */
-  private case class GroupQuantiles(grp: Any, n: Long, bounds: Seq[(Int, Double)])
+  /** One group's quantiles on the driver: its key, its non-null `x`
+    * count, its row count (null `x` included), and each requested
+    * (id, value); no values when every `x` is null. */
+  private case class GroupQuantiles(grp: Any, n: Long, rows: Long, bounds: Seq[(Int, Double)])
+
+  /** Round trip 1's per-group fold over (grp, x) rows: the range of the
+    * finite values (the cells span it; ±∞ land in the end cells), the
+    * non-null `x` count and the row count. */
+  private final class GroupRange extends Serializable {
+    var lo = Double.PositiveInfinity
+    var hi = Double.NegativeInfinity
+    var n = 0L
+    var rows = 0L
+    def add(r: InternalRow): GroupRange = {
+      rows += 1
+      if (!r.isNullAt(1)) {
+        n += 1
+        val x = r.getDouble(1)
+        if (!x.isNaN && !x.isInfinite) { lo = math.min(lo, x); hi = math.max(hi, x) }
+      }
+      this
+    }
+    def merge(o: GroupRange): GroupRange = {
+      lo = math.min(lo, o.lo); hi = math.max(hi, o.hi); n += o.n; rows += o.rows
+      this
+    }
+  }
+
+  /** The coarse cell of a non-null `x` in a group whose finite values span
+    * [lo, hi]: 0 until `coarse`, monotone in SQL double order, and
+    * `coarse` for NaN. Only monotonicity matters, not the linear map's
+    * exactness: a NaN from an overflowing range truncates to cell 0. */
+  private def cellOf(x: Double, lo: Double, hi: Double, coarse: Int): Int =
+    if (x.isNaN) coarse
+    else if (x <= lo) 0
+    else if (x >= hi) coarse - 1
+    else math.min(((x - lo) / (hi - lo) * coarse).toInt, coarse - 1)
+
+  /** A row's group key with SQL grouping equality: internal values
+    * (UTF8String, UnsafeRow, …) compare by content, and adding 0.0 to a
+    * floating key folds −0.0 into 0.0 (boxed NaNs compare equal
+    * already). The key may point into a reused row: a map that keeps it
+    * stores a copy. */
+  private def groupKey(dt: DataType): InternalRow => Any = dt match {
+    case DoubleType => r => if (r.isNullAt(0)) null else r.getDouble(0) + 0.0
+    case FloatType => r => if (r.isNullAt(0)) null else r.getFloat(0) + 0.0f
+    case _ => r => if (r.isNullAt(0)) null else r.get(0, dt)
+  }
+
+  /** Cell key, then `x` in SQL double order. */
+  private object CellOrder extends Ordering[(Long, Double)] {
+    def compare(a: (Long, Double), b: (Long, Double)): Int = {
+      val c = java.lang.Long.compare(a._1, b._1)
+      if (c != 0) c else SQLOrderingUtil.compareDoubles(a._2, b._2)
+    }
+  }
+
+  /** Sends every row of one cell to one partition. */
+  private final class CellPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int =
+      java.lang.Math.floorMod(key.asInstanceOf[(Long, Double)]._1, numPartitions.toLong).toInt
+  }
 
   /** The three round trips behind [[groupedEquidepthBounds]]. */
   private def groupedQuantiles(vals: DataFrame, pcts: Seq[(Int, Double)],
                                coarse: Int = 8192): Seq[GroupQuantiles] = {
-    val xs = vals.select(col("grp"), col("x")).filter(col("x").isNotNull)
-    // 1: range and size per group; `gid` numbers the groups so the later
-    //    round trips key on an int, whatever the group key's type
-    val groups = xs.groupBy(col("grp"))
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"), count(lit(1)).as("n"))
-      .collect().toSeq
-    if (groups.isEmpty) return Seq.empty
-    // a row's group id and range come from literals (a CASE over the
-    // keys, then an array index), so the later round trips ship nothing
-    val gid = groups.indices.tail.foldLeft(when(col("grp") <=> lit(groups.head.get(0)), 0)) {
-      (acc, i) => acc.when(col("grp") <=> lit(groups(i).get(0)), i)
+    val grpType = vals.schema("grp").dataType
+    val keyOf = groupKey(grpType)
+    def roundTrip[T](name: String)(job: RDD[InternalRow] => T): T = {
+      val qe = vals.select(col("grp"), col("x").cast("double")).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some(s"groupedQuantiles: $name"))(job(qe.toRdd))
     }
-    def at(field: Int) = element_at(array(groups.map(g => lit(g.get(field))): _*), col("gid") + 1)
-    val ranged = xs.withColumn("gid", gid).filter(col("gid").isNotNull)
-      .select(col("gid"), col("x"), at(1).as("lo"), at(2).as("hi"))
-    // order-preserving coarse cell id (monotone in x within each group;
-    // exactness of the linear map is irrelevant — only monotonicity +
-    // bounded key range)
-    val cb = when(col("hi") === col("lo"), lit(0)).otherwise(
-      least(floor((col("x") - col("lo")) / (col("hi") - col("lo")) * coarse),
-        lit(coarse - 1))).cast("int")
-    val cells = ranged.select(col("gid"), col("x"), cb.as("cb"))
-    // 2: counts per (group, cell) → per group, each cell's (cb, rows
-    //    below it, rows in it) in cell order
-    val cum: Map[Int, Seq[(Int, Long, Long)]] =
-      cells.groupBy(col("gid"), col("cb")).agg(count(lit(1)).as("cnt"))
-        .collect().toSeq.groupBy(_.getInt(0)).map { case (gid, rs) =>
-          gid -> rs.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-            .scanLeft((0, 0L, 0L)) { case ((_, below, cnt), (c, n)) => (c, below + cnt, n) }
-            .tail
-        }
+    // 1: range and sizes per group; a group's id is its index here
+    val ranges = roundTrip("ranges") {
+      _.treeAggregate(new java.util.HashMap[Any, GroupRange])(
+        (m, r) => {
+          val k = keyOf(r)
+          val g = m.get(k)
+          if (g == null) m.put(InternalRow.copyValue(k), new GroupRange().add(r)) else g.add(r)
+          m
+        },
+        (a, b) => { b.forEach((k, g) => a.merge(k, g, (x: GroupRange, y: GroupRange) => x.merge(y))); a })
+    }.asScala.toSeq
+    if (ranges.isEmpty) return Seq.empty
+    val gidOf = new java.util.HashMap[Any, Int]
+    ranges.indices.foreach(i => gidOf.put(ranges(i)._1, i))
+    val lo = ranges.map(_._2.lo).toArray
+    val hi = ranges.map(_._2.hi).toArray
+    // a row's cell key gid·width + cell (cells 0 until coarse, then NaN's),
+    // or -1 for a null x or a key round trip 1 did not see
+    val width = coarse + 1
+    val cellKeyOf: InternalRow => Long = r =>
+      if (r.isNullAt(1)) -1L
+      else {
+        val g = gidOf.getOrDefault(keyOf(r), -1)
+        if (g < 0) -1L else g.toLong * width + cellOf(r.getDouble(1), lo(g), hi(g), coarse)
+      }
+    // 2: counts per (group, cell), indexed by cell key
+    val size = ranges.size * width
+    val counts = roundTrip("cells") {
+      _.treeAggregate(Array.emptyLongArray)(
+        (a, r) => {
+          val c = cellKeyOf(r)
+          if (c < 0) a
+          else {
+            val acc = if (a.isEmpty) new Array[Long](size) else a
+            acc(c.toInt) += 1
+            acc
+          }
+        },
+        (a, b) =>
+          if (a.isEmpty) b
+          else { var i = 0; while (i < b.length) { a(i) += b(i); i += 1 }; a })
+    }
     // a 0-based within-group rank → (cell key, 1-based rank in the cell)
     def locate(gid: Int, k: Long): (Long, Long) = {
-      val (c, below, _) = cum(gid).find { case (_, b, n) => k >= b && k < b + n }.get
-      (gid.toLong * coarse + c, k - below + 1)
+      var c = gid * width
+      var below = 0L
+      while (below + counts(c) <= k) { below += counts(c); c += 1 }
+      (c.toLong, k - below + 1)
     }
-    val plans = groups.indices.map { gid =>
-      val n = groups(gid).getLong(3)
-      pcts.map { case (i, pct) =>
+    val plans = ranges.indices.map { gid =>
+      val n = ranges(gid)._2.n
+      if (n == 0) Seq.empty
+      else pcts.map { case (i, pct) =>
         // Scala Double arithmetic: the product Percentile forms as
-        // `percentage * (count - 1)`
+        // `(count - 1) * percentage`
         val r = pct * (n - 1).toDouble
         val kLo = math.floor(r).toLong
         (i, r, locate(gid, kLo), locate(gid, math.min(kLo + 1, n - 1)))
       }
     }
-    // 3: rank only the needed cells' rows and fetch the needed ranks;
-    //    both filters are literal sets, so no job ships them
-    val ranks = plans.flatten.flatMap { case (_, _, lo, hi) => Seq(lo, hi) }.distinct
-    val cellKey = (col("gid").cast("long") * coarse + col("cb")).as("k")
-    val wRank = Window.partitionBy(col("gid"), col("cb")).orderBy(col("x"))
-    val picked = cells
-      .filter(cellKey.isin(ranks.map(_._1).distinct: _*))
-      .withColumn("rk", row_number().over(wRank).cast("long"))
-      .filter(struct(cellKey, col("rk")).isin(
-        ranks.map { case (k, rk) => struct(lit(k).as("k"), lit(rk).as("rk")) }: _*))
-      .select(cellKey, col("rk"), col("x").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    groups.indices.map { gid =>
-      GroupQuantiles(groups(gid).get(0), groups(gid).getLong(3),
-        plans(gid).map { case (i, r, lo, hi) =>
-          val f = math.floor(r)
-          (i, if (r == f) picked(lo) else (f + 1.0 - r) * picked(lo) + (r - f) * picked(hi))
-        })
+    // 3: sort only the needed cells' rows and fetch the needed ranks
+    val ranks = plans.flatten.flatMap { case (_, _, a, b) => Seq(a, b) }.toSet
+    val cells = ranks.map(_._1)
+    val picked = if (ranks.isEmpty) Map.empty[(Long, Long), Double] else roundTrip("ranks") { rows =>
+      implicit val order: Ordering[(Long, Double)] = CellOrder
+      val parts = math.min(cells.size, vals.sparkSession.sessionState.conf.numShufflePartitions)
+      rows.flatMap { r =>
+          val c = cellKeyOf(r)
+          if (cells.contains(c)) Iterator.single(((c, r.getDouble(1)), ())) else Iterator.empty
+        }
+        .repartitionAndSortWithinPartitions(new CellPartitioner(parts))
+        .mapPartitions { it =>
+          var cell = -1L
+          var rank = 0L
+          it.flatMap { case ((c, x), _) =>
+            if (c != cell) { cell = c; rank = 0L }
+            rank += 1
+            if (ranks.contains((c, rank))) Iterator.single((c, rank) -> x) else Iterator.empty
+          }
+        }
+        .collect().toMap
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(grpType)
+    ranges.indices.map { gid =>
+      val (k, g) = ranges(gid)
+      GroupQuantiles(toScala(k), g.n, g.rows, plans(gid).map { case (i, r, a, b) =>
+        val (vLo, vHi, f) = (picked(a), picked(b), math.floor(r))
+        (i, if (r == f || vLo == vHi) vLo else (f + 1.0 - r) * vLo + (r - f) * vHi)
+      })
     }
   }
 
@@ -1405,17 +1513,22 @@ object Relational {
     * it shares q28's DuckDB oracle, so the driver hash match IS the
     * bounded-form == single-agg equivalence proof — with no per-group
     * distinct-value buffer anywhere in the plan. This retires the last
-    * exact-`percentile` aggregate from the registered scale paths. */
+    * exact-`percentile` aggregate from the registered scale paths. `n`
+    * is round trip 1's row count, so the table is read three times. */
   def q28PercentilesScale(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d)
       .select(col("event_type").as("grp"), col("value").as("x"))
-    val bounds = groupedEquidepthBounds(ev, Seq(1 -> 0.5, 2 -> 0.95))
-    val n = ev.groupBy(col("grp")).agg(count(lit(1)).as("n"))
-    bounds.groupBy(col("grp"))
-      .agg(round(max(when(col("i") === 1, col("bound"))), 6).as("p50"),
-           round(max(when(col("i") === 2, col("bound"))), 6).as("p95"))
-      .join(n, Seq("grp"))
-      .select(col("grp").as("event_type"), col("p50"), col("p95"), col("n"))
+    val rows = groupedQuantiles(ev, Seq(1 -> 0.5, 2 -> 0.95)).map { g =>
+      val b = g.bounds.toMap
+      Row(g.grp, b.get(1).map(Double.box).orNull, b.get(2).map(Double.box).orNull, g.rows)
+    }
+    s.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("event_type", ev.schema("grp").dataType),
+        StructField("p50", DoubleType),
+        StructField("p95", DoubleType),
+        StructField("n", LongType, nullable = false))))
+      .select(col("event_type"), round(col("p50"), 6).as("p50"),
+        round(col("p95"), 6).as("p95"), col("n"))
   }
 
   /** [[equidepthBounds]] gathered into the 1-row broadcastable array

@@ -267,6 +267,27 @@ class BenchContractSpec extends AnyFunSuite {
     assert(log.contains("upstream entry 'after_broken' failed — dependent entry after_after skipped"), log)
   }
 
+  test("walker: the caches a node creates are dropped once it is billed; " +
+    "the artifact it hands on stays") {
+    val spark = graft.streaming.StreamFixture.spark
+    // both nodes cache the same frame, as minhash_lsh_md5 and lsh_eval
+    // both cache their md5 signatures
+    def sigs = spark.range(200).toDF("id").selectExpr("id % 7 AS s")
+    var sigsAtReuse: StorageLevel = null
+    var ownerAtReuse: StorageLevel = null
+    val owner = Node.frame("owner") { _ => sigs.persist().groupBy("s").count() }
+    val reuser = Node.frame("reuser", owner) { in =>
+      sigsAtReuse = sigs.storageLevel
+      ownerAtReuse = in(owner).storageLevel
+      sigs.persist().join(in(owner), "s")
+    }
+    val out = Bench.runPass(spark, Seq(owner, reuser), fixture)
+    assert(out.forall(_._2 >= 0), s"$out")
+    assert(sigsAtReuse == StorageLevel.NONE, "owner's own cache must be dropped once owner is billed")
+    assert(ownerAtReuse != StorageLevel.NONE, "owner's artifact must stay kept for its consumer")
+    assert(sigs.storageLevel == StorageLevel.NONE, "reuser's own cache must be dropped too")
+  }
+
   test("end-to-end: a prior claiming tiny values makes the re-probe run " +
     "(reprobed tag) and the sf1 flag probe run (sf1.probes + probe_cal)") {
     val out = java.nio.file.Files.createTempFile("graft-bench-reprobe", ".json")

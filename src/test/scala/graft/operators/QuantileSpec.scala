@@ -28,13 +28,19 @@ class QuantileSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def refined(df: DataFrame, coarse: Int): Map[Any, Seq[Double]] =
     Relational.groupedEquidepthBounds(df, pcts, coarse).collect()
-      .groupBy(_.get(0))
+      // boxed NaN keys are unequal under ==, so they group by their name
+      .groupBy(r => r.get(0) match { case k: java.lang.Double if k.isNaN => "NaN"; case k => k })
       .map { case (g, rs) => g -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
 
+  /** Keys as strings and values as bit patterns, so a NaN key or value
+    * matches NaN and −0.0 does not match 0.0. */
+  private def exact(m: Map[Any, Seq[Double]]): Map[String, Seq[Long]] =
+    m.map { case (g, qs) => String.valueOf(g) -> qs.map(java.lang.Double.doubleToLongBits) }
+
   private def assertMatches(df: DataFrame, what: String): Unit = {
-    val want = direct(df)
+    val want = exact(direct(df))
     Seq(2, 4, 8192).foreach { coarse =>
-      val got = refined(df, coarse)
+      val got = exact(refined(df, coarse))
       assert(got == want, s"$what coarse=$coarse: $got != $want")
     }
   }
@@ -114,5 +120,41 @@ class QuantileSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally spark.listenerManager.unregister(listener)
     assert(actions.get == 3, s"expected 3 round trips, saw ${actions.get}")
     assert(badJoins.get == 0)
+  }
+
+  test("over a materialized input the refinement runs exactly three Spark jobs") {
+    val s = spark; import s.implicits._
+    val df = (1 to 500).map(i => (i % 7, (i * 31 % 101).toDouble)).toDF("grp", "x")
+      .localCheckpoint()
+    assert(graft.SparkJobs.during(spark.sparkContext)(Relational.groupedEquidepthBounds(df, pcts))._1 == 3)
+  }
+
+  test("NaN sorts last, -0.0 keeps its sign, and floating and null keys group as SQL does") {
+    val s = spark; import s.implicits._
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    val rows: Seq[(java.lang.Double, java.lang.Double)] = Seq(
+      // keys -0.0 and 0.0 are one group; its median is -0.0 itself
+      (-0.0, -2.0), (0.0, -0.0), (-0.0, 3.0),
+      // ±∞ sit at the ends of the finite range, NaN after +∞
+      (1.0, 1.0), (1.0, nan), (1.0, 2.0), (1.0, nan), (1.0, inf), (1.0, -inf),
+      // only NaN values; a NaN key; the null key, with a null value skipped
+      (2.0, nan), (2.0, nan), (nan, 5.0), (nan, 4.0),
+      (null, 7.0), (null, null), (null, -1.0))
+    val df = rows.toDF("grp", "x")
+    assertMatches(df, "NaN / -0.0 / null keys")
+    val got = exact(refined(df, 4))
+    assert(got.keySet == Set("0.0", "1.0", "2.0", "NaN", "null"), got.keySet)
+    assert(got("0.0")(2) == java.lang.Double.doubleToLongBits(-0.0), "the median is -0.0")
+    assert(got("2.0").forall(_ == java.lang.Double.doubleToLongBits(nan)))
+  }
+
+  test("a quantile between two equal values is that value, not an interpolation of it") {
+    val s = spark; import s.implicits._
+    // r = 0.3·(n−1) = 0.3: ranks 0 and 1 both hold 0.1, and
+    // 0.7·0.1 + 0.3·0.1 is not 0.1 in double arithmetic
+    val df = Seq(0.1, 0.1, 5.0, 6.0).map(x => (0, x)).toDF("grp", "x")
+    val Array(r) = Relational.groupedEquidepthBounds(df, Seq(1 -> 0.1), coarse = 2).collect()
+    assert(r.getDouble(2) == 0.1)
+    assertMatches(df, "equal neighbours")
   }
 }
